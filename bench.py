@@ -26,6 +26,12 @@ the per-query sample stddev reported alongside — this sandbox bounces
 ±2× run-to-run under load, and a bench that can't show its variance
 can't distinguish a regression from noise (the r1→r2 lesson: every
 shared query read ~1.35× slower purely environmentally).
+
+Every timed run executes in its own job group (``bench:<query>#<run>``),
+and the last run's Spark jobs are read from the status store right
+after the query (:func:`query_jobs`) into the detail's ``"jobs"`` map —
+a per-round breakdown of each query from its own timed run, with no
+extra runs.
 """
 
 from __future__ import annotations
@@ -36,7 +42,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from ecommerce_lakehouse_platform_spark import registry  # noqa: E402
 from ecommerce_lakehouse_platform_spark.session import get_spark  # noqa: E402
@@ -153,6 +160,73 @@ SINK_QUERIES = {
     "stream_cdf_source",
     "ext_delta_v2_checkpoint",
 }
+
+
+def graft_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` parsed once, so the session, the detail
+    file names and the requeue-prior guard all see one int ("08",
+    " 8" and "8" are the same configuration)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def detail_files(sf: float, cpus: int) -> tuple[str, str | None]:
+    """(primary detail file, per-core copy or None) of a full run.
+
+    Non-default-sf runs write an sf-keyed file: an sf0.01 smoke run
+    used to clobber the sf0.1 prior, and the sf-mismatch guard then
+    silently disabled requeue protection for the next full run.
+    Non-default-CPUS runs (e.g. a scaling re-run at c8) write a
+    cpus-suffixed file and NEVER touch the main detail: in r13 an
+    8-core re-run overwrote BENCH_DETAIL.json and destroyed the
+    32-core per-query evidence (PERF_r13 per_query came up empty). A
+    c32 run also writes the suffixed copy so per-core-count files
+    always exist for scaling comparisons."""
+    full = "BENCH_DETAIL.json" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}.json"
+    suffixed = full.replace(".json", f"_c{cpus}.json")
+    return (full, suffixed) if cpus == 32 else (suffixed, None)
+
+
+def load_prior(path: str, cpus: int) -> dict | None:
+    """The detail snapshot at ``path`` if it was taken at ``cpus``
+    cores. The requeue prior must be a SAME-core-count snapshot: an
+    8-core median is legitimately ~1.5-2x a 32-core one for
+    compute-dense queries, and sentinel normalization cancels box
+    speed, not core count — comparing across counts would spray false
+    flags."""
+    try:
+        with open(path, encoding="utf-8") as fh:
+            prior = json.load(fh)
+    except (OSError, json.JSONDecodeError):
+        return None
+    return prior if int(prior.get("cpus", 32)) == cpus else None
+
+
+def query_jobs(spark, group: str) -> list[dict]:
+    """The jobs of job group ``group`` in submission order, read from
+    Spark's status store (live with ``spark.ui.enabled=false``): id,
+    call-site name, wall seconds, and the stages and tasks that ran
+    (skipped ones excluded). Drains the listener bus first so the
+    group's last job is recorded before it is read. The store keeps
+    only ``spark.ui.retainedJobs`` (1000) jobs, so read a group soon
+    after it runs."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = []
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        d = store.job(jid)
+        start, end = d.submissionTime().get(), d.completionTime().get()
+        jobs.append(
+            {
+                "id": jid,
+                "name": d.name().replace(_HERE + os.sep, ""),
+                "sec": (end.getTime() - start.getTime()) / 1000,
+                "stages": d.stageIds().size() - d.numSkippedStages(),
+                "tasks": d.numTasks() - d.numSkippedTasks(),
+            }
+        )
+    return jobs
 
 
 def _sentinel_once(spark, sf_dir: str) -> float:
@@ -330,10 +404,11 @@ def requeue_outliers(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = graft_cpus()
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    spark = get_spark(app_name="bench", cpus=cpus, shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="bench", cpus=cpus, shuffle_partitions=cpus)
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
 
     names = [n for n in HEADLINE if n in registry.QUERIES]
     # optional subset (comma-separated) for targeted runs, e.g. the
@@ -364,8 +439,38 @@ def main() -> None:
     # cross-round division still cancels box speed.
     _sentinel_seconds(spark, sf_dir)
 
+    def timed_runs(name: str, label: str) -> list[float]:
+        """Three timed runs of ``name``, run N in job group
+        ``bench:<label>#N``."""
+        runs: list[float] = []
+        for run in range(1, 4):
+            # cold per run: some operators cache() shared subplans
+            # (shingle tables); clearing between runs keeps every
+            # timed invocation self-contained, bounds CacheManager
+            # growth across the loop, and stops run N's cache from
+            # flattering run N+1
+            spark.catalog.clearCache()
+            sc.setJobGroup(f"bench:{label}#{run}", label)
+            start = time.perf_counter()
+            registry.QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
+                "noop"
+            ).save()
+            runs.append(time.perf_counter() - start)
+            sc._jsc.clearJobGroup()
+            # stderr progress so an aborted run (OOM, timeout) still
+            # attributes the failure to the query that was executing
+            print(f"[bench] {label} run={run} {runs[-1]:.3f}s", file=sys.stderr)
+            if name in SINK_QUERIES:
+                # settle barrier OUTSIDE the timer: flush this run's
+                # writeback before anything else is measured, so sink
+                # cost can neither bleed into the next query/sentinel
+                # sample nor accumulate across a sink's own runs
+                os.sync()
+        return runs
+
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    jobs: dict[str, list[dict]] = {}
     # intra-run ambient series: one sentinel sample before query 0,
     # after every 4th query, and after the last — `pos` indexes into
     # the queries map's key order (run order). Every-8 left gaps an
@@ -386,69 +491,16 @@ def main() -> None:
             # the extra boundary sample timestamps the ambient level
             # right before the sink group starts writing
             _sample_sentinel(qi)
-        runs: list[float] = []
-        for _ in range(3):
-            # cold per run: some operators cache() shared subplans
-            # (shingle tables); clearing between runs keeps every
-            # timed invocation self-contained, bounds CacheManager
-            # growth across the loop, and stops run N's cache from
-            # flattering run N+1
-            spark.catalog.clearCache()
-            start = time.perf_counter()
-            registry.QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(time.perf_counter() - start)
-            # stderr progress so an aborted run (OOM, timeout) still
-            # attributes the failure to the query that was executing
-            print(f"[bench] {name} run={len(runs)} {runs[-1]:.3f}s", file=sys.stderr)
-            if name in SINK_QUERIES:
-                # settle barrier OUTSIDE the timer: flush this run's
-                # writeback before anything else is measured, so sink
-                # cost can neither bleed into the next query/sentinel
-                # sample nor accumulate across a sink's own runs
-                os.sync()
+        runs = timed_runs(name, name)
         timings[name] = round(statistics.median(runs), 3)
         spreads[name] = round(statistics.stdev(runs), 3)
+        # read per query, not at the end: the store retains fewer jobs
+        # than one full pass issues
+        jobs[name] = query_jobs(spark, f"bench:{name}#3")
     _sample_sentinel(len(names))
     sentinel_vals = [s["sec"] for s in sentinel_series]
     sentinel_med = round(statistics.median(sentinel_vals), 4)
     sentinel_sd = round(statistics.stdev(sentinel_vals), 4)
-
-    # per-iteration attribution for the iterative-graph queries: a
-    # slow aggregate time should name WHICH iteration absorbed the
-    # GC / cache churn, otherwise variance is uninterpretable
-    iters: dict[str, list[float]] = {}
-    if "ext_pagerank_copurchase" in names:
-        from ecommerce_lakehouse_platform_spark import registry_scale
-
-        spark.catalog.clearCache()
-        iters["ext_pagerank_copurchase"] = [
-            round(t, 3)
-            for t in registry_scale.pagerank_iter_profile(spark, sf_dir)
-        ]
-    if "ext_dedup_clusters" in names:
-        from ecommerce_lakehouse_platform_spark.operators import cluster
-
-        spark.catalog.clearCache()
-        registry.QUERIES["ext_dedup_clusters"](spark, sf_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        iters["ext_dedup_clusters"] = [
-            round(t, 3) for t in cluster.LAST_ITER_TIMES
-        ]
-    if "ext_kmeans_embedding" in names:
-        from ecommerce_lakehouse_platform_spark.operators import kmeans as _km
-
-        spark.catalog.clearCache()
-        registry.QUERIES["ext_kmeans_embedding"](spark, sf_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        # [seed pick, Lloyd iteration 1, ...] — fit phases; the final
-        # assignment rides in the timed headline runs above
-        iters["ext_kmeans_embedding"] = [
-            round(t, 3) for t in _km.LAST_ITER_TIMES
-        ]
 
     # auto-requeue ambient-contamination suspects: any query whose
     # sentinel-normalized median exceeds 1.5x the PRIOR detail
@@ -460,58 +512,16 @@ def main() -> None:
     # file: clobbering BENCH_DETAIL.json with a 3-query probe would
     # silently disable the requeue comparison for every other query
     # on the next full run (the prior would simply lack their keys)
-    # non-default-sf full runs write an sf-keyed side file for the
-    # same reason: a /verify smoke at sf0.01 used to clobber the
-    # sf0.1 prior, and the sf-mismatch guard then silently disabled
-    # requeue protection for the next driver run.
-    # non-default-CPUS runs (the driver's scaling re-run at c8) write
-    # a cpus-suffixed file and NEVER touch the main detail: in r13 the
-    # 8-core re-run overwrote BENCH_DETAIL.json and destroyed the
-    # 32-core per-query evidence (PERF_r13 per_query came up empty).
-    # A c32 run also writes the suffixed copy so per-core-count files
-    # always exist for scaling comparisons.
-    full_detail = (
-        "BENCH_DETAIL.json" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}.json"
-    )
-    cpus_detail = full_detail.replace(".json", f"_c{cpus}.json")
-    if cpus != "32":
-        full_detail = cpus_detail
-        cpus_detail = None  # primary already carries the suffix
+    full_detail, cpus_detail = detail_files(sf, cpus)
     detail_name = "BENCH_DETAIL_SUBSET.json" if subset else full_detail
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), detail_name
-    )
-    # requeue prior must be a SAME-core-count snapshot: an 8-core
-    # median is legitimately ~1.5-2x a 32-core one for compute-dense
-    # queries, and sentinel normalization cancels box speed, not core
-    # count — comparing across counts would spray false flags
-    prior_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), full_detail
-    )
-    prior = None
-    try:
-        with open(prior_path, encoding="utf-8") as fh:
-            prior = json.load(fh)
-    except (OSError, json.JSONDecodeError):
-        pass
-    if prior is not None and str(prior.get("cpus", "32")) != cpus:
-        prior = None
+    prior = load_prior(os.path.join(_HERE, full_detail), cpus)
+
     def _settle() -> None:
         os.sync()
         time.sleep(5)  # let writeback drain OUTSIDE any timer
 
     def _run_isolated(name: str) -> float:
-        runs = []
-        for _ in range(3):
-            spark.catalog.clearCache()
-            start = time.perf_counter()
-            registry.QUERIES[name](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            runs.append(time.perf_counter() - start)
-            if name in SINK_QUERIES:
-                os.sync()
-        return round(statistics.median(runs), 3)
+        return round(statistics.median(timed_runs(name, f"requeue:{name}")), 3)
 
     # cap the retries: a fully-contaminated run should not double its
     # own wall time chasing every query. Each retry is noise-gated by
@@ -534,7 +544,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "stddev": spreads,
-        "iters": iters,
+        # each query's last timed run, job by job (see query_jobs)
+        "jobs": jobs,
         # isolated re-runs of normalized-ratio outliers vs the prior
         # snapshot (see flag_for_requeue); both readings kept
         "requeued": requeued,
@@ -551,16 +562,13 @@ def main() -> None:
         "sf": sf,
         # core count stamps the snapshot so cross-count comparisons
         # (and the requeue-prior guard above) are explicit
-        "cpus": int(cpus),
+        "cpus": cpus,
     }
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1)
-        fh.write("\n")
+    out_names = [detail_name]
     if cpus_detail and not subset:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), cpus_detail),
-            "w",
-        ) as fh:
+        out_names.append(cpus_detail)
+    for out in out_names:
+        with open(os.path.join(_HERE, out), "w") as fh:
             json.dump(detail, fh, indent=1)
             fh.write("\n")
     print(json.dumps(detail))

@@ -45,11 +45,10 @@ Distributed shape (the 100 TB contract):
 * scoring/filtering with the trained model is a pure projection —
   zero shuffles, usable as a map-side corpus filter at any scale.
 
-The fit pins the (y, x) feature projection for its own lifetime
-(``perceptron_fit(cache=True)``, released before returning): every
-epoch iterates on the SAME integer features, and re-deriving them
-means one full tokenize pass per epoch — identical reasoning to
-kmeans' cache-the-training-set note.
+The fit caches the (y, x) feature projection for its own lifetime
+(released before returning): every epoch iterates on the SAME integer
+features, and re-deriving them means one full tokenize pass per epoch
+— identical reasoning to kmeans' cache-the-training-set note.
 
 Magnitude bounds (BIGINT safety): after T epochs ‖w‖∞ ≤ T·n·max|x|
 (every row misclassified every epoch is the worst case), so per-row
@@ -92,7 +91,7 @@ CENTER_THE = 2
 
 # per-epoch training-error counts of the last perceptron_fit
 # ([errors(w_0), ..., errors(w_T)]) — telemetry for tests/bench, never
-# part of any result (same contract as kmeans.LAST_ITER_TIMES)
+# part of any result
 LAST_EPOCH_ERRORS: list[int] = []
 
 
@@ -143,9 +142,7 @@ def _dot_w(x: Column, w: list[int]) -> Column:
     )
 
 
-def perceptron_fit(
-    feats: DataFrame, dim: int, n_iters: int = 6, cache: bool = True
-) -> list[int]:
+def perceptron_fit(feats: DataFrame, dim: int, n_iters: int = 6) -> list[int]:
     """Pocket-perceptron weights: run ``n_iters`` batch epochs from
     w₀ = 0, return the epoch vector with the FEWEST training errors
     (ties → earliest epoch — w₀'s errors are measured too, so a
@@ -164,22 +161,18 @@ def perceptron_fit(
     order-independent.
     """
     LAST_EPOCH_ERRORS.clear()
-    # ``cache`` (r14): every epoch re-derived the features from raw
-    # text — n_iters+1 full tokenize passes over the corpus for a
-    # feature relation of dim+1 small integers per row. Pinning the
-    # (y, x) projection for the fit's lifetime makes epoch 1 the only
-    # tokenize pass; epochs 2..n aggregate the cached integers (the
+    # cached for the fit's lifetime (r14): uncached, every epoch
+    # re-derived the features from raw text — n_iters+1 full tokenize
+    # passes over the corpus for a feature relation of dim+1 small
+    # integers per row. Caching the (y, x) projection makes epoch 1
+    # the only tokenize pass; epochs 2..n aggregate the cached integers (the
     # classic cache-the-training-set move of every iterative fitter —
     # MLlib does the same; MEMORY_AND_DISK semantics spill gracefully
     # at any scale, and the entry is released before returning, so no
     # CacheManager pin survives the call). Measured at sf0.1:
     # ext_quality_perceptron's per-epoch job drops from ~250ms of
     # single-task re-tokenization to reading ~5k cached rows.
-    src = feats.select("y", "x")
-    pinned = None
-    if cache:
-        src = src.cache()
-        pinned = src
+    src = feats.select("y", "x").cache()
     try:
         w = [0] * dim
         best_err: int | None = None
@@ -204,8 +197,7 @@ def perceptron_fit(
             best_err, best_w = errors, list(w)
         return best_w
     finally:
-        if pinned is not None:
-            pinned.unpersist()
+        src.unpersist()
 
 
 def _epoch_gradient(

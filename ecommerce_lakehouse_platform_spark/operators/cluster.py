@@ -43,25 +43,11 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = ["connected_components", "dedup_clusters"]
-
-# Per-round wall times of the most recent connected_components run
-# (seconds; one entry per propagate+jump+probe round). The loop is
-# already eager (each round localCheckpoints and runs a convergence
-# probe), so recording costs nothing extra; benchmarks read this to
-# attribute iterative-query variance to a specific round.
-# CAVEAT: module-global, single-caller telemetry only — two
-# connected_components calls running concurrently in one process
-# interleave their entries (bench and the registry run queries
-# serially, so this never bites there; do not build product logic on
-# it).
-LAST_ITER_TIMES: list[float] = []
 
 
 def connected_components(
@@ -117,7 +103,6 @@ def connected_components(
         # pure scheduling overhead on every CC-backed dedup query.
         rows = und.limit(small_graph_limit + 1).collect()
         if len(rows) <= small_graph_limit:
-            LAST_ITER_TIMES.clear()
             return _driver_union_find_rows(
                 rows, und.schema["a"].dataType, und.sparkSession,
                 node_col, comp_col,
@@ -132,9 +117,7 @@ def connected_components(
     )
 
     prev_sum = None
-    LAST_ITER_TIMES.clear()
-    for it in range(max_iter):
-        iter_start = time.perf_counter()
+    for _ in range(max_iter):
         # 1-hop: every node offers its label to each neighbor
         msgs = und.join(labels, und["a"] == labels["node"]).select(
             F.col("b").alias("node"), "label"
@@ -165,7 +148,6 @@ def connected_components(
         cur_sum = new.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
-        LAST_ITER_TIMES.append(time.perf_counter() - iter_start)
         if prev_sum is not None and cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -175,29 +157,15 @@ def connected_components(
     )
 
 
-def _driver_union_find(
-    und: DataFrame, node_col: str, comp_col: str
-) -> DataFrame:
-    """Exact min-id components of a BOUNDED edge list via classic
-    union-find with path compression (the textbook algorithm; the
-    caller enforces the size gate). Returns the same (node,
-    component) relation as the distributed loop, with the node's
-    original Spark type preserved."""
-    return _driver_union_find_rows(
-        und.collect(),
-        und.schema["a"].dataType,
-        und.sparkSession,
-        node_col,
-        comp_col,
-    )
-
-
 def _driver_union_find_rows(
     edge_rows, node_type, spark, node_col: str, comp_col: str
 ) -> DataFrame:
-    """Union-find over an already-collected edge list (see
-    :func:`_driver_union_find`; split out so the small-graph path can
-    reuse the rows its single CollectLimit probe already fetched)."""
+    """Exact min-id components of a BOUNDED, already-collected edge
+    list (the rows the small-graph path's single CollectLimit probe
+    fetched; the caller enforces the size gate) via classic
+    union-find with path compression. Returns the same (node,
+    component) relation as the distributed loop, typed ``node_type``
+    (the node column's original Spark type)."""
     parent: dict = {}
 
     def find(x):

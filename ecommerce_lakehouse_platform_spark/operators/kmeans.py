@@ -24,13 +24,13 @@ Lloyd's algorithm (the same distributed shape as Spark MLlib KMeans):
   pagerank's convergence probe, and exactly what "broadcast the new
   centroids" means on a real cluster.
 
-The fit pins the quantized training relation for its own lifetime
-(``kmeans_fit(cache=True)``, released before returning): the seed pick
-plus every Lloyd pass iterate on the SAME points, and caching the
-training set is the standard iterative-fitter shape (Spark MLlib's
-KMeans does exactly this); MEMORY_AND_DISK spills gracefully when the
-corpus outgrows memory. One-pass consumers (the final assignment)
-still stream from the pruned columnar source.
+The fit caches the quantized training relation for its own lifetime
+(released before returning): the seed pick plus every Lloyd pass
+iterate on the SAME points, and caching the training set is the
+standard iterative-fitter shape (Spark MLlib's KMeans does exactly
+this); MEMORY_AND_DISK spills gracefully when the corpus outgrows
+memory. One-pass consumers (the final assignment) still stream from
+the pruned columnar source.
 
 Cross-engine exactness (the registry's DuckDB differential): vector
 components are quantized to the 2^-20 grid (float→double exact, ×2^20
@@ -49,19 +49,11 @@ update CTE.
 
 from __future__ import annotations
 
-import time
-
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1 << 20  # 2^-20 quantization grid, shared with the registry oracles
-
-# wall time of the last kmeans_fit's driver-synchronized phases
-# ([seed pick, iteration 1, ..., iteration n]) — bench telemetry only,
-# never part of any result (same contract as pagerank.LAST_ITER_TIMES).
-# Fits swap their list in whole at the end, so under concurrent fits
-# (pq_fit_blocks) the slot holds the LAST FINISHER's coherent phases.
-LAST_ITER_TIMES: list[float] = []
 
 
 def _tdiv(s: int, n: int) -> int:
@@ -138,7 +130,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     salt: str = "kmeans:",
-    cache: bool = True,
 ) -> list[tuple[int, list[int]]]:
     """Run the Lloyd iterations and return the final quantized
     centroids as ``[(cluster_id, components)]`` — the "model" half.
@@ -148,37 +139,26 @@ def kmeans_fit(
     ``assign_ivf_buckets``, executed as TakeOrdered — no global sort);
     seed rank order is the cluster id.
 
-    ``cache`` (r14) pins the quantized point relation for the fit's
-    lifetime: the seed pick plus every Lloyd iteration re-scanned and
+    The quantized point relation is cached for the fit's lifetime:
+    uncached, the seed pick plus every Lloyd iteration re-scanned and
     re-quantized the source — n_iters+1 passes for a fit whose whole
     point is iterating on the SAME points. Caching the training set is
     the standard iterative-fitter move (Spark MLlib's KMeans requires
     it); MEMORY_AND_DISK spills gracefully at any scale, and the entry
     is released before returning, so no CacheManager pin survives the
     call."""
-    pts = quantize_vectors(df, id_col, vec_col)
-    pinned = None
-    if cache:
-        pts = pts.cache()
-        pinned = pts
+    pts = quantize_vectors(df, id_col, vec_col).cache()
     try:
         return _kmeans_fit_loop(pts, k, n_iters, id_col, salt)
     finally:
-        if pinned is not None:
-            pinned.unpersist()
+        pts.unpersist()
 
 
 def _kmeans_fit_loop(
     pts: DataFrame, k: int, n_iters: int, id_col: str, salt: str
 ) -> list[tuple[int, list[int]]]:
-    """The driver loop of :func:`kmeans_fit` over an already-quantized
-    (and possibly cached) point relation."""
-    # phase times build locally and swap into LAST_ITER_TIMES whole at
-    # the end: concurrent fits (pq_fit_blocks threads the independent
-    # block fits) must not interleave their telemetry — the last
-    # finisher wins a coherent list instead of a garbled merge
-    phase_times: list[float] = []
-    t0 = time.monotonic()
+    """The driver loop of :func:`kmeans_fit` over an already-quantized,
+    cached point relation."""
     seed_rows = (
         pts.select(
             id_col,
@@ -191,13 +171,11 @@ def _kmeans_fit_loop(
         .limit(k)
         .collect()
     )
-    phase_times.append(time.monotonic() - t0)
     seed_rows.sort(key=lambda r: (r["_h"], r[id_col]))
     centroids = [(cid, list(r["q"])) for cid, r in enumerate(seed_rows)]
 
     seed_ids = [cid for cid, _ in centroids]
     for _ in range(n_iters):
-        t0 = time.monotonic()
         assigned = _assign(pts, centroids)
         comp = assigned.select(
             "cluster", F.posexplode("q").alias("pos", "qv")
@@ -234,12 +212,10 @@ def _kmeans_fit_loop(
             )
             for slot, row in zip(missing, far):
                 by_cluster[slot] = dict(enumerate(row["q"]))
-        phase_times.append(time.monotonic() - t0)
         centroids = [
             (cid, [d[p] for p in sorted(d)])
             for cid, d in sorted(by_cluster.items())
         ]
-    LAST_ITER_TIMES[:] = phase_times
     return centroids
 
 
@@ -294,7 +270,10 @@ def pq_fit_blocks(
     scheduling gaps (Spark sessions are thread-safe for job
     submission, and the fits share no state — results are
     bit-identical to the sequential order, and ``ex.map`` preserves
-    block order)."""
+    block order). The fits are wrapped in ``inheritable_thread_target``
+    at call time, so their jobs carry the caller's job group,
+    description and tags (plain pool threads would submit them under
+    no group at all)."""
     if dim % n_blocks:
         raise ValueError(
             f"dim {dim} not divisible by n_blocks {n_blocks}: trailing "
@@ -315,7 +294,8 @@ def pq_fit_blocks(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=n_blocks) as ex:
-        return list(ex.map(fit_block, range(n_blocks)))
+        inherit = inheritable_thread_target(df.sparkSession)
+        return list(ex.map(inherit(fit_block), range(n_blocks)))
 
 
 def pq_encode(

@@ -27,15 +27,8 @@ contract.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Per-iteration wall times of the last eager_iter=True run (seconds).
-# Benchmarks read this to attribute iterative-query variance to a
-# specific iteration (vs GC / sandbox noise between iterations).
-LAST_ITER_TIMES: list[float] = []
 
 
 def pagerank_int(
@@ -48,7 +41,6 @@ def pagerank_int(
     src_col: str = "src",
     dst_col: str = "dst",
     broadcast_ranks: bool = False,
-    eager_iter: bool = False,
 ) -> DataFrame:
     """PageRank in integer micro-units. Returns (node, rank_micros).
 
@@ -64,12 +56,9 @@ def pagerank_int(
     set is dimension-bounded (products, hosts); at web scale the rank
     table is the big side and must stay a shuffle join.
 
-    ``eager_iter=True`` materializes each iteration with an eager
-    ``localCheckpoint`` (timing it into ``LAST_ITER_TIMES``) and
-    unpersists the cached edge/vertex relations before returning — the
-    instrumented mode benchmarks use to attribute per-iteration cost.
-    The default lazy mode returns the full declarative plan (cached
-    relations still pinned; loopy callers clearCache between runs).
+    The result is the full declarative plan over the cached edge and
+    vertex relations, which stay pinned (loopy callers clearCache
+    between runs).
     """
     base = (100 - damping_pct) * scale // 100
     outdeg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("_deg"))
@@ -92,8 +81,6 @@ def pagerank_int(
     ranks = nd.select(
         "node", F.lit(scale).cast("long").alias("rank_micros")
     )
-    if eager_iter:
-        LAST_ITER_TIMES.clear()
     for _ in range(iterations):
         rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
         contrib = (
@@ -117,11 +104,4 @@ def pagerank_int(
                 ).alias("rank_micros"),
             )
         )
-        if eager_iter:
-            start = time.perf_counter()
-            ranks = ranks.localCheckpoint(eager=True)
-            LAST_ITER_TIMES.append(time.perf_counter() - start)
-    if eager_iter:
-        ed.unpersist()
-        nd.unpersist()
     return ranks

@@ -136,14 +136,27 @@ def _reap_memo_at_exit() -> None:
 atexit.register(_reap_memo_at_exit)
 
 
+def _has_table_files(path: str) -> bool:
+    """True when ``path`` holds a ``_delta_log`` and at least one data
+    file outside it (partition directories included)."""
+    if not os.path.isdir(os.path.join(path, "_delta_log")):
+        return False
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "_delta_log"]
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
 def _memo_fixture(tag: str, sf_dir: str, build) -> str:
     """Table path for ``(tag, sf_dir)``, built with ``build(path)`` on
-    first use in this process. A vanished dir (external cleanup)
-    rebuilds rather than failing the read."""
+    first use in this process. A vanished or partly cleaned dir
+    (external cleanup removed the log or the data files) rebuilds
+    rather than failing the read."""
     global _ORPHANS_REAPED
     key = (tag, sf_dir)
     path = _FIXTURE_MEMO.get(key)
-    if path is not None and os.path.isdir(os.path.join(path, "_delta_log")):
+    if path is not None and _has_table_files(path):
         return path
     if not _ORPHANS_REAPED:
         _ORPHANS_REAPED = True

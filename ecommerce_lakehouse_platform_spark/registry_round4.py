@@ -319,6 +319,11 @@ def ext_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same basket aggregate, so its exchange is planned once and
     # reused. A/B at sf0.1: 2.26s → 1.43s median (identical output,
     # 3,573 rows).
+    # ASSUMES l_partkey is never NULL (pinned by
+    # tests/test_registry_oracle.py::test_lineitem_partkey_non_null):
+    # collect_set drops NULLs, while the oracle's DISTINCT (ok, pk)
+    # relation keeps (ok, NULL) rows, so an order whose part keys were
+    # all NULL would count toward the oracle's `total` (lift) only.
     raw = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     )

@@ -187,24 +187,6 @@ def ext_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select(F.col("node").alias("part_key"), "rank_micros")
 
 
-def pagerank_iter_profile(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Run ext_pagerank_copurchase's exact graph through the
-    instrumented eager path and return per-iteration wall times.
-    bench.py reports these so iterative-query variance is attributable
-    (a slow run shows WHICH iteration absorbed the GC/cache churn).
-    Same result, same per-iteration plan; each iteration is forced by
-    an eager localCheckpoint and the cached relations are unpersisted
-    before returning."""
-    from .operators import pagerank as _pr
-
-    nodes, edges = _copurchase_graph(spark, sf_dir)
-    ranks = pagerank_int(
-        nodes, edges, iterations=3, broadcast_ranks=True, eager_iter=True
-    )
-    ranks.write.mode("overwrite").format("noop").save()
-    return list(_pr.LAST_ITER_TIMES)
-
-
 @query(
     "ext_dedup_incremental",
     # Exact-Jaccard oracle restricted to pairs touching the "new

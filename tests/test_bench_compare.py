@@ -219,3 +219,21 @@ def test_requeue_outliers_noise_gated():
     e = requeued["q"]
     assert e["sentinel_ok"] is True and e["attempts"] == 2
     assert e["retry"] == 2.0 and timings["q"] == 2.0
+
+
+def test_cpus_spellings_select_the_same_prior(tmp_path, monkeypatch):
+    """SPARK_GRAFT_CPUS is parsed once as an int: "08", " 8" and "8"
+    name the same detail file and all accept a prior stamped cpus=8
+    (comparing the raw string against the stamped int used to reject
+    it, silently disabling requeue)."""
+    bench = _load_bench()
+    prior = {"cpus": 8, "sf": 0.1, "queries": {"q": 1.0}}
+    (tmp_path / "BENCH_DETAIL_c8.json").write_text(json.dumps(prior))
+    for raw in ("08", "8", " 8"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+        cpus = bench.graft_cpus()
+        full, extra_copy = bench.detail_files(0.1, cpus)
+        assert (full, extra_copy) == ("BENCH_DETAIL_c8.json", None)
+        assert bench.load_prior(str(tmp_path / full), cpus) == prior
+    # a different core count never serves as the prior
+    assert bench.load_prior(str(tmp_path / "BENCH_DETAIL_c8.json"), 32) is None

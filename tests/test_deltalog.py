@@ -3444,3 +3444,28 @@ def test_registry_fixture_memo_reuses_build_and_result_is_stable(spark):
     )
     assert mtimes2 == mtimes1  # the log was not rewritten
     assert rows1 == rows2
+
+
+def test_registry_fixture_memo_rebuilds_without_data_files(spark):
+    """A memoized fixture whose data files were cleaned away while its
+    _delta_log survived must be rebuilt, not served to a read that
+    would fail on the missing parquet."""
+    from ecommerce_lakehouse_platform_spark import registry_delta as rd
+    from ecommerce_lakehouse_platform_spark.registry import QUERIES
+
+    key = ("tt", SF_SMOKE)
+    query = QUERIES["ext_delta_time_travel"]
+    rd._FIXTURE_MEMO.pop(key, None)
+    rows1 = sorted(map(tuple, query(spark, SF_SMOKE).collect()))
+    path1 = rd._FIXTURE_MEMO[key]
+    removed = 0
+    for root, dirs, files in os.walk(path1):
+        dirs[:] = [d for d in dirs if d != "_delta_log"]
+        for f in files:
+            if f.endswith(".parquet"):
+                os.remove(os.path.join(root, f))
+                removed += 1
+    assert removed and os.path.isdir(os.path.join(path1, "_delta_log"))
+    rows2 = sorted(map(tuple, query(spark, SF_SMOKE).collect()))
+    assert rd._FIXTURE_MEMO[key] != path1  # rebuilt at a fresh path
+    assert rows2 == rows1

@@ -318,3 +318,23 @@ def test_pq_adc_topk_ivf_composition(spark):
     assert all(
         full_d.get((q, n), d) == d for q, n, d in narrow
     ), "IVF must restrict candidates, never change ADC distances"
+
+
+def test_pq_fit_blocks_jobs_keep_caller_job_group(spark):
+    """The block fits run on pool threads; their jobs must land in the
+    caller's job group, or a per-group profile (bench.query_jobs)
+    cannot see the fit — plain pool threads submit under no group."""
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in vec]) for i, vec in _vectors(12, dim=4)],
+        _SCHEMA,
+    )
+    sc = spark.sparkContext
+    group = "test:pq_fit_blocks"
+    sc.setJobGroup(group, "pq fit")
+    try:
+        kmeans.pq_fit_blocks(df, dim=4, n_blocks=2, k=2, n_iters=1)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # per block: at least the seed pick and one Lloyd update
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4

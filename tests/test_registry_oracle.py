@@ -30,6 +30,18 @@ def test_no_unresolved_deferred_tokens():
     assert not unresolved, sorted(unresolved)
 
 
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECTNESS])
+def test_lineitem_partkey_non_null(sf_dir):
+    """ext_market_basket builds baskets with collect_set, which drops
+    NULL part keys that its oracle's DISTINCT (ok, pk) relation keeps;
+    the two agree only while the differential's fixtures have no NULL
+    ``l_partkey`` (see the note at the query's call site)."""
+    import pyarrow.parquet as pq
+
+    col = pq.read_table(f"{sf_dir}/lineitem.parquet", columns=["l_partkey"])
+    assert col.column(0).null_count == 0
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity_smoke(spark, name):
     sdf = registry.QUERIES[name](spark, SF_SMOKE)

@@ -1,35 +1,44 @@
-"""Per-query job/stage/shuffle profile via the Spark event log.
+"""Per-query job and stage profile from Spark's status store.
 
-Runs each named registry query to the noop sink inside its own job
-group (description = query name), with ``spark.eventLog.enabled`` on,
-then parses the event log and prints, per query:
-
-    wall seconds, #jobs, #stages, #tasks, executor-run ms,
-    shuffle write bytes, shuffle read bytes, input bytes,
-    and the top-5 stages by executor-run time with their names.
-
-This is the "where does the time actually go" measurement the
-optimization guide (§1) demands before touching a plan — the sandbox
-has no Spark UI, so the event log is the ground truth.
+Runs each named registry query to the noop sink on the bench session
+(``get_spark``), each repetition in its own job group
+(``profile:<query>#<rep>``), and prints per repetition: wall seconds,
+the run's jobs in submission order (``bench.query_jobs``: id, seconds,
+stages, tasks, call site), and the top-5 stages by executor run time.
+The status store is live with ``spark.ui.enabled=false``, so no event
+log is written or parsed.
 
 Usage:
-    python tools/profile_queries.py [--sf-dir DIR] [--reps 1] q1 q2 ...
+    python tools/profile_queries.py [--sf-dir DIR] [--reps 1] [--cpus N] q1 q2 ...
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
-import shutil
 import sys
-import tempfile
 import time
-from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from ecommerce_lakehouse_platform_spark import registry  # noqa: E402
+from ecommerce_lakehouse_platform_spark.session import get_spark  # noqa: E402
+
+
+def top_stages(spark, job_ids: list[int], n: int = 5) -> list[tuple]:
+    """(executor run ms, stage id, tasks, name) of the ``n`` stages
+    with the most executor run time among those ``job_ids`` ran."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stage_ids = {sid for j in job_ids for sid in tracker.getJobInfo(j).stageIds}
+    ran = []
+    for sid in stage_ids:
+        d = store.lastStageAttempt(sid)
+        if d.status().toString() != "SKIPPED":
+            ran.append((d.executorRunTime(), sid, d.numTasks(), d.name()))
+    return sorted(ran, reverse=True)[:n]
 
 
 def main() -> None:
@@ -37,152 +46,46 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=1)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", type=int, default=bench.graft_cpus())
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    log_dir = tempfile.mkdtemp(prefix="spark-events-")
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(int(args.cpus)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="profile", cpus=args.cpus, shuffle_partitions=args.cpus
     )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    walls: dict[str, list[float]] = defaultdict(list)
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     for name in args.queries:
         if name not in registry.QUERIES:
             print(f"[profile] unknown query {name}", file=sys.stderr)
             continue
         for rep in range(args.reps):
+            group = f"profile:{name}#{rep}"
             spark.catalog.clearCache()
-            spark.sparkContext.setJobGroup(f"{name}#{rep}", name)
+            sc.setJobGroup(group, name)
             t0 = time.perf_counter()
             registry.QUERIES[name](spark, args.sf_dir).write.mode(
                 "overwrite"
             ).format("noop").save()
-            walls[name].append(time.perf_counter() - t0)
-            spark.sparkContext.setJobGroup("", "")
+            wall = time.perf_counter() - t0
+            sc._jsc.clearJobGroup()
+            jobs = bench.query_jobs(spark, group)
             print(
-                f"[profile] {name} rep={rep} {walls[name][-1]:.3f}s",
-                file=sys.stderr,
+                f"\n=== {name} rep={rep} wall={wall:.3f}s jobs={len(jobs)} "
+                f"stages={sum(j['stages'] for j in jobs)} "
+                f"tasks={sum(j['tasks'] for j in jobs)} ==="
             )
+            for j in jobs:
+                print(
+                    f"  job {j['id']}: {j['sec']:.3f}s stages={j['stages']} "
+                    f"tasks={j['tasks']} {j['name']}"
+                )
+            print("  top stages by executor run time:")
+            for run_ms, sid, tasks, sname in top_stages(
+                spark, [j["id"] for j in jobs]
+            ):
+                print(f"  stage {sid}: run={run_ms}ms tasks={tasks} {sname[:100]}")
     spark.stop()
-
-    # parse the event log: attribute stages to job groups
-    files = []
-    for entry in os.listdir(log_dir):
-        p = os.path.join(log_dir, entry)
-        if entry.startswith("."):
-            continue
-        if os.path.isdir(p):  # Spark 4 rolling event-log directory
-            files.extend(
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if f.startswith("events_") or f.startswith("eventLog")
-            )
-        else:
-            files.append(p)
-    per_q: dict[str, dict] = defaultdict(
-        lambda: {
-            "jobs": 0, "stages": 0, "tasks": 0, "run_ms": 0,
-            "cpu_ms": 0, "sh_write": 0, "sh_read": 0, "input": 0,
-            "gc_ms": 0, "fetch_wait_ms": 0, "stage_detail": [],
-        }
-    )
-    stage_group: dict[int, str] = {}
-    stage_name: dict[int, str] = {}
-    stage_agg: dict[int, dict] = defaultdict(
-        lambda: {"tasks": 0, "run_ms": 0, "sh_write": 0, "sh_read": 0,
-                 "input": 0, "gc_ms": 0, "fetch_wait_ms": 0, "cpu_ms": 0}
-    )
-    for path in files:
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                et = ev.get("Event")
-                if et == "SparkListenerJobStart":
-                    props = ev.get("Properties") or {}
-                    group = props.get("spark.jobGroup.id", "")
-                    qname = group.split("#")[0] if "#" in group else group
-                    if not qname:
-                        continue
-                    per_q[qname]["jobs"] += 1
-                    for sid in ev.get("Stage IDs", []):
-                        stage_group[sid] = qname
-                elif et == "SparkListenerStageCompleted":
-                    info = ev["Stage Info"]
-                    sid = info["Stage ID"]
-                    stage_name[sid] = info.get("Stage Name", "?")
-                elif et == "SparkListenerTaskEnd":
-                    sid = ev["Stage ID"]
-                    m = ev.get("Task Metrics") or {}
-                    agg = stage_agg[sid]
-                    agg["tasks"] += 1
-                    agg["run_ms"] += m.get("Executor Run Time", 0)
-                    agg["cpu_ms"] += m.get("Executor CPU Time", 0) // 1_000_000
-                    agg["gc_ms"] += m.get("JVM GC Time", 0)
-                    sw = m.get("Shuffle Write Metrics") or {}
-                    agg["sh_write"] += sw.get("Shuffle Bytes Written", 0)
-                    sr = m.get("Shuffle Read Metrics") or {}
-                    agg["sh_read"] += (
-                        sr.get("Local Bytes Read", 0)
-                        + sr.get("Remote Bytes Read", 0)
-                    )
-                    agg["fetch_wait_ms"] += sr.get("Fetch Wait Time", 0)
-                    im = m.get("Input Metrics") or {}
-                    agg["input"] += im.get("Bytes Read", 0)
-
-    for sid, agg in stage_agg.items():
-        qname = stage_group.get(sid)
-        if not qname:
-            continue
-        d = per_q[qname]
-        d["stages"] += 1
-        for k in ("tasks", "run_ms", "cpu_ms", "sh_write", "sh_read",
-                  "input", "gc_ms", "fetch_wait_ms"):
-            d[k] += agg[k]
-        d["stage_detail"].append(
-            (agg["run_ms"], sid, agg["tasks"], stage_name.get(sid, "?"))
-        )
-
-    for name in args.queries:
-        if name not in per_q:
-            continue
-        d = per_q[name]
-        w = walls.get(name, [])
-        print(f"\n=== {name} ===")
-        print(
-            f"wall={['%.3f' % x for x in w]} jobs={d['jobs']} "
-            f"stages={d['stages']} tasks={d['tasks']}"
-        )
-        print(
-            f"run={d['run_ms']}ms cpu={d['cpu_ms']}ms gc={d['gc_ms']}ms "
-            f"fetch_wait={d['fetch_wait_ms']}ms "
-            f"sh_write={d['sh_write']/1e6:.1f}MB "
-            f"sh_read={d['sh_read']/1e6:.1f}MB input={d['input']/1e6:.1f}MB"
-        )
-        for run_ms, sid, tasks, sname in sorted(d["stage_detail"])[::-1][:5]:
-            print(f"  stage {sid}: run={run_ms}ms tasks={tasks} {sname[:100]}")
-
-    shutil.rmtree(log_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
