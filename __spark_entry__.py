@@ -32,8 +32,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ the
-    north-star extension operators), driver-window keys first."""
-    registry.apply_driver_window(strict=True)
+    north-star extension operators), driver-window keys first (the
+    registry package applies the window once, at import)."""
     return dict(registry.QUERIES)
 
 

@@ -50,7 +50,7 @@ def __getattr__(name: str):
 
         return run_reference_native
     if name in ("queries", "oracles"):
-        from . import registry, registry_ext  # noqa: F401 (ext self-registers)
+        from . import registry
 
         return registry.QUERIES if name == "queries" else registry.ORACLES
     raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

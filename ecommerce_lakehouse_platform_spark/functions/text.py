@@ -139,10 +139,8 @@ def langid(text: Column | str) -> Column:
     return expr
 
 
-# DuckDB oracle twins of the language-ID stopword ratios, kept HERE
-# (dependency-free module) so registry_ext and registry_round4 can
-# both splice them without importing each other — sub-registry import
-# order is not guaranteed (see registry.py's deferred-token note).
+# DuckDB oracle twins of the language-ID stopword ratios, next to the
+# Spark-side stopword lists they mirror.
 LANG_SQL_LISTS = {
     lang: "[" + ",".join(f"'{w}'" for w in words) + "]"
     for lang, words in STOPWORDS.items()

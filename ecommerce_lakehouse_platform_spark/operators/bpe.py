@@ -2,7 +2,7 @@
 
 The registry's externally-gated queries pin the two primitive steps —
 weighted pair counting (`ext_bpe_pair_counts`) and one applied merge
-(`ext_bpe_apply_merge`, registry_round4.py) — and this module iterates
+(`ext_bpe_apply_merge`, registry/text.py) — and this module iterates
 them into a real merge table: the classic BPE training algorithm
 (Sennrich et al., ACL 2016 — public paper; the reference engine has no
 tokenizer training at all, this is part of the LLM-pipeline surface).

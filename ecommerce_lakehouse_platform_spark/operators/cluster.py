@@ -87,7 +87,7 @@ def connected_components(
     # twice — exchange reuse shares the shuffles but not the map-side
     # scoring. One eager checkpoint makes single evaluation a
     # property of the CC kernel instead of a per-caller discipline
-    # (r12; the same fix callers applied ad hoc via materialize=True)
+    # (r12)
     e = e.localCheckpoint(eager=True)
     und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     if small_graph_limit:

@@ -290,13 +290,13 @@ def _capped_shingle_groups(
         # it AGAIN — separate actions, so exchange reuse cannot share
         # them (r13 phase profile: the explode+distinct pass was
         # recomputed 3× per invocation). localCheckpoint, not cache():
-        # the callers' materialize=True self-cleaning contract
-        # guarantees no CacheManager entry survives the call, and a
-        # pinned ds entry here would break it — the checkpoint RDD is
-        # GC-cleaned with the frame instead. Downstream grouping needs
-        # a fresh exchange either way (ds is partitioned on (doc_id,
-        # shingle), the consumers group on shingle), so unlike the
-        # grouped-sets frame nothing is lost to the opaque-scan effect.
+        # the pair generators' self-cleaning contract guarantees no
+        # CacheManager entry survives the call, and a pinned ds entry
+        # here would break it — the checkpoint RDD is GC-cleaned with
+        # the frame instead. Downstream grouping needs a fresh exchange
+        # either way (ds is partitioned on (doc_id, shingle), the
+        # consumers group on shingle), so unlike the grouped-sets frame
+        # nothing is lost to the opaque-scan effect.
         ds = ds.localCheckpoint(eager=True)
         drop = _overcap_shingles(
             ds, max_df, max_df_frac, max_df_floor, max_df_ceil
@@ -345,7 +345,6 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
     max_df_frac: float | None = MAX_DF_FRAC,
     max_df_floor: int = MAX_DF_FLOOR,
-    materialize: bool = False,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard ≥ threshold (doc_a < doc_b).
 
@@ -376,22 +375,15 @@ def ngram_jaccard_pairs(
     DuckDB oracle SQL, so the differential stays exact at any scale.
     Pass ``max_df_frac=None`` for the uncapped all-pairs relation.
 
-    The grouped shingle table is ``cache()``d (it feeds both the size
-    aggregate and the pair explode): an InMemoryRelation keeps the
-    Catalyst plan — partitioning-aware, column-prunable — where
-    ``localCheckpoint`` degrades to an opaque RDD scan and measured
-    ~2-3× slower end-to-end at sf0.1. The entry stays pinned in the
-    CacheManager until unpersisted, so loopy callers (bench,
-    long-lived services) should ``spark.catalog.clearCache()``
-    between invocations; the footprint per call is bounded by the
-    distinct-shingle table (array-packed, smaller than the exploded
-    pair relation).
-
-    ``materialize=True`` is the self-cleaning alternative: the pair
-    list (tiny next to the shingle table) is eagerly materialized via
-    ``localCheckpoint`` and the group cache is unpersisted before
-    returning — no CacheManager entry survives the call, at the cost
-    of running the computation at call time.
+    The grouped shingle table is ``cache()``d while the pairs are
+    computed (it feeds both the size aggregate and the pair explode):
+    an InMemoryRelation keeps the Catalyst plan — partitioning-aware,
+    column-prunable — where ``localCheckpoint`` degrades to an opaque
+    RDD scan and measured ~2-3× slower end-to-end at sf0.1. The pair
+    list (tiny next to the shingle table) is then eagerly materialized
+    via ``localCheckpoint`` and the group cache unpersisted before
+    returning, so no CacheManager entry survives the call; the
+    computation runs at call time.
     """
     g = _capped_shingle_groups(
         docs, id_col, text_col, n, max_df, max_df_frac, max_df_floor
@@ -408,10 +400,10 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    out = jac.select("doc_a", "doc_b", "n_shared", "n_a", "n_b", "jaccard")
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        g.unpersist()
+    out = jac.select(
+        "doc_a", "doc_b", "n_shared", "n_a", "n_b", "jaccard"
+    ).localCheckpoint(eager=True)
+    g.unpersist()
     return out
 
 
@@ -424,7 +416,6 @@ def shingle_containment_pairs(
     max_df: int | None = None,
     max_df_frac: float | None = MAX_DF_FRAC,
     max_df_floor: int = MAX_DF_FLOOR,
-    materialize: bool = False,
 ) -> DataFrame:
     """Asymmetric shingle containment C(A→B) = |A∩B| / |A| for
     sub-document duplicate detection (doc_a < doc_b; kept when either
@@ -442,17 +433,11 @@ def shingle_containment_pairs(
     per-direction ratios are emitted and the filter keeps
     ``greatest`` of the two.
 
-    Cache discipline (same contract as ``ngram_jaccard_pairs``): this
-    pins ONE ``cache()`` entry for the grouped shingle sets per call
-    so the pair explode and the size aggregation share a single scan.
-    Loopy callers (benchmarks, services) must release it after
-    materializing the result — ``spark.catalog.clearCache()`` or hold
-    a reference to the input and ``unpersist()`` — or pinned
-    InMemoryRelations accumulate across calls. ``materialize=True``
-    (what the registry query uses) is the self-cleaning mode: the
-    pair list is eagerly localCheckpointed and the group cache
-    unpersisted before returning, so no CacheManager entry survives
-    the call.
+    Cache discipline (same as ``ngram_jaccard_pairs``): the grouped
+    shingle sets are cached so the pair explode and the size
+    aggregation share a single scan; the pair list is eagerly
+    localCheckpointed and the group cache unpersisted before
+    returning, so no CacheManager entry survives the call.
     """
     g = _capped_shingle_groups(
         docs, id_col, text_col, n, max_df, max_df_frac, max_df_floor
@@ -476,10 +461,9 @@ def shingle_containment_pairs(
             "doc_a", "doc_b", "n_shared", "n_a", "n_b",
             "containment_a", "containment_b",
         )
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        g.unpersist()
+    g.unpersist()
     return out
 
 
@@ -1057,9 +1041,8 @@ def oracle_ivf_adaptive(floor: int = 8) -> str:
     row_number (the same total order as Spark's
     TakeOrderedAndProject pick) and argmax-cosine assignment with
     centroid_id tiebreak. Generated from one place so the C formula
-    and centroid order can never drift between the registries that
-    mirror the bucketing (previously registry_ext and
-    registry_curation each carried a copy)."""
+    and centroid order can never drift between the registry queries
+    that mirror the bucketing."""
     return f"""
     cent AS (
       SELECT centroid_id, cvec FROM (

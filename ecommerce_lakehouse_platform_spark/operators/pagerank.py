@@ -18,7 +18,7 @@ engine — the DuckDB oracle unrolls the same iterations as chained
 CTEs. Float PageRank would make the sum order-dependent and the
 cross-engine comparison approximate; fixed-point makes convergence
 checks and differential tests exact. (Same trick as the bit-exact
-embedding centroids in registry_curation.)
+embedding centroids in registry/vectors.py.)
 
 Dangling nodes (no out-edges) simply contribute nothing; their mass
 is not redistributed — acceptable for ranking use and stated in the

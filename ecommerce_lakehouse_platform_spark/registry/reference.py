@@ -1,82 +1,23 @@
-"""Query registry: named (PySpark plan, DuckDB oracle SQL) pairs.
+"""Reference core: the reference workload's own operators (``op_*``),
+gold models (``gold_*``), dashboards (``dash_*``) and data-quality
+assertions (``dq_*``), each paired with its DuckDB oracle.
 
-This is the driver contract surface (`__spark_entry__.py` re-exports
-it): each key is an operator from SURVEY.md §2 or a north-star
-extension; the Spark callable and the oracle SQL must produce
-identical (row-count, schema, order-insensitive value-hash) results on
-the same parquet fixtures.
-
-Cross-engine determinism rules used throughout (SURVEY.md §5):
-- money/double sums go through DECIMAL(30,6) in BOTH engines
-  (order-independent, exact) and are cast back to double;
-- rounding is explicit floor(x*10^n + 0.5)/10^n in both engines
-  (Spark ROUND is HALF_UP, DuckDB's double ROUND isn't);
-- Spark's double→long cast truncates toward zero → DuckDB oracles use
-  CAST(TRUNC(x) AS BIGINT);
-- epoch seconds = truncated (`ts.cast("long")` ⟺ floor(epoch(ts)));
-- no wall-clock and no raw-timestamp columns in checked outputs;
-- every ORDER BY feeding a LIMIT carries a unique tiebreak key;
-- DuckDB SUM(int)→HUGEINT and conditional sums are cast to BIGINT to
-  match Spark's long.
+Every query re-expresses one step of the reference lakehouse (bronze →
+silver → gold → dashboards and the fail-fast DQ gate) through the same
+library code the pipeline runs (:mod:`..plans.silver`,
+:mod:`..plans.gold`, :mod:`..plans.dashboards`); each docstring cites
+the reference file and lines it mirrors.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.cleaning import clean_id
-from .operators.dedupe import duplicate_groups, keep_latest
-from .plans import dashboards, gold, silver
-from .sources.catalog import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def resolve_deferred_oracles() -> None:
-    """Splice __ORACLE_<NAME>__ tokens with the named oracle's SQL.
-
-    A sub-registry oracle may embed another registered oracle as a CTE
-    (ext_ann_recall nests the exact-top-k and IVF chains), but import
-    order between sub-registries is NOT guaranteed: a test importing
-    registry_ext first leaves registry.py's bottom imports running
-    against a partially-initialized registry_ext, so indexing ORACLES
-    at *their* import time raised KeyError. Instead, dependents spell
-    the nesting as a deferred token, and this idempotent resolver runs
-    at the end of registry.py AND of every sub-registry module — the
-    first-imported module's body is the last to finish, so whichever
-    module the user imported first performs the final, complete
-    resolution. Tokens whose dependency is not yet registered (or is
-    itself unresolved) are left in place for a later call;
-    tests/test_registry_oracle.py asserts none survive a full import.
-    """
-    for name, sql in list(ORACLES.items()):
-        if "__ORACLE_" not in sql:
-            continue
-        for dep, dep_sql in ORACLES.items():
-            token = f"__ORACLE_{dep.upper()}__"
-            if token in sql and "__ORACLE_" not in dep_sql:
-                sql = sql.replace(token, dep_sql)
-        ORACLES[name] = sql
+from ..functions.cleaning import clean_id
+from ..operators.dedupe import duplicate_groups, keep_latest
+from ..plans import dashboards, gold, silver
+from ._core import _t, query
 
 
 # ---------------------------------------------------------------------------
@@ -269,7 +210,7 @@ def op_agg_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sum-by-group money rollup (03_gold_aggregate.py:57-62) with
     order-independent DECIMAL summation."""
     orders = silver.silver_orders(_t(spark, sf_dir, "orders"))
-    from .functions.math import dec_sum
+    from ..functions.math import dec_sum
 
     return orders.groupBy("order_date", "priority").agg(
         dec_sum(F.col("total_usd")).alias("total_revenue"),
@@ -292,7 +233,7 @@ def op_agg_reviews(spark: SparkSession, sf_dir: str) -> DataFrame:
     """avg+count per key (reviews rollup, 03_gold_aggregate.py:70-75),
     exact-sum-based average."""
     li = _t(spark, sf_dir, "lineitem")
-    from .functions.math import round2
+    from ..functions.math import round2
 
     return li.groupBy(clean_id("l_partkey").alias("product_id")).agg(
         round2(
@@ -794,206 +735,41 @@ def dq_bounded_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_date", "view_to_cart_pct", "cart_to_purchase_pct")
 
 
-# Extension operators (dedup / similarity / text / streaming /
-# multimodal) register themselves on import.
-from . import registry_ext  # noqa: E402,F401  (import-for-side-effect)
-from . import registry_relational  # noqa: E402,F401  (import-for-side-effect)
-from . import registry_curation  # noqa: E402,F401  (import-for-side-effect)
-from . import registry_scale  # noqa: E402,F401  (import-for-side-effect)
-from . import registry_round4  # noqa: E402,F401  (import-for-side-effect)
-from . import registry_delta  # noqa: E402,F401  (import-for-side-effect)
-
-
-resolve_deferred_oracles()
-
-
 # ---------------------------------------------------------------------------
-# Driver-window ordering
+# Parameterized SQL (OP-sql-between: named params, Spark ≥3.4)
 # ---------------------------------------------------------------------------
-# The external correctness harness samples a *prefix* of ``queries()``
-# insertion order, so the front of the dict is the most-scrutinized
-# real estate. The window is EXACTLY 50 keys — the harness's checked
-# prefix length — because round 4 listed 68 and the 18 tail entries
-# silently got no external row (r4 verdict item 2). Union-of-rounds
-# coverage entering round 5: every one of the 136 registered queries
-# has at least one external green row; the staleness ledger is r4=50,
-# r3=43, r2=43.
-#
-# Rotation precedence each round (the r5–r7 policy, now standing):
-# (1) queries ADDED this round — first external row now or never;
-# (2) queries whose CODE OR ORACLE changed this round — a changed
-# query's previous green row proves nothing; (3) the queries whose
-# newest external green row is OLDEST, oldest cohort first, slipping
-# only simple single-relation plans that the local differential
-# re-proves every session. Everything else keeps registration order
-# behind the window, and the repo-side sf0.01 oracle suite
-# (tests/test_registry_oracle.py, same gate as the harness) still
-# covers every registered query each session.
-#
-# CAPACITY INVARIANT: a 50-slot window under the −3 bound sustains at
-# most 50 × 3 = 150 registered queries (every query must be
-# re-windowed at least once every 3 rounds, and new/changed slots eat
-# from the same budget). The registry is AT that capacity — round 9
-# registered ext_sq8_ivf_topk only by RETIRING ext_media_resize
-# (its fake-codec mapInPandas contract is subsumed by
-# ext_media_ppm_resize's real-codec path). Do not register another
-# externally-gated query without retiring one, or the staleness bound
-# becomes unsatisfiable a few rounds out. New operators beyond this
-# point should extend EXISTING queries' plans or live as
-# pytest-proven library surface (REGISTRY.md lists that tier).
-#
-# Round-10 rotation (recorded green 50/50 in CORRECTNESS_r10.json):
-# 1 new-query slot (stream_cdf_source, swapped for the retired
-# ext_delta_restore), 3 changed-query slots (ext_media_embed_topk,
-# ext_dedup_clusters, ext_delta_cdf_fold), the 6 r6-stale queries, and
-# 40 of the 46 r7-stale queries, deferring ext_histogram_totals,
-# ext_pivot_events, ext_profile_orders, ext_setops_users,
-# ext_stats_correlation, ext_unpivot_lineitem to r11 (forced there).
-#
-# Round-11 rotation went green 50/50 (CORRECTNESS_r11.json): the 6
-# deferred r7 keys plus 44 of the r8 cohort.
-#
-# Round-12 rotation — the planned 3 + 47 layout, amended by the
-# capacity swap the r11 verdict asked for: ext_histogram_totals and
-# ext_profile_orders RETIRED (both trivially subsumed by
-# ext_groupwise_stats / ext_winsorized_stats; their arithmetic keeps
-# pytest anchors in test_dq_and_cleaning.py), freeing 2 of the 150
-# capacity slots for ext_delta_widened_read + ext_delta_identity —
-# the r11 deltalog protocol features (type widening, identity
-# columns) most likely to corrupt reads silently, now externally
-# value-gated instead of pytest-only. New keys have no green row, so
-# they MUST occupy window slots now; the 2 slots come from deferring
-# op_clean_id and op_filter_range (r9 cohort, trivial single-relation
-# plans the local differential re-proves every session) to r13, where
-# they are FORCED. The deferral cascades cleanly: r13 = those 2 + 48
-# of the 50-key r10 cohort; r14 = the 2 deferred r10 keys + the
-# 48-key r11 cohort (the retirement shrank it from 50) — exactly 50
-# each round, steady state restored. Perf-only changes this round
-# (ext_delta_cdf_fold replay batching, ext_dedup_keep_best pair-chain
-# reuse) leave output values untouched, are re-proven by the local
-# 150-query differential, and both keys' forced rotations (r13, r14)
-# re-gate them externally on schedule. Rotation is tool-assisted: run
-#   python tools/staleness_ledger.py --plan
-# for the next round's FORCED set, the oldest-first FILL, and the
-# deferral-pressure list.
-#
-# Round-13 rotation (r12 went green 50/50, CORRECTNESS_r12.json) —
-# the planned 2 + 48 layout, amended by the capacity swap the r12
-# verdict asked for: ext_moving_revenue RETIRED (its explicit-frame
-# surface is subsumed by ext_window_funcs / ext_running_gold_totals;
-# the range-frame gap arithmetic keeps a pytest anchor in
-# test_dq_and_cleaning.py), freeing 1 of the 150 capacity slots for
-# ext_delta_v2_checkpoint — the deltalog protocol feature most
-# likely to corrupt reads silently (after log expiry the checkpoint
-# IS the history; nothing remains to disagree with it), previously
-# pytest-only. The new key has no green row so it MUST occupy a
-# window slot now; its slot comes from the retirement, and the two
-# r9 deferrals (op_clean_id, op_filter_range — forced here, may not
-# slip again) displace 2 of the 49 remaining r10-cohort keys
-# (ext_join_semi_anti, ext_scalar_subquery — trivial single-join SQL
-# shapes the local differential re-proves every session) to r14,
-# where they are FORCED. r14 = those 2 + the 48-key r11 cohort =
-# exactly 50; steady state holds.
-# Round-14 rotation (r13 went green 50/50, CORRECTNESS_r13.json) —
-# the OPTIMIZATION-round layout the r13 verdict ordered, which
-# displaces part of the planned 2 + 48 r11-cohort schedule:
-# (1) every query whose CODE CHANGED in this optimization round (the
-#     delta fixture-build split, the kmeans/perceptron training-set
-#     caches + final-assign spread, the sq8 encode spread, the
-#     market-basket and prefix-filter rebuilds) — a changed query's
-#     previous green row proves nothing (precedence rule 2);
-# (2) the 8 r13-optimizer-touched queries the r13 verdict names as
-#     driver-unverified ("must be FORCED into the r14 window");
-# (3) the 2 doubly-deferred r10 keys (tripwire bound: may not slip);
-# (4) the remaining slots filled from the 48-key r11 cohort, keeping
-#     the complex plans and slipping 15 trivial single-relation /
-#     single-join shapes (dq_* checks, set ops, unpivot, url/json
-#     scalar maps, plain aggregates) that the local 150-query sf0.001
-#     differential re-proves every session. The slip breaches the
-#     self-imposed round-3 freshness bound for those 15 keys; this is
-#     the deliberate, documented cost of the verdict's items 1a + the
-#     changed-query precedence in the FINAL optimization round —
-#     correctness evidence for changed code outranks re-greening
-#     unchanged trivial plans (their code is untouched since r11).
-_DRIVER_WINDOW: tuple[str, ...] = (
-    # --- (1) changed this round: delta setup/read split ---
-    "ext_delta_time_travel",
-    "ext_delta_cdf_fold",
-    "ext_delta_merge_cdf",
-    "ext_delta_v2_checkpoint",
-    "stream_cdf_source",
-    # --- (1) changed this round: ML driver-loop family ---
-    "ext_kmeans_embedding",
-    "ext_pq_encode",
-    "ext_pq_adc_search",
-    "ext_sq8_ivf_topk",
-    "ext_similarity_ivf",
-    "ext_ann_recall",
-    "ext_quality_perceptron",
-    "ext_quality_sampled_train",
-    # --- (1) changed this round: pair builds + graph loop + LSH ---
-    "ext_market_basket",
-    "ext_dedup_prefix_filter",
-    "ext_label_propagation",
-    "ext_dedup_minhash_lsh",
-    "ext_dedup_incremental",
-    "stream_dedup_index_maintenance",
-    # --- (2) r13 verdict's named verification gap ---
-    "gold_product_metrics",
-    "ext_dedup_ngram_jaccard",
-    "ext_dedup_embedding",
-    "ext_dedup_semantic_clusters",
-    "ext_embedding_covariance",
-    "ext_media_phash_dedup",
-    "ext_dedup_containment",
-    # --- (3) newest external row is r10: tripwire-forced ---
-    "ext_join_semi_anti",
-    "ext_scalar_subquery",
-    # --- (4) r11 cohort fill (26 of 41 remaining; 15 trivial
-    # --- single-relation shapes slip with the documentation above)
-    "dash_customer_360",
-    "dash_sales_overview",
-    "dash_site_funnel",
-    "ext_asof_attribution",
-    "ext_cohort_retention",
-    "ext_corpus_curation",
-    "ext_dedup_keep_best",
-    "ext_dedup_lines",
-    "ext_dedup_span_cut",
-    "ext_dsir_importance",
-    "ext_gapfill_daily",
-    "ext_interval_join_errors",
-    "ext_lm_perplexity",
-    "ext_media_ppm_resize",
-    "ext_peak_concurrency",
-    "ext_pivot_events",
-    "ext_rfm_segmentation",
-    "ext_text_tfidf",
-    "gold_daily_metrics",
-    "gold_product_funnel",
-    "gold_session_metrics",
-    "gold_session_metrics_attrs",
+
+@query(
+    "op_sql_named_params",
+    oracle="""
+    SELECT
+      CAST(o_orderdate AS DATE) AS order_date,
+      CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS total_revenue,
+      COUNT(*) AS order_count
+    FROM orders
+    WHERE CAST(o_orderdate AS DATE)
+          BETWEEN TRY_CAST('1996-06-01' AS DATE) AND TRY_CAST('1996-06-30' AS DATE)
+    GROUP BY 1
+    """,
 )
+def op_sql_named_params(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL-string entry point with named parameters — the reference's
+    dashboard execution model (``:start_date``/``:end_date`` +
+    TRY_CAST, analysis/dashboard_queries/01_product_performance.sql:26),
+    run via ``spark.sql(q, args=...)``."""
+    from ..sources.catalog import load_table
 
-
-def apply_driver_window(strict: bool = True) -> None:
-    """Reorder QUERIES/ORACLES in place so _DRIVER_WINDOW keys lead.
-
-    ``strict=False`` tolerates missing keys: when a sub-registry
-    module is imported *before* this one (tests do), its registrations
-    land after this module body runs, so the import-time reorder here
-    sees a partial dict. The driver entry point re-applies strictly.
-    """
-    missing = [k for k in _DRIVER_WINDOW if k not in QUERIES]
-    if missing and strict:  # fail loudly on a rename, not silently reorder
-        raise KeyError(f"driver-window queries not registered: {missing}")
-    for registered in (QUERIES, ORACLES):
-        ordered = {k: registered[k] for k in _DRIVER_WINDOW if k in registered}
-        ordered.update(
-            (k, v) for k, v in registered.items() if k not in ordered
-        )
-        registered.clear()
-        registered.update(ordered)
-
-
-apply_driver_window(strict=False)
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    return spark.sql(
+        """
+        SELECT
+          CAST(o_orderdate AS DATE) AS order_date,
+          CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS total_revenue,
+          COUNT(*) AS order_count
+        FROM orders_v
+        WHERE CAST(o_orderdate AS DATE)
+              BETWEEN TRY_CAST(:start_date AS DATE) AND TRY_CAST(:end_date AS DATE)
+        GROUP BY 1
+        """,
+        args={"start_date": "1996-06-01", "end_date": "1996-06-30"},
+    )

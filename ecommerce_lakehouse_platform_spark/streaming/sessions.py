@@ -63,7 +63,7 @@ def windowed_rollup(
     """Tumbling (or, with ``slide``, sliding/hopping) time-window
     rollup — the fixed-window twin of ``session_rollup`` and the
     streaming form of the batch hourly hypertable rollup
-    (registry_ext.ext_time_bucket_rollup). Identical column
+    (registry ``ext_time_bucket_rollup``). Identical column
     expressions run in batch and under readStream+watermark; revenue
     sums in DECIMAL so partition/trigger order cannot change it.
     Deliberately no countDistinct: it is unsupported in streaming

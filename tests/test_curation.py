@@ -206,9 +206,7 @@ def test_span_cut_planted_duplicate_span(spark):
     exactly the 8 shared positions vanish from each, the unique
     padding survives in order, and a third unrelated doc is
     untouched."""
-    from ecommerce_lakehouse_platform_spark.registry_curation import (
-        ext_dedup_span_cut,
-    )
+    from ecommerce_lakehouse_platform_spark.registry.text import ext_dedup_span_cut
     shared = "one two three four five six seven eight"
     rows = [
         (1, f"a1 b1 {shared} c1 d1"),

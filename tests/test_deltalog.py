@@ -3423,7 +3423,7 @@ def test_registry_fixture_memo_reuses_build_and_result_is_stable(spark):
     and return the identical relation — the bench's timed runs 2..3
     rely on exactly this to measure the read path, and the driver's
     oracle hash relies on the result not drifting across invocations."""
-    from ecommerce_lakehouse_platform_spark import registry_delta as rd
+    from ecommerce_lakehouse_platform_spark.registry import delta_streaming as rd
     from ecommerce_lakehouse_platform_spark.registry import QUERIES
 
     sf = "/root/testdata/sf0.001"
@@ -3450,7 +3450,7 @@ def test_registry_fixture_memo_rebuilds_without_data_files(spark):
     """A memoized fixture whose data files were cleaned away while its
     _delta_log survived must be rebuilt, not served to a read that
     would fail on the missing parquet."""
-    from ecommerce_lakehouse_platform_spark import registry_delta as rd
+    from ecommerce_lakehouse_platform_spark.registry import delta_streaming as rd
     from ecommerce_lakehouse_platform_spark.registry import QUERIES
 
     key = ("tt", SF_SMOKE)

@@ -223,8 +223,8 @@ def test_incremental_minhash_equals_full_restricted(spark):
 
 
 def test_containment_materialize_releases_cache(spark):
-    """materialize=True must (a) return the same pairs as the lazy
-    mode and (b) leave NO pinned SQL-cache entry behind — the
+    """The containment pair generator must (a) return the exact pairs
+    and (b) leave NO pinned SQL-cache entry behind — the
     self-cleaning contract loopy callers rely on (r4 advice item)."""
     spark.catalog.clearCache()
     docs = spark.createDataFrame(
@@ -235,24 +235,29 @@ def test_containment_materialize_releases_cache(spark):
         ],
         ["doc_id", "text"],
     )
-    lazy = sorted(
+    got = sorted(
         map(
             tuple,
             neardup.shingle_containment_pairs(docs, threshold=0.5).collect(),
         )
     )
-    spark.catalog.clearCache()
-    eager = sorted(
-        map(
-            tuple,
-            neardup.shingle_containment_pairs(
-                docs, threshold=0.5, materialize=True
-            ).collect(),
-        )
-    )
-    assert eager == lazy and len(eager) >= 1
+    # doc 1's 6 shingles all sit inside doc 2's 18; doc 3 shares none
+    assert got == [(1, 2, 6, 6, 18, 1.0, 6 / 18)]
     cm = spark._jsparkSession.sharedState().cacheManager()
-    assert cm.isEmpty(), "materialize=True left a pinned SQL cache entry"
+    assert cm.isEmpty(), "containment pairs left a pinned SQL cache entry"
+
+
+def test_ngram_jaccard_query_leaves_no_cache_entry(spark):
+    """The registered Jaccard pair query takes the same self-cleaning
+    path: collecting it must leave no pinned InMemoryRelation behind
+    (one per call would accumulate in bench loops)."""
+    from ecommerce_lakehouse_platform_spark import registry
+
+    spark.catalog.clearCache()
+    rows = registry.QUERIES["ext_dedup_ngram_jaccard"](spark, SF_SMOKE).collect()
+    assert rows
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "ext_dedup_ngram_jaccard left a pinned SQL cache entry"
 
 
 def test_minhash_bucket_cap_identity_at_fixture_scale(spark):

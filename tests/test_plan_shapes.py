@@ -17,7 +17,6 @@ plan level.
 
 from __future__ import annotations
 
-import ecommerce_lakehouse_platform_spark.registry_ext  # noqa: F401 (registers ext queries)
 from ecommerce_lakehouse_platform_spark.registry import QUERIES
 
 from .conftest import SF_SMOKE

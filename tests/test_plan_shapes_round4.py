@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import re
 
-import ecommerce_lakehouse_platform_spark.registry_round4  # noqa: F401 (registers)
 from ecommerce_lakehouse_platform_spark.registry import QUERIES
 
 from .conftest import SF_SMOKE
@@ -184,60 +183,34 @@ def test_changed_queries_sit_inside_driver_window():
     """Any query whose semantics or output values changed this round
     must be externally re-checked: its previous green row proves
     nothing about the new code. Keep this list in sync with the
-    round's diff. (The r10 changed set — stream_cdf_source,
-    ext_media_embed_topk, ext_dedup_clusters, ext_delta_cdf_fold —
-    went green in CORRECTNESS_r10 and rotated out on schedule.)"""
+    round's diff. (The r14 changed set went green in CORRECTNESS_r14
+    and rotated out on schedule.)"""
     from ecommerce_lakehouse_platform_spark import registry
 
-    # r13's new query is the externally-gated v2-checkpoint recovery
-    # path — never green, so the staleness invariant itself forces it
-    # into the window. It doubles as the commit/replay canary for
-    # this round's deltalog fixes (identity watermark footer-stat
-    # hardening, RESTORE feature guards, appendOnly feature
-    # enumeration at 3/7): every fix sits under deltalog commit or
-    # replay machinery this query drives end-to-end. The r12 keys
-    # (ext_delta_widened_read, ext_delta_identity) went green in
-    # CORRECTNESS_r12 and rotated out on schedule; their forced
-    # rotation (r15) re-gates the r13 identity/appendOnly fixes
-    # externally on schedule, and ext_delta_identity's semantics are
-    # unchanged by them (the fixes close failure corners, not the
-    # happy path the query takes).
-    # r14 (optimization round 2): every query whose code changed —
-    # the delta fixture-build split, the kmeans/perceptron
-    # training-set caches + final-assign spread, the sq8 encode
-    # spread, the market-basket and prefix-filter pair-build rewrites
-    # — plus the 8 r13-optimizer-touched keys the r13 verdict ordered
-    # forced ("must be FORCED into the r14 window").
-    changed_r14 = {
-        # delta setup/read split
+    changed = {
+        # fixture memo now rebuilds a table whose data files vanished
         "ext_delta_time_travel",
         "ext_delta_cdf_fold",
         "ext_delta_merge_cdf",
         "ext_delta_v2_checkpoint",
         "stream_cdf_source",
-        # ML driver-loop family (kmeans/classifier/quantize edits)
-        "ext_kmeans_embedding",
+        # PQ block fits run under the caller's job group
         "ext_pq_encode",
         "ext_pq_adc_search",
-        "ext_sq8_ivf_topk",
-        "ext_similarity_ivf",
-        "ext_ann_recall",
-        "ext_quality_perceptron",
-        "ext_quality_sampled_train",
-        # pair-build rewrites
-        "ext_market_basket",
-        "ext_dedup_prefix_filter",
-        # r13 verdict's named verification gap
-        "gold_product_metrics",
+        # shingle pair generators are always self-cleaning
         "ext_dedup_ngram_jaccard",
-        "ext_dedup_embedding",
-        "ext_dedup_semantic_clusters",
-        "ext_embedding_covariance",
-        "ext_media_phash_dedup",
+        "ext_dedup_clusters",
+        "ext_dedup_keep_best",
         "ext_dedup_containment",
+        # nested oracles composed from ORACLES, not spliced tokens
+        "ext_ann_recall",
+        "ext_running_gold_totals",
+        # import-cycle workarounds removed from the query or its oracle
+        "ext_langid_confusion",
+        "stream_interval_join_outer",
     }
     window = set(registry._DRIVER_WINDOW)
-    assert changed_r14 <= window, sorted(changed_r14 - window)
+    assert changed <= window, sorted(changed - window)
 
 
 def test_bench_headline_names_are_registered():

@@ -4,7 +4,6 @@ in a correctness test)."""
 
 from __future__ import annotations
 
-import ecommerce_lakehouse_platform_spark.registry_scale  # noqa: F401 (registers)
 from ecommerce_lakehouse_platform_spark.registry import QUERIES
 
 from .conftest import SF_SMOKE

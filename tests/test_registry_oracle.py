@@ -6,6 +6,12 @@ mark the sf0.01 run slow.
 
 from __future__ import annotations
 
+import json
+import os
+import pkgutil
+import subprocess
+import sys
+
 import pytest
 
 from ecommerce_lakehouse_platform_spark import registry
@@ -16,18 +22,49 @@ from .oracle_harness import compare, run_oracle
 ORACLE_QUERIES = sorted(registry.ORACLES)
 
 
-def test_no_unresolved_deferred_tokens():
-    """registry.resolve_deferred_oracles leaves a __ORACLE_<NAME>__
-    token in place when its dependency is missing at resolution time;
-    after a full import every token must be spliced — an unresolved
-    one would otherwise surface as an opaque DuckDB syntax error deep
-    inside a differential run (e.g. after renaming a nested oracle
-    without updating its dependents' tokens)."""
-    unresolved = {
-        name: sql for name, sql in registry.ORACLES.items()
-        if "__ORACLE_" in sql
-    }
-    assert not unresolved, sorted(unresolved)
+def test_nested_oracles_embed_their_dependencies():
+    """Oracles that nest another query's oracle as a CTE are composed
+    from ORACLES at registration: each dependency's SQL must appear
+    verbatim, so an edit to a nested oracle reaches its dependents."""
+    ann = registry.ORACLES["ext_ann_recall"]
+    assert registry.ORACLES["ext_similarity_topk"] in ann
+    assert registry.ORACLES["ext_similarity_ivf"] in ann
+    running = registry.ORACLES["ext_running_gold_totals"]
+    assert registry.ORACLES["gold_daily_metrics"] in running
+
+
+_IMPORT_FIRST = """
+import hashlib, importlib, json, sys
+importlib.import_module(sys.argv[1])
+from ecommerce_lakehouse_platform_spark import registry
+print(json.dumps({
+    "keys": list(registry.QUERIES),
+    "oracles": hashlib.sha256(
+        json.dumps(list(registry.ORACLES.items())).encode()
+    ).hexdigest(),
+    "window_leads": list(registry.QUERIES)[:50] == list(registry._DRIVER_WINDOW),
+}))
+"""
+
+
+def test_registry_import_order_does_not_matter():
+    """Importing any registry module first, in a fresh interpreter,
+    yields the same QUERIES order and ORACLES, with the driver window
+    as the 50-key prefix."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen = {}
+    for mod in pkgutil.iter_modules(registry.__path__, registry.__name__ + "."):
+        out = subprocess.run(
+            [sys.executable, "-c", _IMPORT_FIRST, mod.name],
+            cwd=root, capture_output=True, text=True, check=True,
+        )
+        seen[mod.name] = json.loads(out.stdout.splitlines()[-1])
+    assert len(seen) >= 8, sorted(seen)
+    first = next(iter(seen.values()))
+    assert first["window_leads"]
+    assert first["keys"] == list(registry.QUERIES)
+    for name, got in seen.items():
+        assert got == first, name
 
 
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECTNESS])

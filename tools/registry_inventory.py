@@ -18,8 +18,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Library surface with NO external driver row — the registry sits at
-# its 150 = 50-slot × 3-round capacity (registry.py's capacity
-# invariant), so these operators are proven by the pytest anchors
+# its 150 = 50-slot × 3-round capacity (the capacity invariant in
+# registry/__init__.py), so these operators are proven by the pytest anchors
 # below instead of a DuckDB oracle row in a CORRECTNESS_r*.json.
 # "Not externally gated" ≠ "not checked": every anchor runs in the
 # standard suite. Each entry: (capability, implementation module,
@@ -356,7 +356,7 @@ def main() -> None:
     )
     print(
         "The registry sits at its 150 = 50-slot × 3-round staleness "
-        "capacity (see the capacity invariant in registry.py), so "
+        "capacity (see the capacity invariant in registry/__init__.py), so "
         "these operators carry NO external driver row by design — "
         "each is proven by the pytest anchor listed, which runs in "
         "the standard suite. Not externally gated ≠ not checked.",

@@ -2,9 +2,10 @@
 
 The external driver re-checks only the first 50 registered queries
 per round (the driver window), so the registry rotates the window
-each round: changed/new queries first, then the queries whose newest
-external green row is oldest. That policy lives in the
-``_DRIVER_WINDOW`` comment in registry.py — this tool makes it
+each round: keys that would breach the staleness bound first, then
+changed queries, then the queries whose newest external green row is
+oldest. That policy lives in the
+``_DRIVER_WINDOW`` comment in registry/__init__.py — this tool makes it
 auditable: parse every recorded round, print each query's newest
 external green row, and flag
 
