@@ -1,4 +1,4 @@
-"""Keep-latest and exact deduplication operators.
+"""Keep-latest deduplication and duplicate-group operators.
 
 ``keep_latest`` is the reference's single window idiom, used six times
 (/root/reference/02_silver/02_silver_transform.py:66-69, 99-102,
@@ -40,20 +40,6 @@ def keep_latest(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def dedupe_exact(
-    df: DataFrame, on: Sequence[str], keep_min_of: str
-) -> DataFrame:
-    """Exact-duplicate collapse: one row per ``on`` group, keeping the
-    row whose ``keep_min_of`` value is smallest (deterministic).
-
-    Spark plan: single hash-aggregate shuffle on ``on`` (min-reduce),
-    then a co-partitioned self-join to recover the full row — both
-    stages are map-side-combinable and skew-safe under AQE.
-    """
-    canon = df.groupBy(*on).agg(F.min(keep_min_of).alias(keep_min_of))
-    return df.join(canon, [*on, keep_min_of], "inner")
 
 
 def duplicate_groups(df: DataFrame, on: Sequence[str]) -> DataFrame:

@@ -583,33 +583,6 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-) -> DataFrame:
-    """MinHash signature per doc: num_perm permutations simulated by
-    seeded xxhash64 of each shingle (hash(perm_i, shingle)); the
-    signature entry is the min over the doc's shingles.
-
-    Entirely map-side: per-row ``array_min(transform(...))`` over the
-    shingle array — no explode, no shuffle, no aggregation state.
-    Linear scan at any corpus size.
-    """
-
-    def perm_min(i: int):
-        return F.array_min(
-            F.transform(F.col("_ss"), lambda s: F.xxhash64(F.lit(i), s))
-        ).alias(f"mh_{i}")
-
-    return _spread(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(shingles(F.col(text_col), n)).alias("_ss"),
-    ).select("doc_id", *[perm_min(i) for i in range(num_perm)])
-
-
 def _minhash_band_buckets(
     sets_df: DataFrame, num_perm: int, bands: int, carry: list[str] | None = None
 ) -> DataFrame:

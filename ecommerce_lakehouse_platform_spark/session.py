@@ -27,6 +27,13 @@ def get_spark(
     spark-submit; everything set here is safe under any deployment.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    # Python workers (UDFs, the minidelta streaming sources) import
+    # this package by name: hand them its parent directory so they
+    # find it from any working directory (Spark merges this with the
+    # worker environment's own PYTHONPATH)
+    package_root = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -41,6 +48,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", package_root)
     )
     return builder.getOrCreate()
 

@@ -77,8 +77,10 @@ use_dv=True)`` writes the matching rows' file positions to a parquet
 sidecar under ``_dv/`` and re-commits the touched adds with a
 ``deletionVector`` descriptor — readers anti-join the sidecar against
 ``_metadata.row_index``, every rewrite path reads through the filter,
-OPTIMIZE materializes DVs away, vacuum reaps superseded sidecars, and
-``changes()``/``clone()`` reject DV-carrying ranges/tables loudly.
+OPTIMIZE materializes DVs away, and vacuum reaps superseded sidecars.
+Every ``remove`` carries the descriptor of the file it removes, so the
+change planner reads a DV commit's row-level events from the commit
+alone.
 
 Deliberately NOT implemented (documented subset, all honest gaps):
 multi-cluster LogStores (os.link put-if-absent covers single-host

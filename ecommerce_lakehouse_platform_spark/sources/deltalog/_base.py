@@ -146,6 +146,31 @@ def _atomic_publish(tmp: str, final: str) -> None:
         os.unlink(tmp)
 
 
+def _remove_action(
+    add: dict[str, Any], now_ms: int, data_change: bool = True
+) -> dict[str, Any]:
+    """The ``remove`` of a snapshot's logical file — its path PLUS the
+    deletion vector active on it, which the protocol records on the
+    remove itself. Every commit then says which rows it removed, so
+    change planning reads them from the commit, never from replayed
+    DV state."""
+    rm = {
+        "path": add["path"],
+        "deletionTimestamp": now_ms,
+        "dataChange": data_change,
+    }
+    if add.get("deletionVector"):
+        rm["deletionVector"] = add["deletionVector"]
+    return {"remove": rm}
+
+
+def _commit_timestamp(info: dict[str, Any]) -> int:
+    """A commit's effective timestamp: the in-commit timestamp when
+    the feature stamped one (authoritative and monotonic), else the
+    writer clock."""
+    return int(info.get("inCommitTimestamp", info.get("timestamp", 0)))
+
+
 def _parse_partition_values(relpath: str) -> dict[str, str | None]:
     """Recover partitionValues from a hive-style relative path
     (``col=val/.../part-*.parquet``), un-escaping the writer's URL

@@ -42,7 +42,9 @@ from ._base import (  # noqa: F401
     _atomic_publish,
     _checkpoint_arrow_schema,
     _column_nonnull_count,
+    _commit_timestamp,
     _parse_partition_values,
+    _remove_action,
     _stats_overlap,
     _stats_value,
 )
@@ -586,15 +588,7 @@ class _CommitMixin:
                 else self._matching_rels(prior, replace_where)
             )
             for rel in sorted(victims):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
+                actions.append(_remove_action(prior.files[rel], now_ms))
         actions.extend({"add": add} for add in adds)
         # Conflict resolution on a lost put-if-absent race, per the
         # Delta protocol's read-set rules:
@@ -785,13 +779,8 @@ class _CommitMixin:
             enabled = False
         if not enabled:
             return
-        prev_eff = int(
-            prev_info.get(
-                "inCommitTimestamp", prev_info.get("timestamp", 0)
-            )
-        )
         info["inCommitTimestamp"] = max(
-            int(time.time() * 1000), prev_eff + 1
+            int(time.time() * 1000), _commit_timestamp(prev_info) + 1
         )
 
     _RT_KEY = "delta.enableRowTracking"

@@ -43,6 +43,7 @@ from ._base import (  # noqa: F401
     _checkpoint_arrow_schema,
     _column_nonnull_count,
     _parse_partition_values,
+    _remove_action,
     _stats_overlap,
     _stats_value,
 )
@@ -143,15 +144,7 @@ class _DmlMixin:
             }
         ]
         for rel in touched_rels:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
+            actions.append(_remove_action(snap.files[rel], now_ms))
         actions.extend({"add": add} for add in adds)
         return self._commit_resolving(
             snap, actions, operation, isolation=isolation
@@ -373,15 +366,7 @@ class _DmlMixin:
                 .collect()
             }
             for rel in sorted(touched):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
+                actions.append(_remove_action(snap.files[rel], now_ms))
                 add = {
                     k: v
                     for k, v in snap.files[rel].items()
@@ -646,15 +631,7 @@ class _DmlMixin:
             }
         ]
         for rel in touched_rels:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
+            actions.append(_remove_action(snap.files[rel], now_ms))
         actions.extend({"add": add} for add in adds)
         return self._commit_resolving(
             snap, actions, "MERGE", isolation=isolation

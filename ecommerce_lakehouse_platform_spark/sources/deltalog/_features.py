@@ -43,6 +43,7 @@ from ._base import (  # noqa: F401
     _checkpoint_arrow_schema,
     _column_nonnull_count,
     _parse_partition_values,
+    _remove_action,
     _stats_overlap,
     _stats_value,
 )
@@ -820,13 +821,7 @@ class _FeaturesMixin:
             hwm += int(n)
             add["dataChange"] = False
             actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                    }
-                }
+                _remove_action(snap.files[rel], now_ms, data_change=False)
             )
             actions.append({"add": add})
         actions.append(
@@ -1062,13 +1057,7 @@ class _FeaturesMixin:
         ]
         for rel in sorted(snap.files):
             actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                    }
-                }
+                _remove_action(snap.files[rel], now_ms, data_change=False)
             )
             add = dict(snap.files[rel])
             tags = dict(add.get("tags") or {})

@@ -43,6 +43,7 @@ from ._base import (  # noqa: F401
     _checkpoint_arrow_schema,
     _column_nonnull_count,
     _parse_partition_values,
+    _remove_action,
     _stats_overlap,
     _stats_value,
 )
@@ -595,13 +596,7 @@ class _MaintenanceMixin:
         ]
         for rel in victim_rels:
             actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                    }
-                }
+                _remove_action(snap.files[rel], now_ms, data_change=False)
             )
         for add in adds:
             actions.append({"add": {**add, "dataChange": False}})
@@ -710,7 +705,17 @@ class _MaintenanceMixin:
         # commits removes/adds via _commit directly, so the write()
         # guard does not cover it)
         self._assert_writer_features(current)
-        removed = sorted(set(current.files) - set(target.files))
+        # diff LOGICAL files (path plus deletion vector): a file whose
+        # DV changed since the target is removed and re-added under
+        # the target's DV, or the rows it deleted stay deleted
+        dv_changed = {
+            rel
+            for rel in set(current.files) & set(target.files)
+            if current.files[rel].get("deletionVector")
+            != target.files[rel].get("deletionVector")
+        }
+        removed = sorted((set(current.files) - set(target.files)) | dv_changed)
+        added = sorted((set(target.files) - set(current.files)) | dv_changed)
         if removed:
             # rolling back PAST committed rows removes them — exactly
             # what delta.appendOnly forbids; a restore that removes no
@@ -742,16 +747,8 @@ class _MaintenanceMixin:
             },
         ]
         for rel in removed:
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        for rel in sorted(set(target.files) - set(current.files)):
+            actions.append(_remove_action(current.files[rel], now_ms))
+        for rel in added:
             actions.append({"add": {**target.files[rel], "dataChange": True}})
         new_version = current.version + 1
         self._commit(new_version, actions)

@@ -14,7 +14,8 @@ import os  # noqa: F401
 import shutil  # noqa: F401
 import time  # noqa: F401
 import uuid  # noqa: F401
-from typing import Any  # noqa: F401
+from collections.abc import Iterator
+from typing import Any, NamedTuple
 from urllib.parse import unquote  # noqa: F401
 
 from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
@@ -42,10 +43,77 @@ from ._base import (  # noqa: F401
     _atomic_publish,
     _checkpoint_arrow_schema,
     _column_nonnull_count,
+    _commit_timestamp,
     _parse_partition_values,
     _stats_overlap,
     _stats_value,
 )
+
+
+class ChangeEvent(NamedTuple):
+    """Rows of one data file a commit inserted or deleted. Mode
+    ``"anti"``: the file's rows NOT in deletion vector ``dv`` (a whole
+    logical file added or removed). Mode ``"semi"``: the positions in
+    ``dv`` that are not in ``dv_old`` (a DV commit's delta)."""
+
+    change: str  # "insert" | "delete"
+    path: str
+    mode: str  # "anti" | "semi"
+    dv: dict | None
+    dv_old: dict | None = None
+    partition_values: dict | None = None
+
+
+class ChangeCommit(NamedTuple):
+    """One commit as the change planner yields it."""
+
+    version: int
+    timestamp_ms: int
+    schema: T.StructType | None  # the commit's metaData schema, if any
+    events: list[ChangeEvent]
+
+
+def _change_events(actions: list[dict[str, Any]]) -> list[ChangeEvent]:
+    """One commit's row-level change events, read from the commit
+    alone. ``dataChange=false`` actions (compaction, index and
+    row-tracking re-commits) emit nothing. The same path removed and
+    re-added under a DIFFERENT deletion vector is a DV commit: its
+    events are the positions the new DV adds (deletes) and drops
+    (re-inserts, as a RESTORE does) — never a delete-all/insert-all
+    of the file."""
+    removes = {
+        a["remove"]["path"]: a["remove"].get("deletionVector")
+        for a in actions
+        if "remove" in a and a["remove"].get("dataChange", True)
+    }
+    adds = [
+        a["add"]
+        for a in actions
+        if "add" in a and a["add"].get("dataChange", True)
+    ]
+    dv_commits = {
+        ad["path"]
+        for ad in adds
+        if ad["path"] in removes
+        and ad.get("deletionVector") != removes[ad["path"]]
+    }
+    events = [
+        ChangeEvent("delete", path, "anti", dv)
+        for path, dv in removes.items()
+        if path not in dv_commits
+    ]
+    for ad in adds:
+        path, new = ad["path"], ad.get("deletionVector")
+        pv = ad.get("partitionValues")
+        if path not in dv_commits:
+            events.append(ChangeEvent("insert", path, "anti", new, None, pv))
+            continue
+        old = removes[path]
+        if new:
+            events.append(ChangeEvent("delete", path, "semi", new, old, pv))
+        if old:
+            events.append(ChangeEvent("insert", path, "semi", old, new, pv))
+    return events
 
 
 class _ReadMixin:
@@ -423,10 +491,7 @@ class _ReadMixin:
             # in-commit timestamps (when the feature is on) are
             # authoritative and already monotonic; the writer-clock
             # fallback gets monotonized here
-            eff = max(
-                eff,
-                int(info.get("inCommitTimestamp", info.get("timestamp", 0))),
-            )
+            eff = max(eff, _commit_timestamp(info))
             if eff <= ts_ms:
                 candidate = v
             else:
@@ -935,6 +1000,38 @@ class _ReadMixin:
         names = [f.name for f in snap.schema] + ["_row_id"]
         return out.select(*((["_rel"] if with_rel else []) + names))
 
+    def _change_commits(
+        self, after: int, upto: int
+    ) -> Iterator[ChangeCommit]:
+        """The change planner: every retained commit in ``(after,
+        upto]`` with its timestamp, its ``metaData`` schema (None when
+        the commit keeps the schema) and its row-level change events.
+        Log reads only — no SparkSession — so ``changes()`` and both
+        streaming sources plan from this one walk. A commit is
+        self-describing (each remove carries the deletion vector of
+        the logical file it removes), so nothing before ``after`` is
+        replayed."""
+        for v in self.versions():
+            if v <= after:
+                continue
+            if v > upto:
+                break
+            actions = self._read_actions(v)
+            info = next(
+                (a["commitInfo"] for a in actions if "commitInfo" in a), {}
+            )
+            meta = next(
+                (a["metaData"] for a in actions if "metaData" in a), None
+            )
+            yield ChangeCommit(
+                v,
+                _commit_timestamp(info),
+                None
+                if meta is None
+                else T.StructType.fromJson(json.loads(meta["schemaString"])),
+                _change_events(actions),
+            )
+
     def changes(
         self, starting_version: int, ending_version: int | None = None
     ) -> DataFrame:
@@ -942,20 +1039,18 @@ class _ReadMixin:
         ``[starting_version, ending_version]`` as a DataFrame with the
         table columns plus ``_change_type`` ('insert' | 'delete'),
         ``_commit_version``, and ``_commit_timestamp`` — the contract
-        of Delta's ``table_changes``. Rows are reconstructed from the
-        commits' add/remove actions (an overwrite therefore appears as
-        delete-all + insert-all, which is what copy-on-write truly
-        did); actions with ``dataChange=false`` — compaction,
-        checkpoints — are skipped, so OPTIMIZE is invisible to
-        incremental consumers. Requires the referenced data files to
-        still exist (i.e. not vacuumed past ``starting_version``).
-
-        DELETION VECTORS compose: a DV commit (remove + re-add of the
-        same file carrying a new descriptor) surfaces as row-level
-        'delete' events for exactly the newly-deleted positions, and
-        a later rewrite's remove of a DV-carrying file emits only the
-        rows the DV had left alive — the change feed's fold over any
-        range equals the snapshot diff, DVs or not.
+        of Delta's ``table_changes``. The events come from the change
+        planner (:meth:`_change_commits`) the streaming sources share:
+        an overwrite appears as delete-all + insert-all, which is what
+        copy-on-write truly did; ``dataChange=false`` actions —
+        compaction, checkpoints — are skipped, so OPTIMIZE is
+        invisible to incremental consumers; a DV commit is row-level
+        'delete' events for exactly the newly-deleted positions; and a
+        remove of a DV-carrying file, which records that DV, emits only
+        the rows it had left alive. The fold over any range therefore
+        equals the snapshot diff, DVs or not. Requires the referenced
+        data files to still exist (i.e. not vacuumed past
+        ``starting_version``).
 
         The scan itself is ordinary distributed parquet reading of
         exactly the files each commit touched — at 100 TB an
@@ -978,6 +1073,11 @@ class _ReadMixin:
             raise ValueError(
                 f"bad version range [{starting_version}, {ending_version}] "
                 f"for table history 0..{latest}"
+            )
+        if starting_version < versions[0]:
+            raise ValueError(
+                f"versions below {versions[0]} were expired from the log "
+                f"(expire_log); cannot stream changes from {starting_version}"
             )
 
         def change_cols(change: str, v: int, ts: int) -> list[Column]:
@@ -1012,10 +1112,10 @@ class _ReadMixin:
             ts: int,
         ) -> list[DataFrame]:
             """Rows of the given files as change events. ``rel_dv``
-            maps each file to the deletionVector descriptor ACTIVE on
-            it at event time (or None): DV'd positions are excluded —
-            those rows already got their delete events when the DV
-            committed, so replaying them here would double-count.
+            maps each file to the deletionVector its event carries (or
+            None): DV'd positions are excluded — those rows already
+            got their delete events when the DV committed, so
+            replaying them here would double-count.
             Plain table-rooted files are deferred to the batched
             per-schema scan (``batched`` above); DV'd files and a
             clone's absolute source references keep their dedicated
@@ -1073,53 +1173,38 @@ class _ReadMixin:
                 )
             return out
 
-        def dv_delta_deletes(
-            rel: str,
-            new_dv: dict,
-            old_dv: dict | None,
-            schema: T.StructType,
-            v: int,
-            ts: int,
+        def dv_delta(
+            e: ChangeEvent, schema: T.StructType, v: int, ts: int
         ) -> DataFrame:
-            """A DV commit on ``rel`` (remove + re-add carrying the
-            descriptor) is row-level deletes of exactly the NEW
-            sidecar's positions not already in the old one — the
-            anti-join of the old descriptor against the new."""
-            pos = (
-                self.spark.read.parquet(
-                    os.path.join(self.path, new_dv["storagePath"])
-                )
-                .filter(F.col("rel") == rel)
-                .select(F.col("pos").alias("_pos"))
-            )
-            if old_dv is not None:
-                old = (
+            """A DV commit's rows of ``e.path``: the positions in
+            ``e.dv`` not in ``e.dv_old`` — the anti-join of the two
+            sidecars' positions for the file."""
+
+            def positions(dv: dict) -> DataFrame:
+                return (
                     self.spark.read.parquet(
-                        os.path.join(self.path, old_dv["storagePath"])
+                        os.path.join(self.path, dv["storagePath"])
                     )
-                    .filter(F.col("rel") == rel)
+                    .filter(F.col("rel") == e.path)
                     .select(F.col("pos").alias("_pos"))
                 )
-                pos = pos.join(old, ["_pos"], "left_anti")
+
+            pos = positions(e.dv)
+            if e.dv_old is not None:
+                pos = pos.join(positions(e.dv_old), ["_pos"], "left_anti")
             df = (
                 self._reader(
-                    [rel], merge, self._tw_schema(schema, merge)
+                    [e.path], merge, self._tw_schema(schema, merge)
                 )
-                .parquet(os.path.join(self.path, rel))
+                .parquet(os.path.join(self.path, e.path))
                 .withColumn("_pos", F.col("_metadata.row_index"))
             )
             return df.join(pos, ["_pos"], "left_semi").select(
                 *self._logical_casts(schema, set(df.columns)),
-                *change_cols("delete", v, ts),
+                *change_cols(e.change, v, ts),
             )
 
-        if starting_version < versions[0]:
-            raise ValueError(
-                f"versions below {versions[0]} were expired from the log "
-                f"(expire_log); cannot stream changes from {starting_version}"
-            )
-
-        # ONE forward replay of the log tracks the schema in force at
+        # ONE forward walk of the log tracks the schema in force at
         # each version (metadata-only, O(history) log reads total —
         # not a snapshot() replay per version in the range). When the
         # older log was expired, the checkpoint at-or-before the FIRST
@@ -1128,11 +1213,6 @@ class _ReadMixin:
         # range and mis-cast the commits before it.
         parts: list[DataFrame] = []
         schema: T.StructType | None = None
-        # dv_state: file path -> the deletionVector descriptor active
-        # on it at the CURRENT point of the replay — what makes a DV
-        # commit a row-level delete event and keeps a later rewrite's
-        # remove from re-emitting rows the DV already deleted
-        dv_state: dict[str, dict] = {}
         if versions[0] > 0:
             ckpt = self._best_checkpoint_at_or_before(versions[0])
             if ckpt is not None:
@@ -1141,112 +1221,31 @@ class _ReadMixin:
                         schema = T.StructType.fromJson(
                             json.loads(action["metaData"]["schemaString"])
                         )
-                    elif "add" in action and action["add"].get(
-                        "deletionVector"
-                    ):
-                        dv_state[action["add"]["path"]] = action["add"][
-                            "deletionVector"
-                        ]
-        for v in versions:
-            if v > ending_version:
-                break
-            actions = self._read_actions(v)
-            # removed rows were written under the schema in force
-            # BEFORE this commit; added rows under the schema AS OF it
+        for c in self._change_commits(versions[0] - 1, ending_version):
+            # removed and DV-changed files were written under the
+            # schema in force BEFORE this commit; added files under
+            # the schema AS OF it
             schema_before = schema
-            meta = next(
-                (a["metaData"] for a in actions if "metaData" in a), None
-            )
-            if meta is not None:
-                schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            # DV state tracks ALL add/remove actions (OPTIMIZE
-            # materializes DVs away with dataChange=false, which must
-            # still clear the state), captured BEFORE this commit for
-            # event reconstruction
-            dv_before = dict(dv_state)
-            all_adds = [a["add"] for a in actions if "add" in a]
-            all_removes = [a["remove"] for a in actions if "remove" in a]
-            for rm in all_removes:
-                dv_state.pop(rm["path"], None)
-            for ad in all_adds:
-                if ad.get("deletionVector"):
-                    dv_state[ad["path"]] = ad["deletionVector"]
-                else:
-                    dv_state.pop(ad["path"], None)
-            if v < starting_version:
+            if c.schema is not None:
+                schema = c.schema
+            if c.version < starting_version:
                 continue
-            ts = next(
-                (
-                    int(a["commitInfo"].get(
-                        "inCommitTimestamp",
-                        a["commitInfo"].get("timestamp", 0),
-                    ))
-                    for a in actions
-                    if "commitInfo" in a
-                ),
-                0,
-            )
-            data_adds = [
-                ad for ad in all_adds if ad.get("dataChange", True)
-            ]
-            data_removes = [
-                rm["path"]
-                for rm in all_removes
-                if rm.get("dataChange", True)
-            ]
-            # a remove + re-add of the SAME path carrying a (new) DV
-            # descriptor is a deletion-vector commit: the row-level
-            # change is exactly the new sidecar positions not in the
-            # old one — never a delete-all/insert-all of the file
-            remove_set = set(data_removes)
-            dv_commits = {
-                ad["path"]: ad["deletionVector"]
-                for ad in data_adds
-                if ad.get("deletionVector")
-                and ad["path"] in remove_set
-                and ad["deletionVector"] != dv_before.get(ad["path"])
+            v, ts = c.version, c.timestamp_ms
+            era = {"delete": schema_before, "insert": schema}
+            files: dict[str, dict[str, dict | None]] = {
+                "delete": {},
+                "insert": {},
             }
-            plain_removes = [
-                p for p in data_removes if p not in dv_commits
-            ]
-            plain_adds = [
-                ad for ad in data_adds if ad["path"] not in dv_commits
-            ]
-            if plain_removes and schema_before is not None:
-                parts.extend(
-                    reconstruct(
-                        {p: dv_before.get(p) for p in plain_removes},
-                        schema_before,
-                        "delete",
-                        v,
-                        ts,
+            for e in c.events:
+                if e.mode == "anti":
+                    files[e.change][e.path] = e.dv
+                elif schema_before is not None:
+                    parts.append(dv_delta(e, schema_before, v, ts))
+            for change, rel_dv in files.items():
+                if rel_dv and era[change] is not None:
+                    parts.extend(
+                        reconstruct(rel_dv, era[change], change, v, ts)
                     )
-                )
-            if schema_before is not None:
-                for path in sorted(dv_commits):
-                    parts.append(
-                        dv_delta_deletes(
-                            path,
-                            dv_commits[path],
-                            dv_before.get(path),
-                            schema_before,
-                            v,
-                            ts,
-                        )
-                    )
-            if plain_adds:
-                parts.extend(
-                    reconstruct(
-                        {
-                            ad["path"]: ad.get("deletionVector")
-                            for ad in plain_adds
-                        },
-                        schema,
-                        "insert",
-                        v,
-                        ts,
-                    )
-                )
 
         for grp in batched.values():
             schema_g: T.StructType = grp["schema"]

@@ -13,12 +13,14 @@ source (public docs: ``readStream.option("readChangeFeed",...)``).
 
 Execution shape, designed for the API's split:
 
-* DRIVER (``partitions``): pure log-metadata replay — JSON commits
-  are parsed into one InputPartition PER (file, change-kind), with
-  the deletion-vector state walked exactly like ``changes()`` so a DV
-  commit becomes a position-delta delete partition and a rewrite of a
-  DV-carrying file excludes the already-deleted rows. No data is
-  touched on the driver.
+* DRIVER (``partitions``): the deltalog change planner
+  (``MiniDeltaTable._change_commits``, the one ``changes()`` uses)
+  walks the micro-batch's commits ``(start, end]`` and each of its
+  events becomes one InputPartition: a whole file inserted or deleted
+  under its deletion-vector mask, or a DV commit's position delta.
+  Every remove carries the DV of the file it removes, so no log state
+  before ``start`` is replayed or cached. No data is touched on the
+  driver.
 * EXECUTORS (``read``): each partition reads ITS one parquet file
   with pyarrow, applies its DV position mask by file row index, and
   emits Arrow RecordBatches directly (the DataSource API's batch
@@ -76,8 +78,9 @@ Reader`) tails the TABLE's appended rows instead of its change feed —
 the contract of ``spark.readStream.format("delta")``: append commits
 stream, change commits raise unless ``skipChangeCommits`` /
 ``ignoreDeletes``, housekeeping is invisible. It shares this module's
-offset, admission-control, expiry, schema-pin, and Arrow-emission
-machinery.
+planner, offset, admission-control, expiry, schema-pin, and
+Arrow-emission machinery; its change-commit rule is a filter over the
+planner's events.
 """
 
 from __future__ import annotations
@@ -132,8 +135,8 @@ def _read_compatible(
 
 def _log_table(path: str):
     """Log-metadata-only handle: every method used here (versions,
-    _read_actions, snapshot, _read_checkpoint) is pure file I/O —
-    no SparkSession is ever touched, so None is safe."""
+    _read_actions, snapshot, _change_commits) is pure file I/O — no
+    SparkSession is ever touched, so None is safe."""
     from ..sources.deltalog import MiniDeltaTable
 
     return MiniDeltaTable(None, path)
@@ -243,14 +246,6 @@ class MiniDeltaCDFStreamReader(DataSourceStreamReader):
         self._out_schema_json = T.StructType(
             list(snap.schema) + (_CDF_COLS if self._WITH_CDF_COLS else [])
         ).json()
-        # incremental planning cache: DV state as of a fully-planned
-        # version, so sequential micro-batches replay only THEIR
-        # range instead of the whole retained log each time (a
-        # long-lived stream over a long-lived table would otherwise
-        # go quadratic in commits). A retry of an older range — or a
-        # fresh reader after restart — rebuilds from the log.
-        self._state_version: int | None = None
-        self._state_dv: dict[str, dict] = {}
         # (physical, logical, type, is_partition) in logical order —
         # partition columns are absent from the data files; their
         # values ride in each partition's spec and re-type on emission
@@ -332,180 +327,88 @@ class MiniDeltaCDFStreamReader(DataSourceStreamReader):
         if hi <= lo:
             return []
         tbl = _log_table(self._path)
-        versions = tbl.versions()
-        if lo + 1 < versions[0]:
+        oldest = tbl.versions()[0]
+        if lo + 1 < oldest:
             # the checkpoint's next unprocessed commit predates the
             # retained log (expire_log/VACUUM ran while the consumer
             # was down): refusing with the earliest retained version
-            # beats silently resuming with a gap in the change feed
+            # beats silently resuming with a gap in the feed
             raise ValueError(
-                f"cannot resume the change feed at version {lo + 1}: "
-                f"the log has been expired up to version "
-                f"{versions[0]} (earliest retained). Restart the "
-                f"query from a fresh checkpoint with startingVersion "
-                f">= {versions[0]}, or re-seed the consumer from a "
-                "snapshot read."
+                f"cannot resume the stream at version {lo + 1}: the "
+                f"log has been expired up to version {oldest} "
+                f"(earliest retained). Restart the query from a fresh "
+                f"checkpoint with startingVersion >= {oldest}, or "
+                "re-seed the consumer from a snapshot read."
             )
+        from ..sources.deltalog import _parse_partition_values
+
         specs: list[dict[str, Any]] = []
-        # DV state as of ``lo``: fast-forward from the cache when this
-        # batch continues where the last one ended (the steady state —
-        # each micro-batch then reads only ITS versions' metadata);
-        # otherwise replay from the retained log / checkpoint seed
-        if (
-            self._state_version is not None
-            and lo >= self._state_version
-        ):
-            dv_state = dict(self._state_dv)
-            replay_from = self._state_version + 1
-        else:
-            dv_state = {}
-            replay_from = versions[0]
-            if versions[0] > 0:
-                ckpt = tbl._best_checkpoint_at_or_before(versions[0])
-                if ckpt is not None:
-                    for action in tbl._read_checkpoint(ckpt):
-                        add = action.get("add")
-                        if add and add.get("deletionVector"):
-                            dv_state[add["path"]] = add["deletionVector"]
-        for v in versions:
-            if v > hi:
-                break
-            if v < replay_from:
-                continue
-            actions = tbl._read_actions(v)
-            meta = next(
-                (a["metaData"] for a in actions if "metaData" in a), None
-            )
-            if meta is not None and v > lo:
-                import json as _json
-
-                committed = T.StructType.fromJson(
-                    _json.loads(meta["schemaString"])
+        for c in tbl._change_commits(lo, hi):
+            # parsed comparison: JSON-text equality would falsely
+            # kill the stream on a semantically identical schema
+            # serialized with a different key order; historical
+            # schemas the pinned one subsumes (later-added columns
+            # null-fill, types the typeChanges provenance widened
+            # upcast in-scan) replay losslessly and must not stop
+            # the query
+            if (
+                c.schema is not None
+                and c.schema != self._pinned_schema
+                and not _read_compatible(c.schema, self._pinned_schema)
+            ):
+                raise RuntimeError(
+                    f"version {c.version} changes the table schema "
+                    "mid-stream; restart the query to pick up the "
+                    "new schema (the real Delta streaming source "
+                    "stops here too)"
                 )
-                # parsed comparison: JSON-text equality would falsely
-                # kill the stream on a semantically identical schema
-                # serialized with a different key order; historical
-                # schemas the pinned one subsumes (later-added columns
-                # null-fill, types the typeChanges provenance widened
-                # upcast in-scan) replay losslessly and must not stop
-                # the query
-                if committed != self._pinned_schema and not (
-                    _read_compatible(committed, self._pinned_schema)
-                ):
-                    raise RuntimeError(
-                        f"version {v} changes the table schema "
-                        "mid-stream; restart the query to pick up the "
-                        "new schema (the real Delta streaming source "
-                        "stops here too)"
-                    )
-            dv_before = dict(dv_state)
-            all_adds = [a["add"] for a in actions if "add" in a]
-            all_removes = [a["remove"] for a in actions if "remove" in a]
-            for rm in all_removes:
-                dv_state.pop(rm["path"], None)
-            for ad in all_adds:
-                if ad.get("deletionVector"):
-                    dv_state[ad["path"]] = ad["deletionVector"]
-                else:
-                    dv_state.pop(ad["path"], None)
-            if v <= lo:
-                continue
-            ts = next(
-                (
-                    int(a["commitInfo"].get(
-                        "inCommitTimestamp",
-                        a["commitInfo"].get("timestamp", 0),
-                    ))
-                    for a in actions
-                    if "commitInfo" in a
-                ),
-                0,
-            )
-            data_adds = [a for a in all_adds if a.get("dataChange", True)]
-            data_removes = [
-                rm["path"]
-                for rm in all_removes
-                if rm.get("dataChange", True)
-            ]
-            remove_set = set(data_removes)
-            dv_commits = {
-                ad["path"]: ad["deletionVector"]
-                for ad in data_adds
-                if ad.get("deletionVector")
-                and ad["path"] in remove_set
-                and ad["deletionVector"] != dv_before.get(ad["path"])
-            }
-
-            def dv_ref(path, dv):
-                """(absolute sidecar path, rel value to match in it).
-                A sidecar's ``rel`` values are relative to the table
-                that WROTE it: for a shallow clone's ABSOLUTE
-                storagePath that is the SOURCE root, not ours — the
-                same domain translation as ``deltalog._dv_root`` (a
-                filter in the wrong domain would match nothing and
-                silently resurrect DV-deleted rows)."""
-                if dv is None:
-                    return None
-                sp = dv["storagePath"]
-                if os.path.isabs(sp):
-                    sidecar, root = sp, os.path.dirname(os.path.dirname(sp))
-                else:
-                    sidecar, root = os.path.join(self._path, sp), self._path
-                return (
-                    sidecar,
-                    os.path.relpath(os.path.join(self._path, path), root),
-                )
-
-            def spec(path, change, mode, dv=None, dv_old=None, pv=None):
-                from ..sources.deltalog import _parse_partition_values
-
+            for e in self._admit(c):
                 specs.append(
                     {
-                        "file": os.path.join(self._path, path),
-                        "change": change,
-                        "version": v,
-                        "ts_ms": ts,
-                        "mode": mode,
-                        "dv": dv_ref(path, dv),
-                        "dv_old": dv_ref(path, dv_old),
+                        "file": os.path.join(self._path, e.path),
+                        "change": e.change,
+                        "version": c.version,
+                        "ts_ms": c.timestamp_ms,
+                        "mode": e.mode,
+                        "dv": self._dv_ref(tbl, e.path, e.dv),
+                        "dv_old": self._dv_ref(tbl, e.path, e.dv_old),
                         "cols": self._cols,
                         "schema": self._out_schema_json,
                         # partition values in the hive string domain:
                         # adds carry them in the log; removes recover
                         # them from the hive path
                         "pv": (
-                            pv
-                            if pv is not None
-                            else _parse_partition_values(path)
+                            e.partition_values
+                            if e.partition_values is not None
+                            else _parse_partition_values(e.path)
                         ),
                     }
                 )
-
-            for path in data_removes:
-                if path in dv_commits:
-                    continue
-                spec(path, "delete", "anti", dv=dv_before.get(path))
-            for path in sorted(dv_commits):
-                spec(
-                    path,
-                    "delete",
-                    "semi",
-                    dv=dv_commits[path],
-                    dv_old=dv_before.get(path),
-                )
-            for ad in data_adds:
-                if ad["path"] in dv_commits:
-                    continue
-                spec(
-                    ad["path"],
-                    "insert",
-                    "anti",
-                    dv=ad.get("deletionVector"),
-                    pv=ad.get("partitionValues"),
-                )
-        self._state_version = hi
-        self._state_dv = dict(dv_state)
         return [_CDFPartition(s) for s in specs]
+
+    def _admit(self, commit) -> list:
+        """The events of ``commit`` this source emits: all of them —
+        the change feed is every row-level change."""
+        return commit.events
+
+    def _dv_ref(
+        self, tbl, path: str, dv: dict | None
+    ) -> tuple[str, str] | None:
+        """(absolute sidecar path, rel value to match in it). A
+        sidecar's ``rel`` values are relative to the table that WROTE
+        it (``_dv_root``): for a shallow clone's ABSOLUTE storagePath
+        that is the SOURCE root, not ours — a filter in the wrong
+        domain would match nothing and silently resurrect DV-deleted
+        rows."""
+        if dv is None:
+            return None
+        sp = dv["storagePath"]
+        return (
+            os.path.join(self._path, sp),
+            os.path.relpath(
+                os.path.join(self._path, path), tbl._dv_root(sp)
+            ),
+        )
 
     # -- execution (executors) ---------------------------------------------
 
@@ -675,8 +578,8 @@ class MiniDeltaTableStreamReader(MiniDeltaCDFStreamReader):
       consumers who need row-level changes use ``minidelta_cdf``;
     * ``dataChange=false`` housekeeping (OPTIMIZE / REORG / bloom
       re-commits) is invisible, like the real source;
-    * shared with the CDF source (same base): startingVersion/
-      "latest", maxVersionsPerTrigger + soft maxBytesPerTrigger
+    * shared with the CDF source (same base): the change planner,
+      startingVersion/"latest", maxVersionsPerTrigger + soft maxBytesPerTrigger
       admission control, expired-log refusal naming the earliest
       retained version, parsed-schema mid-stream change detection,
       executor-side Arrow batch emission, hive partition-value
@@ -695,97 +598,26 @@ class MiniDeltaTableStreamReader(MiniDeltaCDFStreamReader):
         self._ignore_deletes = flag("ignoredeletes")
         self._skip_change = flag("skipchangecommits")
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        lo, hi = int(start["version"]), int(end["version"])
-        self._anchor = max(self._anchor, lo, hi)
-        if hi <= lo:
+    def _admit(self, commit) -> list:
+        """The change-commit rule as a filter over the planner's
+        events: an append (only whole-file inserts) streams its files;
+        any other data commit is skipped under ``skipChangeCommits``,
+        skipped under ``ignoreDeletes`` when it only deletes whole
+        files, and raises otherwise."""
+        kinds = {(e.change, e.mode) for e in commit.events}
+        if kinds <= {("insert", "anti")}:
+            return commit.events
+        if self._skip_change or (
+            self._ignore_deletes and kinds == {("delete", "anti")}
+        ):
             return []
-        tbl = _log_table(self._path)
-        versions = tbl.versions()
-        if lo + 1 < versions[0]:
-            raise ValueError(
-                f"cannot resume the table stream at version {lo + 1}: "
-                f"the log has been expired up to version {versions[0]} "
-                f"(earliest retained). Restart the query from a fresh "
-                f"checkpoint with startingVersion >= {versions[0]}."
-            )
-        import json as _json
-
-        specs: list[dict[str, Any]] = []
-        for v in versions:
-            if v > hi:
-                break
-            if v <= lo:
-                continue
-            actions = tbl._read_actions(v)
-            meta = next(
-                (a["metaData"] for a in actions if "metaData" in a), None
-            )
-            if meta is not None:
-                committed = T.StructType.fromJson(
-                    _json.loads(meta["schemaString"])
-                )
-                if committed != self._pinned_schema and not (
-                    _read_compatible(committed, self._pinned_schema)
-                ):
-                    raise RuntimeError(
-                        f"version {v} changes the table schema "
-                        "mid-stream; restart the query to pick up the "
-                        "new schema (the real Delta streaming source "
-                        "stops here too)"
-                    )
-            adds = [
-                a["add"]
-                for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            ]
-            removes = [
-                a["remove"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            if removes:
-                if self._skip_change:
-                    continue
-                if self._ignore_deletes and not adds:
-                    continue
-                raise RuntimeError(
-                    f"version {v} deletes or rewrites existing rows; "
-                    "the table stream source only tails appends. Set "
-                    "skipChangeCommits=true to skip such commits "
-                    "(ignoreDeletes=true for remove-only commits), or "
-                    "consume row-level changes with format "
-                    "'minidelta_cdf'."
-                )
-            ts = next(
-                (
-                    int(a["commitInfo"].get(
-                        "inCommitTimestamp",
-                        a["commitInfo"].get("timestamp", 0),
-                    ))
-                    for a in actions
-                    if "commitInfo" in a
-                ),
-                0,
-            )
-            for ad in adds:
-                specs.append(
-                    {
-                        "file": os.path.join(self._path, ad["path"]),
-                        "change": "insert",
-                        "version": v,
-                        "ts_ms": ts,
-                        # an append's fresh add never carries a DV (a
-                        # DV add pairs with a remove → change commit)
-                        "mode": "anti",
-                        "dv": None,
-                        "dv_old": None,
-                        "cols": self._cols,
-                        "schema": self._out_schema_json,
-                        "pv": ad.get("partitionValues"),
-                    }
-                )
-        return [_CDFPartition(s) for s in specs]
+        raise RuntimeError(
+            f"version {commit.version} deletes or rewrites existing "
+            "rows; the table stream source only tails appends. Set "
+            "skipChangeCommits=true to skip such commits "
+            "(ignoreDeletes=true for remove-only commits), or "
+            "consume row-level changes with format 'minidelta_cdf'."
+        )
 
 
 class MiniDeltaStreamDataSource(DataSource):

@@ -8,7 +8,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
+import textwrap
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -266,10 +270,10 @@ def test_cdf_stream_latest_and_schema_change_guard(spark, base):
 
 
 def test_cdf_partitions_incremental_cache_parity(spark, base):
-    """Sequential micro-batches fast-forward the planner's DV state
-    from the cache; the planned partitions must equal a cold reader's
-    for every range shape — continuation, gap, and out-of-order retry
-    (which rebuilds)."""
+    """A reader plans each micro-batch from its own commits only, so
+    the partitions a reader that already planned earlier batches
+    produces must equal a fresh reader's for every range shape —
+    continuation, gap, and out-of-order retry."""
     t = MiniDeltaTable(spark, os.path.join(base, "c"))
     df = spark.range(0, 50).select(
         F.col("id").cast("string").alias("k"), (F.col("id") * 2).alias("v")
@@ -744,3 +748,86 @@ def test_stream_seeds_from_v2_checkpoint_after_expiry(spark, base):
     # update's preimage delete is exactly one row, not a file replay
     v4 = got.filter(F.col("_commit_version") == 4)
     assert v4.filter(F.col("_change_type") == "delete").count() == 1
+
+
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_cdf_from_checkpointed_dv_commit_after_expiry(spark, base, mode):
+    """A change feed starting at a DV commit that is also the oldest
+    retained state (checkpointed there, everything before expired)
+    shows exactly that commit's deletes. The remove records the DV it
+    replaces, so nothing comes from the checkpoint — whose adds
+    already carry the NEW DV and would turn the commit into a
+    delete-all/insert-all of every touched file's surviving rows."""
+    t = MiniDeltaTable(spark, os.path.join(base, "t"), checkpoint_interval=0)
+    df = spark.range(0, 40).select(
+        F.col("id").cast("string").alias("k"), F.col("id").alias("v")
+    )
+    t.write(df)  # v0
+    t.write(df.filter(F.col("v") < 3), mode="append")  # v1
+    t.delete(F.col("v") < 10, use_dv=True)  # v2: DV commit
+    t.checkpoint()
+    assert t.expire_log() == [0, 1]
+    if mode == "batch":
+        got = t.changes(2, 2)
+    else:
+        out = os.path.join(base, "events")
+        _drain(
+            read_cdf_stream(spark, t.path, starting_version=2),
+            os.path.join(base, "ckpt"),
+            out,
+        )
+        got = spark.read.parquet(out)
+    rows = got.select("_change_type", "v").collect()
+    assert {r["_change_type"] for r in rows} == {"delete"}
+    assert sorted(r["v"] for r in rows) == sorted([*range(10), 0, 1, 2])
+
+
+def test_python_workers_find_package_from_any_cwd(tmp_path):
+    """``get_spark`` hands Python workers the package's parent
+    directory: a stream through the package's Python data source
+    drains from a working directory outside the repository with no
+    PYTHONPATH set."""
+    repo = Path(__file__).resolve().parent.parent
+    script = tmp_path / "drain.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {str(repo)!r})
+            from pyspark.sql import functions as F
+            from ecommerce_lakehouse_platform_spark.session import get_spark
+            from ecommerce_lakehouse_platform_spark.sources.deltalog import (
+                MiniDeltaTable,
+            )
+            from ecommerce_lakehouse_platform_spark.streaming.cdf_source import (
+                read_cdf_stream,
+            )
+
+            spark = get_spark(cpus=1, shuffle_partitions=1)
+            t = MiniDeltaTable(spark, {str(tmp_path / "t")!r})
+            t.write(spark.range(5).select(F.col("id").alias("v")))
+            out = {str(tmp_path / "out")!r}
+            q = (
+                read_cdf_stream(spark, t.path)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", {str(tmp_path / "ckpt")!r})
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            print("ROWS", spark.read.parquet(out).count())
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "ROWS 5" in proc.stdout, proc.stderr[-3000:]

@@ -188,26 +188,12 @@ def test_changed_queries_sit_inside_driver_window():
     from ecommerce_lakehouse_platform_spark import registry
 
     changed = {
-        # fixture memo now rebuilds a table whose data files vanished
-        "ext_delta_time_travel",
+        # change events come from one planner; removes carry their DV
         "ext_delta_cdf_fold",
         "ext_delta_merge_cdf",
         "ext_delta_v2_checkpoint",
+        "ext_delta_time_travel",
         "stream_cdf_source",
-        # PQ block fits run under the caller's job group
-        "ext_pq_encode",
-        "ext_pq_adc_search",
-        # shingle pair generators are always self-cleaning
-        "ext_dedup_ngram_jaccard",
-        "ext_dedup_clusters",
-        "ext_dedup_keep_best",
-        "ext_dedup_containment",
-        # nested oracles composed from ORACLES, not spliced tokens
-        "ext_ann_recall",
-        "ext_running_gold_totals",
-        # import-cycle workarounds removed from the query or its oracle
-        "ext_langid_confusion",
-        "stream_interval_join_outer",
     }
     window = set(registry._DRIVER_WINDOW)
     assert changed <= window, sorted(changed - window)
