@@ -21,17 +21,22 @@ deliberately small subset:
 * Commit atomicity via put-if-absent: the actions are staged to a temp
   file and published with ``os.link`` (fails if the version already
   exists) — the same winner-takes-the-version contract the protocol
-  requires of a LogStore. Losers resolve with the protocol's
-  optimistic-concurrency rules (``_commit_resolving``): logically
-  disjoint commits REBASE onto the winner (blind appends, DML and
-  OPTIMIZE over untouched files, disjoint replaceWhere backfills),
-  and genuine conflicts surface TYPED — ``ConcurrentAppendError``
-  (serializable only), ``ConcurrentDeleteReadError``,
-  ``ConcurrentDeleteDeleteError``, ``MetadataChangedError``,
-  ``ProtocolChangedError``, ``ConcurrentTransactionError`` — the
-  public Delta exception taxonomy, under both isolation levels
-  (``write_serializable`` default with its documented append-vs-DML
-  anomaly, ``serializable`` strict).
+  requires of a LogStore. Every writer commits through one resolver,
+  ``_commit_resolving``, which writes the ``commitInfo`` and settles a
+  lost race with the protocol's optimistic-concurrency rules against
+  the writer's READ SET, a predicate over file actions: a blind
+  append reads nothing, a ``replace_where`` overwrite its partitions,
+  DML and OPTIMIZE the files they remove, and a full overwrite,
+  RESTORE or metadata change every file. Logically disjoint commits
+  REBASE onto the winner; genuine conflicts surface TYPED —
+  ``ConcurrentAppendError``, ``ConcurrentDeleteReadError``,
+  ``ConcurrentDeleteDeleteError``, ``MetadataChangedError`` (any
+  winning ``metaData``, so no commit slips past a concurrent
+  constraint), ``ProtocolChangedError``,
+  ``ConcurrentTransactionError`` — the public Delta exception
+  taxonomy, under both isolation levels (``write_serializable``
+  default with its documented append-vs-DML anomaly,
+  ``serializable`` strict). Table-creating commits never rebase.
 * Snapshot = replay of versions 0..N: last ``metaData`` wins, active
   file set = adds minus removes. ``read(version=...)`` is time travel,
   and it replays the schema AS OF that version, so reads across an
@@ -59,7 +64,7 @@ Also implemented, because each is the piece that matters at 100 TB:
   checkpoint's consolidated state plus only the JSON commits AFTER it,
   so planning cost is O(files + commits-since-checkpoint) instead of
   O(all commits ever). Time travel to pre-checkpoint versions falls
-  back to full JSON replay (the JSON log is retained).
+  back to full JSON replay while the JSON log is retained.
 * **Change data feed** (``changes(from, to)``): row-level
   insert/delete stream between versions with ``_change_type`` /
   ``_commit_version`` / ``_commit_timestamp`` columns, derived from
@@ -82,16 +87,18 @@ Every ``remove`` carries the descriptor of the file it removes, so the
 change planner reads a DV commit's row-level events from the commit
 alone.
 
+Column mapping (mode=name: ``rename_column``/``drop_column`` as
+metadata-only commits) and log expiry (``expire_log`` deletes the JSON
+commits older than the newest checkpoint) are implemented too.
+
 Deliberately NOT implemented (documented subset, all honest gaps):
 multi-cluster LogStores (os.link put-if-absent covers single-host
-concurrency, which is what this runtime can exercise), the real DV
-roaring-bitmap encoding (positions are a parquet relation here),
-column mapping, and expired-log cleanup (JSON
-commits are kept forever, so pre-checkpoint time travel always works
-here; the real writer eventually prunes them). Data files are written
-by the stock Spark parquet writer, so everything under the log is
-ordinary whole-stage-codegen scan/write at any scale — the log adds
-metadata-only work proportional to the number of FILES, never rows.
+concurrency, which is what this runtime can exercise) and the real DV
+roaring-bitmap encoding (positions are a parquet relation here). Data
+files are written by the stock Spark parquet writer, so everything
+under the log is ordinary whole-stage-codegen scan/write at any scale
+— the log adds metadata-only work proportional to the number of
+FILES, never rows.
 """
 
 from __future__ import annotations

@@ -1,22 +1,18 @@
 """Shared ground for the deltalog package: typed concurrency/
 schema exceptions, the replayed ``Snapshot`` dataclass, and the
-module-level helpers (atomic publish, hive partition parsing, parquet
-footer stats). Mechanical split of the original ``deltalog.py`` (r13);
-bodies are verbatim."""
+module-level helpers (atomic publish, action builders, hive partition
+parsing, parquet footer stats)."""
 
 from __future__ import annotations
 
-import copy
 import json
 import os
-import shutil
-import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -162,6 +158,32 @@ def _remove_action(
     if add.get("deletionVector"):
         rm["deletionVector"] = add["deletionVector"]
     return {"remove": rm}
+
+
+def _metadata_action(
+    schema: T.StructType,
+    partition_columns: list[str],
+    configuration: dict[str, str],
+    now_ms: int,
+) -> dict[str, Any]:
+    """The ``metaData`` action committing ``schema``, the partition
+    layout and the table properties (CHECK constraints included) as
+    the table's metadata from this version on."""
+    return {
+        "metaData": {
+            "id": str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema.json(),
+            "partitionColumns": list(partition_columns),
+            "configuration": dict(configuration),
+            "createdTime": now_ms,
+        }
+    }
+
+
+def _every_file(add: dict[str, Any]) -> bool:
+    """Read predicate of a transaction that read the whole table."""
+    return True
 
 
 def _commit_timestamp(info: dict[str, Any]) -> int:

@@ -1,33 +1,25 @@
-"""Write side: write()/staging, in-commit timestamps, row tracking injection, OCC commit-with-rebase, the raw commit.
-
-Mechanical split of the original single-module ``deltalog.py`` (r13):
-one mixin per concern, assembled into ``MiniDeltaTable`` by the
-package ``__init__``. Zero behavior change — method bodies are
-verbatim; see the package docstring for the protocol overview and
-reference citations."""
+"""Write side: write()/staging, the commit-time injectors (in-commit
+timestamps, row tracking) and the one commit path, the conflict
+resolver over the raw put-if-absent commit. The package docstring has
+the protocol overview."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import json  # noqa: F401
-import os  # noqa: F401
-import shutil  # noqa: F401
-import time  # noqa: F401
-import uuid  # noqa: F401
-from typing import Any  # noqa: F401
-from urllib.parse import unquote  # noqa: F401
+import copy
+import json
+import os
+import shutil
+import time
+import uuid
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import _base
-from ._base import (  # noqa: F401
-    _LAST_CHECKPOINT,
-    _LOG_DIR,
-    _HIVE_NULL,
-    _SIDECAR_DIR,
-    CommitConflictError,
+from ._base import (
     ConcurrentAppendError,
     ConcurrentDeleteDeleteError,
     ConcurrentDeleteReadError,
@@ -40,13 +32,12 @@ from ._base import (  # noqa: F401
     Snapshot,
     _all_match,
     _atomic_publish,
-    _checkpoint_arrow_schema,
     _column_nonnull_count,
     _commit_timestamp,
+    _every_file,
+    _metadata_action,
     _parse_partition_values,
     _remove_action,
-    _stats_overlap,
-    _stats_value,
 )
 
 
@@ -63,23 +54,18 @@ class _CommitMixin:
         return self.snapshot().app_versions.get(app_id)
 
     @staticmethod
-    def _matching_rels(
-        snap: Snapshot, replace_where: dict[str, Any]
-    ) -> set[str]:
-        """Active files whose partitionValues match the filter, in the
-        hive string domain (same rule as files_for)."""
+    def _in_partitions(replace_where: dict[str, Any]):
+        """Read predicate of a ``replace_where`` overwrite: files whose
+        partitionValues match the filter, in the hive string domain
+        (same rule as files_for)."""
         wanted = {
             k: (None if v is None else str(v))
             for k, v in replace_where.items()
         }
-        return {
-            rel
-            for rel, add in snap.files.items()
-            if all(
-                (add.get("partitionValues") or {}).get(k) == v
-                for k, v in wanted.items()
-            )
-        }
+        return lambda add: all(
+            (add.get("partitionValues") or {}).get(k) == v
+            for k, v in wanted.items()
+        )
 
     def write(
         self,
@@ -95,7 +81,10 @@ class _CommitMixin:
 
         ``mode="overwrite"`` removes every previously active file in
         the same commit (the reference's full-rewrite materialization,
-        02_silver_transform.py:33-35); ``mode="append"`` only adds.
+        02_silver_transform.py:33-35); ``mode="append"`` only adds,
+        and a blind append that loses a put-if-absent race rebases past
+        any winner but a metaData change, a protocol upgrade or a
+        ``txn`` of the same app.
         Existing-table writes enforce the logged schema unless
         ``overwrite_schema=True`` (overwrite only), which commits a new
         ``metaData`` action — the ``overwriteSchema`` contract.
@@ -486,33 +475,6 @@ class _CommitMixin:
                     or (step < 0 and ext < int(hwm))
                 ):
                     identity_hwms[iname] = ext
-        version = (prior.version + 1) if prior is not None else 0
-        now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "operationParameters": {
-                        "mode": mode.upper(),
-                        "partitionBy": json.dumps(partition_by),
-                        **(
-                            {
-                                "replaceWhere": json.dumps(
-                                    {
-                                        k: None if v is None else str(v)
-                                        for k, v in replace_where.items()
-                                    },
-                                    sort_keys=True,
-                                )
-                            }
-                            if replace_where is not None
-                            else {}
-                        ),
-                    },
-                }
-            }
-        ]
         new_meta = (
             prior is None
             or overwrite_schema
@@ -550,128 +512,59 @@ class _CommitMixin:
                 ]
             )
             new_meta = True
+        now_ms = int(time.time() * 1000)
+        actions: list[dict[str, Any]] = []
         if prior is None:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
         if new_meta:
+            # table properties (CHECK constraints included) survive a
+            # schema evolution
+            config = dict(prior.configuration if prior else {})
+            if evolved_added_cols:
+                config[self._EVOLVED_KEY] = "true"
             actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": meta_schema.json(),
-                        "partitionColumns": partition_by,
-                        # table properties (CHECK constraints included)
-                        # survive a schema evolution
-                        "configuration": {
-                            **(prior.configuration if prior else {}),
-                            **(
-                                {self._EVOLVED_KEY: "true"}
-                                if evolved_added_cols
-                                else {}
-                            ),
-                        },
-                        "createdTime": now_ms,
-                    }
-                }
+                _metadata_action(meta_schema, partition_by, config, now_ms)
             )
         if txn is not None:
             actions.append(
                 {"txn": {"appId": str(txn[0]), "version": int(txn[1])}}
             )
-        victims: set[str] = set()
-        if mode == "overwrite" and prior is not None:
-            victims = (
-                set(prior.files)
-                if replace_where is None
-                else self._matching_rels(prior, replace_where)
+        parameters = {
+            "mode": mode.upper(),
+            "partitionBy": json.dumps(partition_by),
+        }
+        if replace_where is not None:
+            parameters["replaceWhere"] = json.dumps(
+                {
+                    k: None if v is None else str(v)
+                    for k, v in replace_where.items()
+                },
+                sort_keys=True,
             )
-            for rel in sorted(victims):
-                actions.append(_remove_action(prior.files[rel], now_ms))
+        reads = None  # a blind append reads (and removes) nothing
+        if mode == "overwrite" and prior is not None:
+            # an overwrite reads the replace_where partitions, else
+            # every file, and removes exactly what it read
+            reads = (
+                _every_file
+                if replace_where is None
+                else self._in_partitions(replace_where)
+            )
+            actions.extend(
+                _remove_action(add, now_ms)
+                for _, add in sorted(prior.files.items())
+                if reads(add)
+            )
         actions.extend({"add": add} for add in adds)
-        # Conflict resolution on a lost put-if-absent race, per the
-        # Delta protocol's read-set rules:
-        # - BLIND APPENDS read nothing, so they conflict only with a
-        #   concurrent metadata/protocol change — detected by
-        #   re-checking schema and partition layout against the new
-        #   latest snapshot before retrying at the next version.
-        # - PARTITION-SCOPED OVERWRITES (replace_where) read exactly
-        #   the scoped partitions: if the winner left the matching
-        #   file set untouched (a disjoint-partition backfill), the
-        #   commit rebases; if the set changed — the winner wrote
-        #   into or removed from our partitions — the conflict
-        #   surfaces.
-        # Full overwrites (which read every file they remove) and
-        # table-creating writes still surface the conflict to the
-        # caller.
-        rebasable = (
-            prior is not None
-            and (mode == "append" or replace_where is not None)
-            # an identity-assigning commit must NOT rebase: its values
-            # and watermark were computed against the lost snapshot,
-            # and replaying them past the winner would mint duplicates
-            # — the conflict surfaces and the caller's retry re-assigns
-            and not identity_hwms
+        return self._commit_resolving(
+            prior,
+            actions,
+            "WRITE",
+            parameters,
+            reads=reads,
         )
-        attempts = 0
-        # each attempt commits a pristine copy: the commit-time
-        # injectors (row-id watermark, in-commit timestamp) mutate the
-        # action list against the attempt's predecessor, and a rebase
-        # must recompute them against the WINNER's chain — retrying
-        # the mutated list would reuse a stale row-id watermark and
-        # hand two writers overlapping ids
-        pristine = copy.deepcopy(actions)
-        while True:
-            try:
-                attempt = copy.deepcopy(pristine)
-                self._commit(version, attempt)
-                return version
-            except ConcurrentWriteError:
-                attempts += 1
-                if not rebasable or attempts > 50:
-                    raise
-                latest = self.snapshot()
-                if txn is not None:
-                    # the idempotent-sink ledger: a winner advancing
-                    # the SAME app id means our batch may already be
-                    # applied — rebasing would double-apply it
-                    for w in range(version, latest.version + 1):
-                        for a in self._read_actions(w):
-                            wt = a.get("txn")
-                            if wt and wt.get("appId") == str(txn[0]):
-                                raise ConcurrentTransactionError(
-                                    "append lost to a concurrent "
-                                    "transaction for app "
-                                    f"{txn[0]!r} at version {w}",
-                                    winning_version=w,
-                                )
-                if [(f.name, f.dataType) for f in latest.schema] != [
-                    (f.name, f.dataType) for f in df.schema
-                ] or latest.partition_columns != list(partition_by):
-                    # winner changed the table's shape under us
-                    raise MetadataChangedError(
-                        f"{mode.upper()} lost to a schema or "
-                        "partition-layout change",
-                        winning_version=latest.version,
-                    )
-                if replace_where is not None:
-                    now_matching = self._matching_rels(
-                        latest, replace_where
-                    )
-                    if now_matching - victims:
-                        raise ConcurrentAppendError(
-                            "replaceWhere lost to a winner that "
-                            "ADDED files into the replaced scope",
-                            winning_version=latest.version,
-                        )
-                    if victims - now_matching:
-                        raise ConcurrentDeleteReadError(
-                            "replaceWhere lost to a winner that "
-                            "REMOVED files from the replaced scope",
-                            winning_version=latest.version,
-                        )
-                version = latest.version + 1
 
     def _stage_data_files(
         self,
@@ -723,10 +616,41 @@ class _CommitMixin:
             shutil.rmtree(tmp, ignore_errors=True)
         return adds
 
+    def _predecessor(self, version: int) -> list[dict[str, Any]]:
+        """The actions of commit ``version - 1``, which the commit-time
+        injectors chain from: a commit on a table with in-commit
+        timestamps or row tracking restates its ICT and its row-id
+        watermark, so the next commit detects either feature from its
+        predecessor alone. When that JSON has been expired, the latest
+        snapshot's configuration and domain metadata stand in for
+        it."""
+        if version == 0:
+            return []
+        try:
+            return self._read_actions(version - 1)
+        except OSError:
+            snap = self.snapshot()
+            return [
+                _metadata_action(
+                    snap.schema,
+                    snap.partition_columns,
+                    snap.configuration,
+                    int(time.time() * 1000),
+                ),
+                *(
+                    {"domainMetadata": {"domain": d, "configuration": c}}
+                    for d, c in snap.domain_metadata.items()
+                    # a switched-off table keeps its row-id domain, but
+                    # its predecessor would not have restated it
+                    if d != self._RT_DOMAIN
+                    or snap.configuration.get(self._RT_KEY) == "true"
+                ),
+            ]
+
     _ICT_KEY = "delta.enableInCommitTimestamps"
 
     def _inject_in_commit_timestamp(
-        self, version: int, actions: list[dict[str, Any]]
+        self, actions: list[dict[str, Any]], prev: list[dict[str, Any]]
     ) -> None:
         """When the table feature is on, stamp this commit's
         ``commitInfo`` with a MONOTONIC ``inCommitTimestamp`` =
@@ -736,47 +660,27 @@ class _CommitMixin:
         mtimes or writer clocks, so time travel can never be reordered
         by clock skew. Feature detection is O(1): the enabling commit
         carries a metaData action with the config flag; every later
-        commit sees its predecessor's ICT (the chain property). Only
-        when the predecessor's JSON has been expired does this fall
-        back to a snapshot replay for the config."""
+        commit sees its predecessor ``prev``'s ICT (the chain
+        property)."""
         info = next(
             (a["commitInfo"] for a in actions if "commitInfo" in a), None
         )
         if info is None or "inCommitTimestamp" in info:
             return
-        meta = next(
-            (a["metaData"] for a in actions if "metaData" in a), None
+        prev_info = next(
+            (a["commitInfo"] for a in prev if "commitInfo" in a), {}
         )
-        prev_info: dict[str, Any] = {}
-        if version > 0:
-            try:
-                prev_info = next(
-                    (
-                        a["commitInfo"]
-                        for a in self._read_actions(version - 1)
-                        if "commitInfo" in a
-                    ),
-                    {},
-                )
-            except OSError:
-                prev_info = {}
-        if meta is not None:
-            enabled = (
-                meta.get("configuration", {}).get(self._ICT_KEY) == "true"
-            )
-        elif "inCommitTimestamp" in prev_info:
-            enabled = True
-        elif version > 0 and not prev_info:
-            # predecessor expired: the config is the source of truth
-            try:
-                enabled = (
-                    self.snapshot().configuration.get(self._ICT_KEY)
-                    == "true"
-                )
-            except Exception:
-                enabled = False
-        else:
-            enabled = False
+        # this commit's own metaData decides, else the predecessor's
+        # (an expired predecessor's stand-in restates the config)
+        meta = next(
+            (a["metaData"] for a in [*actions, *prev] if "metaData" in a),
+            None,
+        )
+        enabled = (
+            "inCommitTimestamp" in prev_info
+            if meta is None
+            else meta.get("configuration", {}).get(self._ICT_KEY) == "true"
+        )
         if not enabled:
             return
         info["inCommitTimestamp"] = max(
@@ -789,7 +693,7 @@ class _CommitMixin:
     _RT_MAT_TAG = "delta.rowTracking.materialized"
 
     def _inject_row_tracking(
-        self, version: int, actions: list[dict[str, Any]]
+        self, actions: list[dict[str, Any]], prev: list[dict[str, Any]]
     ) -> None:
         """When row tracking is on, assign ``baseRowId`` to every add
         action that lacks one (fresh files: row id = baseRowId + file
@@ -799,10 +703,10 @@ class _CommitMixin:
         Restating the domain every commit keeps feature detection O(1)
         (the chain property, same trick as the ICT injector): the
         enabling commit carries the metaData flag, every later commit
-        sees its predecessor's domainMetadata. Re-committed adds (DV
-        re-adds, bloom tag re-commits, RESTORE, checkpoint restates)
-        carry their original baseRowId in the copied payload, so the
-        assignment is idempotent."""
+        sees its predecessor ``prev``'s domainMetadata. Re-committed
+        adds (DV re-adds, bloom tag re-commits, RESTORE, checkpoint
+        restates) carry their original baseRowId in the copied
+        payload, so the assignment is idempotent."""
         if any(
             a.get("domainMetadata", {}).get("domain") == self._RT_DOMAIN
             for a in actions
@@ -811,44 +715,28 @@ class _CommitMixin:
             # (enable path); an unrelated domainMetadata action must
             # not suppress baseRowId assignment, or later
             # read(with_row_ids=True) raises on adds without one
-        meta = next(
-            (a["metaData"] for a in actions if "metaData" in a), None
+        prev_dm = next(
+            (
+                dm.get("configuration")
+                for dm in (a.get("domainMetadata") for a in prev)
+                if dm and dm["domain"] == self._RT_DOMAIN
+                and not dm.get("removed")
+            ),
+            None,
         )
-        prev_dm: str | None = None
-        prev_readable = False
-        if version > 0:
-            try:
-                for a in self._read_actions(version - 1):
-                    prev_readable = True
-                    dm = a.get("domainMetadata")
-                    if dm and dm["domain"] == self._RT_DOMAIN and not dm.get(
-                        "removed"
-                    ):
-                        prev_dm = dm.get("configuration")
-            except OSError:
-                prev_readable = False
-        if meta is not None:
-            enabled = (
-                meta.get("configuration", {}).get(self._RT_KEY) == "true"
-            )
-            if enabled and prev_dm is None and version > 0:
-                # metadata commit on an already-tracked table: the
-                # watermark lives in the predecessor chain / snapshot
-                snap = self.snapshot()
-                prev_dm = snap.domain_metadata.get(self._RT_DOMAIN)
-        elif prev_dm is not None:
-            enabled = True
-        elif version > 0 and not prev_readable:
-            try:
-                snap = self.snapshot()
-                enabled = snap.configuration.get(self._RT_KEY) == "true"
-                prev_dm = snap.domain_metadata.get(self._RT_DOMAIN)
-            except Exception:
-                enabled = False
-        else:
-            enabled = False
+        meta = next((a["metaData"] for a in actions if "metaData" in a), None)
+        enabled = (
+            prev_dm is not None
+            if meta is None
+            else meta.get("configuration", {}).get(self._RT_KEY) == "true"
+        )
         if not enabled:
             return
+        if prev_dm is None and meta is not None and prev:
+            # a metadata commit turning row tracking back on (set after
+            # unset, RESTORE across the enable): its predecessor did
+            # not restate the watermark, but the snapshot still holds it
+            prev_dm = self.snapshot().domain_metadata.get(self._RT_DOMAIN)
         hwm = -1
         if prev_dm:
             hwm = int(json.loads(prev_dm).get("rowIdHighWaterMark", -1))
@@ -879,16 +767,19 @@ class _CommitMixin:
 
     def _commit_resolving(
         self,
-        snap: Snapshot,
+        snap: Snapshot | None,
         actions: list[dict[str, Any]],
         operation: str,
+        parameters: dict[str, Any],
         isolation: str = "write_serializable",
-        read_rels: set[str] | None = None,
-        max_attempts: int = 50,
+        reads: Callable[[dict[str, Any]], bool] | None = None,
     ) -> int:
-        """Commit ``actions`` at ``snap.version + 1``, resolving lost
-        put-if-absent races with the public Delta protocol's conflict
-        rules: replay every winning commit's actions against this
+        """Commit ``actions`` at ``snap.version + 1`` (version 0 when
+        ``snap`` is None: a table-creating commit) behind a
+        ``commitInfo`` naming ``operation`` and ``parameters``: the
+        one commit path every writer takes. A lost put-if-absent race
+        resolves with the public Delta protocol's conflict rules:
+        replay every winning commit's actions against this
         transaction's READ and REMOVE sets and either REBASE (retry
         verbatim at the next version — the staged files are already
         on disk and still valid) or raise the matching typed conflict:
@@ -900,128 +791,143 @@ class _CommitMixin:
         * ``metaData`` action        → :class:`MetadataChangedError`
         * ``txn`` for our app id     → :class:`ConcurrentTransactionError`
         * remove ∩ our removes       → :class:`ConcurrentDeleteDeleteError`
-        * remove ∩ our reads         → :class:`ConcurrentDeleteReadError`
-        * dataChange add, isolation ``serializable``, and we read
+        * remove of a file we read   → :class:`ConcurrentDeleteReadError`
+        * dataChange add our read predicate matches, or any dataChange
+          add under ``isolation="serializable"`` when we read
           anything                   → :class:`ConcurrentAppendError`
           (the default ``write_serializable`` level admits blind
-          appends against DML — Delta's documented anomaly; pass
-          ``isolation="serializable"`` for strict behavior)
+          appends against DML — Delta's documented anomaly)
 
         The REMOVE set is derived from ``actions`` (their remove
-        paths); ``read_rels`` defaults to it — the touched-file model
-        of predicate DML, where untouched files neither constrain nor
-        are constrained by the winner. Each attempt re-commits a
-        pristine deep copy of ``actions`` so the commit-time injectors
-        (row-id assignment against the WINNER's high watermark,
-        in-commit timestamps against the winner's clock chain) always
-        compute against the true predecessor."""
+        paths). ``reads`` is the read set as a predicate over ``add``
+        payloads (the protocol's read-predicate model); it defaults to
+        the remove set — the touched-file model of predicate DML,
+        where untouched files neither constrain nor are constrained by
+        the winner, and a blind append, which removes nothing, reads
+        nothing. A table-creating commit never rebases: the lost race
+        surfaces as is. An identity-assigning write needs no exception:
+        the watermark it advanced was read from the snapshot's
+        ``metaData``, and any winner that advanced it too committed
+        ``metaData``, which conflicts. Each attempt re-commits a pristine deep copy of
+        ``actions`` so the commit-time injectors (row-id assignment
+        against the WINNER's high watermark, in-commit timestamps
+        against the winner's clock chain) always compute against the
+        true predecessor."""
         if isolation not in ("write_serializable", "serializable"):
             raise ValueError(
                 "isolation must be 'write_serializable' or "
                 f"'serializable', got {isolation!r}"
             )
-        self._assert_writer_features(snap)
+        if snap is not None:
+            self._assert_writer_features(snap)
+        pristine: list[dict[str, Any]] = [
+            {
+                "commitInfo": {
+                    "timestamp": int(time.time() * 1000),
+                    "operation": operation,
+                    "operationParameters": parameters,
+                }
+            },
+            *actions,
+        ]
         removed = {
             a["remove"]["path"] for a in actions if "remove" in a
         }
-        reads = removed if read_rels is None else set(read_rels)
+        if reads is None:
+            def reads(add: dict[str, Any]) -> bool:
+                return add["path"] in removed
+
         my_apps = {a["txn"]["appId"] for a in actions if "txn" in a}
-        pristine = copy.deepcopy(actions)
-        version = snap.version + 1
+        version = 0 if snap is None else snap.version + 1
         attempts = 0
         while True:
             try:
-                attempt = copy.deepcopy(pristine)
-                self._commit(version, attempt)
+                self._commit(version, copy.deepcopy(pristine))
                 return version
             except ConcurrentWriteError:
                 attempts += 1
-                vs = self.versions()
-                latest = vs[-1] if vs else None
-                if latest is None or latest < version:
+                latest = max(self.versions(), default=-1)
+                if snap is None or latest < version:
                     raise
-                for w in range(version, latest + 1):
-                    for a in self._read_actions(w):
-                        if "protocol" in a:
-                            # a protocol action that merely RESTATES
-                            # the gates this transaction already read
-                            # is not a protocol change — only an
-                            # actual upgrade invalidates the loser's
-                            # snapshot (belt to _dv_commit_inner's
-                            # emit-only-on-upgrade braces: a foreign
-                            # writer's restate must not break the
-                            # conflict matrix either)
-                            won = a["protocol"]
-                            if (
-                                int(won.get("minReaderVersion", 1))
-                                == snap.min_reader
-                                and int(won.get("minWriterVersion", 1))
-                                == snap.min_writer
-                                and frozenset(
-                                    won.get("readerFeatures") or ()
-                                )
-                                == snap.reader_features
-                                and frozenset(
-                                    won.get("writerFeatures") or ()
-                                )
-                                == snap.writer_features
-                            ):
-                                continue
-                            raise ProtocolChangedError(
-                                f"{operation} lost to a protocol "
-                                f"upgrade at version {w}",
-                                winning_version=w,
-                            )
-                        if "metaData" in a:
-                            raise MetadataChangedError(
-                                f"{operation} lost to a metadata "
-                                f"change at version {w}",
-                                winning_version=w,
-                            )
-                        txn = a.get("txn")
-                        if txn and txn.get("appId") in my_apps:
-                            raise ConcurrentTransactionError(
-                                f"{operation} lost to a concurrent "
-                                f"transaction for app "
-                                f"{txn['appId']!r} at version {w}",
-                                winning_version=w,
-                            )
-                        rm = a.get("remove")
-                        if rm and rm["path"] in removed:
-                            raise ConcurrentDeleteDeleteError(
-                                f"{operation} and the version-{w} "
-                                "winner both remove "
-                                f"{rm['path']!r}",
-                                winning_version=w,
-                            )
-                        if rm and rm["path"] in reads:
-                            raise ConcurrentDeleteReadError(
-                                f"version-{w} winner removed "
-                                f"{rm['path']!r}, which "
-                                f"{operation} read",
-                                winning_version=w,
-                            )
-                        add = a.get("add")
-                        if (
-                            add
-                            and add.get("dataChange", True)
-                            and isolation == "serializable"
-                            and reads
-                        ):
-                            raise ConcurrentAppendError(
-                                f"version-{w} winner appended "
-                                f"{add['path']!r} under serializable "
-                                f"isolation while {operation} read "
-                                "the table",
-                                winning_version=w,
-                            )
-                if attempts >= max_attempts:
+                read_any = isolation == "serializable" and any(
+                    map(reads, snap.files.values())
+                )
+                winners = (
+                    (w, a)
+                    for w in range(version, latest + 1)
+                    for a in self._read_actions(w)
+                )
+                for w, a in winners:
+                    won = a.get("protocol")
+                    # a protocol action that merely RESTATES the gates
+                    # this transaction already read is not a protocol
+                    # change — only an actual upgrade invalidates the
+                    # loser's snapshot (belt to _dv_commit_inner's
+                    # emit-only-on-upgrade braces: a foreign writer's
+                    # restate must not break the conflict matrix
+                    # either)
+                    if won and (
+                        int(won.get("minReaderVersion", 1)),
+                        int(won.get("minWriterVersion", 1)),
+                        frozenset(won.get("readerFeatures") or ()),
+                        frozenset(won.get("writerFeatures") or ()),
+                    ) != (
+                        snap.min_reader,
+                        snap.min_writer,
+                        snap.reader_features,
+                        snap.writer_features,
+                    ):
+                        raise ProtocolChangedError(
+                            f"{operation} lost to a protocol upgrade at "
+                            f"version {w}",
+                            winning_version=w,
+                        )
+                    if "metaData" in a:
+                        raise MetadataChangedError(
+                            f"{operation} lost to a metadata change at "
+                            f"version {w}",
+                            winning_version=w,
+                        )
+                    txn = a.get("txn")
+                    if txn and txn.get("appId") in my_apps:
+                        raise ConcurrentTransactionError(
+                            f"{operation} lost to a concurrent "
+                            f"transaction for app {txn['appId']!r} at "
+                            f"version {w}",
+                            winning_version=w,
+                        )
+                    rm = (a.get("remove") or {}).get("path")
+                    if rm in removed:
+                        raise ConcurrentDeleteDeleteError(
+                            f"{operation} and the version-{w} winner "
+                            f"both remove {rm!r}",
+                            winning_version=w,
+                        )
+                    if rm in snap.files and reads(snap.files[rm]):
+                        raise ConcurrentDeleteReadError(
+                            f"version-{w} winner removed {rm!r}, which "
+                            f"{operation} read",
+                            winning_version=w,
+                        )
+                    add = a.get("add")
+                    if (
+                        add
+                        and add.get("dataChange", True)
+                        and (read_any or reads(add))
+                    ):
+                        raise ConcurrentAppendError(
+                            f"version-{w} winner appended "
+                            f"{add['path']!r} into what {operation} read",
+                            winning_version=w,
+                        )
+                if attempts >= 50:
                     raise
                 version = latest + 1
 
     def _commit(self, version: int, actions: list[dict[str, Any]]) -> None:
-        self._inject_row_tracking(version, actions)
-        self._inject_in_commit_timestamp(version, actions)
+        prev = self._predecessor(version)
+        self._inject_row_tracking(actions, prev)
+        self._inject_in_commit_timestamp(actions, prev)
         os.makedirs(self.log_dir, exist_ok=True)
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w", encoding="utf-8") as fh:

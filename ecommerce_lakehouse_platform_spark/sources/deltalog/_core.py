@@ -1,51 +1,18 @@
 """Log plumbing: constructor, version listing, action parsing, snapshot replay, history.
 
-Mechanical split of the original single-module ``deltalog.py`` (r13):
-one mixin per concern, assembled into ``MiniDeltaTable`` by the
-package ``__init__``. Zero behavior change — method bodies are
-verbatim; see the package docstring for the protocol overview and
-reference citations."""
+One mixin of ``MiniDeltaTable``, assembled by the package ``__init__``,
+whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import json  # noqa: F401
-import os  # noqa: F401
-import shutil  # noqa: F401
-import time  # noqa: F401
-import uuid  # noqa: F401
-from typing import Any  # noqa: F401
-from urllib.parse import unquote  # noqa: F401
+import json
+import os
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
-from . import _base
-from ._base import (  # noqa: F401
-    _LAST_CHECKPOINT,
-    _LOG_DIR,
-    _HIVE_NULL,
-    _SIDECAR_DIR,
-    CommitConflictError,
-    ConcurrentAppendError,
-    ConcurrentDeleteDeleteError,
-    ConcurrentDeleteReadError,
-    ConcurrentTransactionError,
-    ConcurrentWriteError,
-    ConstraintViolationError,
-    MetadataChangedError,
-    ProtocolChangedError,
-    SchemaMismatchError,
-    Snapshot,
-    _all_match,
-    _atomic_publish,
-    _checkpoint_arrow_schema,
-    _column_nonnull_count,
-    _parse_partition_values,
-    _stats_overlap,
-    _stats_value,
-)
+from ._base import _LOG_DIR, Snapshot
 
 
 class _CoreMixin:

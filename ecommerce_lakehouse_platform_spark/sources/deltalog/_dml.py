@@ -1,51 +1,23 @@
 """DML: copy-on-write and deletion-vector DELETE/UPDATE/MERGE.
 
-Mechanical split of the original single-module ``deltalog.py`` (r13):
-one mixin per concern, assembled into ``MiniDeltaTable`` by the
-package ``__init__``. Zero behavior change — method bodies are
-verbatim; see the package docstring for the protocol overview and
-reference citations."""
+One mixin of ``MiniDeltaTable``, assembled by the package ``__init__``,
+whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import json  # noqa: F401
-import os  # noqa: F401
-import shutil  # noqa: F401
-import time  # noqa: F401
-import uuid  # noqa: F401
-from typing import Any  # noqa: F401
-from urllib.parse import unquote  # noqa: F401
+import json
+import os
+import time
+import uuid
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from . import _base
-from ._base import (  # noqa: F401
-    _LAST_CHECKPOINT,
-    _LOG_DIR,
-    _HIVE_NULL,
-    _SIDECAR_DIR,
-    CommitConflictError,
-    ConcurrentAppendError,
-    ConcurrentDeleteDeleteError,
-    ConcurrentDeleteReadError,
-    ConcurrentTransactionError,
-    ConcurrentWriteError,
-    ConstraintViolationError,
-    MetadataChangedError,
-    ProtocolChangedError,
+from ._base import (
     SchemaMismatchError,
     Snapshot,
-    _all_match,
-    _atomic_publish,
-    _checkpoint_arrow_schema,
-    _column_nonnull_count,
-    _parse_partition_values,
     _remove_action,
-    _stats_overlap,
-    _stats_value,
 )
 
 
@@ -131,23 +103,19 @@ class _DmlMixin:
                 }
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation,
-                    "operationParameters": {
-                        **parameters,
-                        "rewrittenFiles": len(touched_rels),
-                        "prunedFiles": len(snap.files) - len(touched_rels),
-                    },
-                }
-            }
+            _remove_action(snap.files[rel], now_ms) for rel in touched_rels
         ]
-        for rel in touched_rels:
-            actions.append(_remove_action(snap.files[rel], now_ms))
         actions.extend({"add": add} for add in adds)
         return self._commit_resolving(
-            snap, actions, operation, isolation=isolation
+            snap,
+            actions,
+            operation,
+            {
+                **parameters,
+                "rewrittenFiles": len(touched_rels),
+                "prunedFiles": len(snap.files) - len(touched_rels),
+            },
+            isolation=isolation,
         )
 
     def delete(
@@ -310,20 +278,13 @@ class _DmlMixin:
         if not touched and new_rows is None:
             return None
         now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation,
-                    "operationParameters": {
-                        **parameters,
-                        "mode": "deletion-vectors",
-                        "dvFiles": len(touched),
-                        "rewrittenFiles": 0,
-                    },
-                }
-            }
-        ]
+        parameters = {
+            **parameters,
+            "mode": "deletion-vectors",
+            "dvFiles": len(touched),
+            "rewrittenFiles": 0,
+        }
+        actions: list[dict[str, Any]] = []
         if touched:
             # DVs gate on reader 3 / writer 7 with the
             # "deletionVectors" table feature in the real protocol:
@@ -400,12 +361,10 @@ class _DmlMixin:
             ]
             if not adds and not touched:
                 return None
-            actions[0]["commitInfo"]["operationParameters"]["newFiles"] = (
-                len(adds)
-            )
+            parameters["newFiles"] = len(adds)
             actions.extend({"add": add} for add in adds)
         return self._commit_resolving(
-            snap, actions, operation, isolation=isolation
+            snap, actions, operation, parameters, isolation=isolation
         )
 
     def _delete_with_dv(
@@ -618,23 +577,19 @@ class _DmlMixin:
         )
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "MERGE",
-                    "operationParameters": {
-                        "keys": json.dumps(keys),
-                        "prunedFiles": len(snap.files) - len(touched_rels),
-                        "rewrittenFiles": len(touched_rels),
-                    },
-                }
-            }
+            _remove_action(snap.files[rel], now_ms) for rel in touched_rels
         ]
-        for rel in touched_rels:
-            actions.append(_remove_action(snap.files[rel], now_ms))
         actions.extend({"add": add} for add in adds)
         return self._commit_resolving(
-            snap, actions, "MERGE", isolation=isolation
+            snap,
+            actions,
+            "MERGE",
+            {
+                "keys": json.dumps(keys),
+                "prunedFiles": len(snap.files) - len(touched_rels),
+                "rewrittenFiles": len(touched_rels),
+            },
+            isolation=isolation,
         )
 
     def _merge_with_dv(

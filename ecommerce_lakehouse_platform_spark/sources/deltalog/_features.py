@@ -1,51 +1,28 @@
 """Table features and schema management: constraints, generated/default/identity columns, protocol feature lists, properties, bloom index, column mapping.
 
-Mechanical split of the original single-module ``deltalog.py`` (r13):
-one mixin per concern, assembled into ``MiniDeltaTable`` by the
-package ``__init__``. Zero behavior change — method bodies are
-verbatim; see the package docstring for the protocol overview and
-reference citations."""
+One mixin of ``MiniDeltaTable``, assembled by the package ``__init__``,
+whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import json  # noqa: F401
-import os  # noqa: F401
-import shutil  # noqa: F401
-import time  # noqa: F401
-import uuid  # noqa: F401
-from typing import Any  # noqa: F401
-from urllib.parse import unquote  # noqa: F401
+import json
+import os
+import time
+import uuid
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from . import _base
-from ._base import (  # noqa: F401
-    _LAST_CHECKPOINT,
-    _LOG_DIR,
-    _HIVE_NULL,
-    _SIDECAR_DIR,
-    CommitConflictError,
-    ConcurrentAppendError,
-    ConcurrentDeleteDeleteError,
-    ConcurrentDeleteReadError,
-    ConcurrentTransactionError,
-    ConcurrentWriteError,
+from ._base import (
     ConstraintViolationError,
-    MetadataChangedError,
-    ProtocolChangedError,
     SchemaMismatchError,
     Snapshot,
-    _all_match,
-    _atomic_publish,
-    _checkpoint_arrow_schema,
-    _column_nonnull_count,
-    _parse_partition_values,
+    _every_file,
+    _metadata_action,
     _remove_action,
     _stats_overlap,
-    _stats_value,
 )
 
 
@@ -163,30 +140,13 @@ class _FeaturesMixin:
                 )
             else:
                 fields.append(f)
-        new_schema = T.StructType(fields)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET GENERATED COLUMN",
-                    "operationParameters": {"name": name, "expr": sql},
-                }
-            },
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": new_schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": dict(snap.configuration),
-                    "createdTime": now_ms,
-                }
-            },
-        ]
-        version = snap.version + 1
-        self._commit(version, actions)
-        return version
+        return self._commit_schema(
+            snap,
+            T.StructType(fields),
+            snap.configuration,
+            "SET GENERATED COLUMN",
+            {"name": name, "expr": sql},
+        )
 
     @staticmethod
     def _default_exprs(schema: T.StructType) -> dict[str, str]:
@@ -568,9 +528,10 @@ class _FeaturesMixin:
         them. Like the real table (which only accepts identity at
         CREATE TABLE), the column can only be added while the table
         holds no rows. An identity-assigning commit that loses a
-        put-if-absent race surfaces the conflict instead of rebasing
-        (a rebase would reuse the loser's stale watermark and mint
-        duplicate ids) — callers retry the write, which re-assigns
+        put-if-absent race to another one surfaces the conflict (the
+        winner's watermark rides its metaData, and any winning
+        metaData conflicts), so a stale watermark never mints
+        duplicate ids — callers retry the write, which re-assigns
         from the winner's watermark."""
         if step == 0:
             raise ValueError("identity step must be non-zero")
@@ -779,34 +740,17 @@ class _FeaturesMixin:
         config[self._RT_KEY] = "true"
         config[self._RT_MAT_KEY] = f"_row_id_col_{uuid.uuid4().hex[:8]}"
         now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps({self._RT_KEY: "true"})
-                    },
-                }
-            },
-        ]
+        actions: list[dict[str, Any]] = []
         up = self._tf_upgrade(
             snap, set(), {"rowTracking", "domainMetadata"}
         )
         if up is not None:
             actions.append({"protocol": up})
-        actions += [
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": config,
-                    "createdTime": now_ms,
-                }
-            },
-        ]
+        actions.append(
+            _metadata_action(
+                snap.schema, snap.partition_columns, config, now_ms
+            )
+        )
         hwm = -1
         for rel in sorted(snap.files):
             add = dict(snap.files[rel])
@@ -835,9 +779,13 @@ class _FeaturesMixin:
                 }
             }
         )
-        version = snap.version + 1
-        self._commit(version, actions)
-        return version
+        return self._commit_resolving(
+            snap,
+            actions,
+            "SET TBLPROPERTIES",
+            {"properties": json.dumps({self._RT_KEY: "true"})},
+            reads=_every_file,
+        )
 
     def set_constraint(self, name: str, sql: str) -> int:
         """ALTER TABLE ... ADD CONSTRAINT ... CHECK (...): validate
@@ -878,34 +826,9 @@ class _FeaturesMixin:
         """Metadata-only commit restating the CURRENT schema/layout
         with a new configuration map (and optionally a protocol
         upgrade — table-feature enables ride the same commit)."""
-        self._assert_writer_features(snap)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation,
-                    "operationParameters": parameters,
-                }
-            },
-        ]
-        if protocol is not None:
-            actions.append({"protocol": protocol})
-        actions += [
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": configuration,
-                    "createdTime": now_ms,
-                }
-            },
-        ]
-        version = snap.version + 1
-        self._commit(version, actions)
-        return version
+        return self._commit_schema(
+            snap, snap.schema, configuration, operation, parameters, protocol
+        )
 
     # -- bloom filter index -----------------------------------------------
 
@@ -1042,19 +965,7 @@ class _FeaturesMixin:
                 bs[p // 8] |= 1 << (p % 8)
             bitsets[row["_rel"]] = base64.b64encode(bytes(bs)).decode()
         now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "BLOOM INDEX",
-                    "operationParameters": {
-                        "column": column,
-                        "bits": bits,
-                        "hashes": hashes,
-                    },
-                }
-            }
-        ]
+        actions: list[dict[str, Any]] = []
         for rel in sorted(snap.files):
             actions.append(
                 _remove_action(snap.files[rel], now_ms, data_change=False)
@@ -1070,9 +981,12 @@ class _FeaturesMixin:
             add["tags"] = tags
             add["dataChange"] = False
             actions.append({"add": add})
-        version = snap.version + 1
-        self._commit(version, actions)
-        return version
+        return self._commit_resolving(
+            snap,
+            actions,
+            "BLOOM INDEX",
+            {"column": column, "bits": bits, "hashes": hashes},
+        )
 
     def _bloom_may_contain(
         self, add: dict[str, Any], pcol: str, value
@@ -1224,35 +1138,22 @@ class _FeaturesMixin:
         protocol: dict[str, Any] | None = None,
     ) -> int:
         """Metadata-only commit of a new schema/configuration (and
-        optionally a protocol bump) — zero data files touched."""
-        self._assert_writer_features(snap)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation,
-                    "operationParameters": parameters,
-                }
-            }
-        ]
+        optionally a protocol bump) — zero data files touched. It read
+        the whole table, so a concurrent data change conflicts."""
+        actions: list[dict[str, Any]] = []
         if protocol is not None:
             actions.append({"protocol": protocol})
         actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": configuration,
-                    "createdTime": now_ms,
-                }
-            }
+            _metadata_action(
+                schema,
+                snap.partition_columns,
+                configuration,
+                int(time.time() * 1000),
+            )
         )
-        version = snap.version + 1
-        self._commit(version, actions)
-        return version
+        return self._commit_resolving(
+            snap, actions, operation, parameters, reads=_every_file
+        )
 
     def enable_column_mapping(self) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES

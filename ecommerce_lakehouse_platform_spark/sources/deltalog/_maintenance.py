@@ -1,51 +1,29 @@
 """Maintenance: checkpoints (classic + v2 manifest/sidecars), OPTIMIZE/REORG, Z-order layout, RESTORE, CLONE, log expiry, VACUUM.
 
-Mechanical split of the original single-module ``deltalog.py`` (r13):
-one mixin per concern, assembled into ``MiniDeltaTable`` by the
-package ``__init__``. Zero behavior change — method bodies are
-verbatim; see the package docstring for the protocol overview and
-reference citations."""
+One mixin of ``MiniDeltaTable``, assembled by the package ``__init__``,
+whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import json  # noqa: F401
-import os  # noqa: F401
-import shutil  # noqa: F401
-import time  # noqa: F401
-import uuid  # noqa: F401
-from typing import Any  # noqa: F401
-from urllib.parse import unquote  # noqa: F401
+import json
+import os
+import shutil
+import time
+import uuid
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from . import _base
-from ._base import (  # noqa: F401
+from ._base import (
     _LAST_CHECKPOINT,
     _LOG_DIR,
-    _HIVE_NULL,
     _SIDECAR_DIR,
-    CommitConflictError,
-    ConcurrentAppendError,
-    ConcurrentDeleteDeleteError,
-    ConcurrentDeleteReadError,
-    ConcurrentTransactionError,
-    ConcurrentWriteError,
-    ConstraintViolationError,
-    MetadataChangedError,
-    ProtocolChangedError,
-    SchemaMismatchError,
     Snapshot,
-    _all_match,
-    _atomic_publish,
     _checkpoint_arrow_schema,
-    _column_nonnull_count,
-    _parse_partition_values,
+    _every_file,
+    _metadata_action,
     _remove_action,
-    _stats_overlap,
-    _stats_value,
 )
 
 
@@ -586,21 +564,12 @@ class _MaintenanceMixin:
 
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation,
-                    "operationParameters": parameters,
-                }
-            }
+            _remove_action(snap.files[rel], now_ms, data_change=False)
+            for rel in victim_rels
         ]
-        for rel in victim_rels:
-            actions.append(
-                _remove_action(snap.files[rel], now_ms, data_change=False)
-            )
         for add in adds:
             actions.append({"add": {**add, "dataChange": False}})
-        return self._commit_resolving(snap, actions, operation)
+        return self._commit_resolving(snap, actions, operation, parameters)
 
     def _zorder_layout(
         self,
@@ -700,11 +669,6 @@ class _MaintenanceMixin:
                     "was vacuumed"
                 )
         current = self.snapshot()
-        # RESTORE is a WRITE: a writer facing unknown writerFeatures
-        # must not mutate the table through this path either (it
-        # commits removes/adds via _commit directly, so the write()
-        # guard does not cover it)
-        self._assert_writer_features(current)
         # diff LOGICAL files (path plus deletion vector): a file whose
         # DV changed since the target is removed and re-added under
         # the target's DV, or the rows it deleted stay deleted
@@ -723,36 +687,28 @@ class _MaintenanceMixin:
             self._assert_not_append_only(current, "RESTORE")
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "RESTORE",
-                    "operationParameters": {"version": str(version)},
-                }
-            },
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": target.schema.json(),
-                    "partitionColumns": target.partition_columns,
-                    # RESTORE rolls the table properties back with the
-                    # schema: CHECK constraints (and everything else
-                    # in the configuration) as of the target version
-                    # stay enforced — an empty map here would silently
-                    # disable them
-                    "configuration": dict(target.configuration),
-                    "createdTime": now_ms,
-                }
-            },
+            # RESTORE rolls the table properties back with the schema:
+            # CHECK constraints (and everything else in the
+            # configuration) as of the target version stay enforced —
+            # an empty map here would silently disable them
+            _metadata_action(
+                target.schema,
+                target.partition_columns,
+                target.configuration,
+                now_ms,
+            )
         ]
         for rel in removed:
             actions.append(_remove_action(current.files[rel], now_ms))
         for rel in added:
             actions.append({"add": {**target.files[rel], "dataChange": True}})
-        new_version = current.version + 1
-        self._commit(new_version, actions)
-        return new_version
+        return self._commit_resolving(
+            current,
+            actions,
+            "RESTORE",
+            {"version": str(version)},
+            reads=_every_file,
+        )
 
     def clone(self, target_path: str) -> "MiniDeltaTable":
         """SHALLOW CLONE: a new table whose version 0 references the
@@ -783,15 +739,7 @@ class _MaintenanceMixin:
         )
         if target.exists():
             raise FileExistsError(f"clone target is already a table: {target_path}")
-        now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "CLONE",
-                    "operationParameters": {"source": self.path},
-                }
-            },
             # a clone carrying DV references inherits the DV protocol
             # gate (versions AND the feature lists — readers that
             # would scan the files raw and resurrect deleted rows
@@ -822,18 +770,14 @@ class _MaintenanceMixin:
                     )
                 )
             },
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    # CLONE copies the source's table properties —
-                    # CHECK constraints keep holding on the clone
-                    "configuration": dict(snap.configuration),
-                    "createdTime": now_ms,
-                }
-            },
+            # CLONE copies the source's table properties — CHECK
+            # constraints keep holding on the clone
+            _metadata_action(
+                snap.schema,
+                snap.partition_columns,
+                snap.configuration,
+                int(time.time() * 1000),
+            ),
         ]
         for rel in sorted(snap.files):
             add = dict(snap.files[rel])
@@ -850,7 +794,7 @@ class _MaintenanceMixin:
                 )
                 add["deletionVector"] = dv
             actions.append({"add": add})
-        target._commit(0, actions)
+        target._commit_resolving(None, actions, "CLONE", {"source": self.path})
         return target
 
     def expire_log(self) -> list[int]:

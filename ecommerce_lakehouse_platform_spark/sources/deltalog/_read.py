@@ -1,52 +1,24 @@
 """Read side: schema-era scans, time travel, data skipping, DV-aware reads, row-id scans, the change data feed.
 
-Mechanical split of the original single-module ``deltalog.py`` (r13):
-one mixin per concern, assembled into ``MiniDeltaTable`` by the
-package ``__init__``. Zero behavior change — method bodies are
-verbatim; see the package docstring for the protocol overview and
-reference citations."""
+One mixin of ``MiniDeltaTable``, assembled by the package ``__init__``,
+whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
-import copy  # noqa: F401
-import json  # noqa: F401
-import os  # noqa: F401
-import shutil  # noqa: F401
-import time  # noqa: F401
-import uuid  # noqa: F401
+import json
+import os
 from collections.abc import Iterator
 from typing import Any, NamedTuple
-from urllib.parse import unquote  # noqa: F401
 
-from pyspark.sql import Column, DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-from pyspark.sql import types as T  # noqa: F401
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from . import _base
-from ._base import (  # noqa: F401
-    _LAST_CHECKPOINT,
+from ._base import (
     _LOG_DIR,
-    _HIVE_NULL,
-    _SIDECAR_DIR,
-    CommitConflictError,
-    ConcurrentAppendError,
-    ConcurrentDeleteDeleteError,
-    ConcurrentDeleteReadError,
-    ConcurrentTransactionError,
-    ConcurrentWriteError,
-    ConstraintViolationError,
-    MetadataChangedError,
-    ProtocolChangedError,
-    SchemaMismatchError,
     Snapshot,
-    _all_match,
-    _atomic_publish,
-    _checkpoint_arrow_schema,
-    _column_nonnull_count,
     _commit_timestamp,
-    _parse_partition_values,
     _stats_overlap,
-    _stats_value,
 )
 
 

@@ -12,13 +12,16 @@ would.
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+import ecommerce_lakehouse_platform_spark
 from ecommerce_lakehouse_platform_spark.sources.deltalog import (
     ConcurrentAppendError,
     ConcurrentDeleteDeleteError,
@@ -307,3 +310,105 @@ def test_row_ids_unique_across_racing_tracked_appends(spark, base):
     ids = [r["_row_id"] for r in got.collect()]
     assert len(ids) == 30
     assert sorted(ids) == list(range(30)), "dense, no overlap"
+
+
+@pytest.mark.parametrize(
+    "rival_move, replace_where",
+    [
+        pytest.param(
+            lambda r: r.set_constraint("vpos", "v >= 0"),
+            None,
+            id="append-vs-constraint",
+        ),
+        pytest.param(
+            lambda r: r.set_generated_column("v", "CAST(k AS BIGINT) * 2"),
+            None,
+            id="append-vs-generated-column",
+        ),
+        pytest.param(
+            lambda r: r.set_table_property("delta.appendOnly", "true"),
+            {"p": 0},
+            id="replace-where-vs-append-only",
+        ),
+    ],
+)
+def test_metadata_winner_conflicts_every_writer(
+    spark, base, rival_move, replace_where
+):
+    """write() resolves a lost race with the same rules as DML: a
+    winner that commits metaData — a CHECK constraint, a generated
+    column, delta.appendOnly — forbids what the loser was about to
+    commit, so a blind append or a replace_where overwrite losing to
+    it raises MetadataChangedError instead of rebasing past it, and
+    the loser commits nothing."""
+    t = MiniDeltaTable(spark, os.path.join(base, "t"))
+    t.write(
+        _df(spark, 0, 20).withColumn("p", F.col("k").cast("int") % 2),
+        partition_by=["p"],
+    )
+    rival = MiniDeltaTable(spark, t.path)
+    _race(t, lambda: rival_move(rival))
+    bad = _df(spark, 100, 105).select(
+        "k", F.lit(-1).cast("long").alias("v"), F.lit(0).alias("p")
+    )
+    with pytest.raises(MetadataChangedError):
+        if replace_where is None:
+            t.write(bad, mode="append")
+        else:
+            t.write(bad, replace_where=replace_where)
+    assert t.snapshot().version == 1  # only the rival's commit landed
+    got = t.read()
+    assert got.count() == 20
+    assert got.filter(F.col("v") < 0).count() == 0
+
+
+def test_one_commit_path():
+    """Every commit goes through the conflict resolver: the raw
+    put-if-absent ``_commit`` is called only inside
+    ``_commit_resolving``, which also builds the only ``commitInfo``;
+    ``metaData`` dicts are built only by ``_base._metadata_action``
+    and the checkpoint row (a different shape). Pure AST scan of the
+    package source."""
+    builders = {
+        "commitInfo": {"_commit_resolving"},
+        "metaData": {"_metadata_action", "checkpoint"},
+    }
+    stray: list[str] = []
+    resolver_calls = 0
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, where):
+            self.where, self.funcs = where, []
+
+        def visit_FunctionDef(self, node):
+            self.funcs.append(node.name)
+            self.generic_visit(node)
+            self.funcs.pop()
+
+        def visit_Call(self, node):
+            nonlocal resolver_calls
+            if isinstance(node.func, ast.Attribute) and (
+                node.func.attr == "_commit"
+            ):
+                if "_commit_resolving" in self.funcs:
+                    resolver_calls += 1
+                else:
+                    stray.append(f"{self.where}:{node.lineno} _commit(")
+            self.generic_visit(node)
+
+        def visit_Dict(self, node):
+            for key, value in zip(node.keys, node.values):
+                name = getattr(key, "value", None)
+                if (
+                    name in builders
+                    and isinstance(value, ast.Dict)
+                    and not builders[name] & set(self.funcs)
+                ):
+                    stray.append(f"{self.where}:{node.lineno} {name!r}")
+            self.generic_visit(node)
+
+    root = pathlib.Path(ecommerce_lakehouse_platform_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        Scan(path.relative_to(root)).visit(ast.parse(path.read_text()))
+    assert resolver_calls == 1
+    assert not stray, stray

@@ -188,12 +188,14 @@ def test_changed_queries_sit_inside_driver_window():
     from ecommerce_lakehouse_platform_spark import registry
 
     changed = {
-        # change events come from one planner; removes carry their DV
+        # every commit goes through the conflict resolver, which now
+        # builds the commitInfo and metaData actions
+        "ext_delta_time_travel",
         "ext_delta_cdf_fold",
         "ext_delta_merge_cdf",
+        "ext_delta_widened_read",
+        "ext_delta_identity",
         "ext_delta_v2_checkpoint",
-        "ext_delta_time_travel",
-        "stream_cdf_source",
     }
     window = set(registry._DRIVER_WINDOW)
     assert changed <= window, sorted(changed - window)

@@ -119,6 +119,51 @@ def test_watermark_survives_checkpoint_and_expiry(spark, base):
     assert sorted(ids.values()) == list(range(18))
 
 
+@pytest.mark.parametrize("path", ["unset-then-set", "restore-across-enable"])
+def test_re_enabled_tracking_continues_past_watermark(spark, base, path):
+    """A metaData commit that turns row tracking back on follows one
+    whose predecessor did not restate the watermark (the property was
+    unset, or RESTORE went to a pre-enable version). The watermark
+    still lives in the snapshot's domainMetadata, so later appends
+    continue past it instead of restarting at row id 0."""
+    t = MiniDeltaTable(spark, os.path.join(base, "t"))
+    df = _df(spark)
+    t.write(df.limit(10))  # v0
+    t.enable_row_tracking()  # v1: ids 0..9
+    if path == "unset-then-set":
+        t.unset_table_property("delta.enableRowTracking")
+        t.set_table_property("delta.enableRowTracking", "true")
+        n = 10
+    else:
+        t.write(df.limit(15).exceptAll(df.limit(10)), mode="append")  # v2
+        t.restore(0)  # metaData without row tracking
+        t.restore(2)  # metaData with row tracking again
+        n = 15
+    t.write(df.limit(n + 3).exceptAll(df.limit(n)), mode="append")
+    ids = list(_ids(t).values())
+    assert len(ids) == n + 3
+    assert len(set(ids)) == len(ids), "row ids never repeat"
+
+
+def test_switched_off_tracking_stays_off_after_log_cleanup(spark, base):
+    """With row tracking switched off, the watermark domain stays in
+    the snapshot. When the predecessor JSON has been cleaned up, the
+    snapshot's stand-in for it must not revive the feature: the next
+    append carries no baseRowId and restates no watermark."""
+    t = MiniDeltaTable(spark, os.path.join(base, "t"))
+    df = _df(spark)
+    t.write(df.limit(10))
+    t.enable_row_tracking()
+    v = t.unset_table_property("delta.enableRowTracking")
+    t.checkpoint(v)
+    t.expire_log()
+    os.remove(t._version_file(v))  # a cleanup that keeps only the checkpoint
+    nxt = t.write(df.limit(13).exceptAll(df.limit(10)), mode="append")
+    actions = t._read_actions(nxt)
+    assert all("baseRowId" not in a["add"] for a in actions if "add" in a)
+    assert not any("domainMetadata" in a for a in actions)
+
+
 def test_partitioned_table_ids(spark, base):
     """Row ids work on hive-partitioned tables (partition columns come
     from the path; the id comes from the file-local row index)."""
@@ -316,7 +361,7 @@ def test_unrelated_domain_does_not_suppress_id_assignment(spark, base):
             }
         },
     ]
-    t._inject_row_tracking(2, actions)
+    t._inject_row_tracking(actions, t._predecessor(2))
     add = next(a["add"] for a in actions if "add" in a)
     assert add["baseRowId"] == 10, "fresh ids continue past the watermark"
     rt = [
@@ -347,7 +392,7 @@ def test_unrelated_domain_does_not_suppress_id_assignment(spark, base):
             }
         },
     ]
-    t._inject_row_tracking(2, managed)
+    t._inject_row_tracking(managed, t._predecessor(2))
     assert "baseRowId" not in managed[1]["add"]
 
 
