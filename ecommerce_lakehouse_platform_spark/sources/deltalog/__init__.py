@@ -38,10 +38,18 @@ deliberately small subset:
   default with its documented append-vs-DML anomaly,
   ``serializable`` strict). Table-creating commits never rebase.
 * Snapshot = replay of versions 0..N: last ``metaData`` wins, active
-  file set = adds minus removes. ``read(version=...)`` is time travel,
-  and it replays the schema AS OF that version, so reads across an
-  ``overwrite_schema`` evolution see the schema their data was written
-  under.
+  file set = adds minus removes. ``snapshot()`` is the ONLY code that
+  turns log actions into table state; every restatement of that state
+  (checkpoint rows, CLONE, the stand-in for an expired predecessor
+  commit) is derived from a ``Snapshot``. ``read(version=...)`` is
+  time travel, and it replays the schema AS OF that version, so reads
+  across an ``overwrite_schema`` evolution see the schema their data
+  was written under.
+* ``metaData.id`` names the table for its whole life: only the
+  table-creating commits (the version-0 write, CLONE) mint one, and
+  every later metaData commit — overwrite, schema evolution,
+  properties, constraints, column mapping, RESTORE — restates the
+  snapshot's id.
 * Schema ENFORCEMENT on write (append/overwrite must match the table
   schema by name and type) with opt-in EVOLUTION
   (``overwrite_schema=True`` on overwrite) — the reference's
@@ -60,10 +68,12 @@ Also implemented, because each is the piece that matters at 100 TB:
 
 * **Parquet checkpoints** (``{version:020d}.checkpoint.parquet`` +
   ``_last_checkpoint``, written every ``checkpoint_interval`` commits
-  like the real writer's default of 10): a snapshot read replays the
-  checkpoint's consolidated state plus only the JSON commits AFTER it,
-  so planning cost is O(files + commits-since-checkpoint) instead of
-  O(all commits ever). Time travel to pre-checkpoint versions falls
+  like the real writer's default of 10). A checkpoint is the
+  serialized snapshot — its state actions (protocol, metaData, one
+  txn per app, one domainMetadata per domain, one add per file) as
+  parquet rows. A snapshot read replays the checkpoint plus only the
+  JSON commits AFTER it, so planning cost is O(files +
+  commits-since-checkpoint) instead of O(all commits ever). Time travel to pre-checkpoint versions falls
   back to full JSON replay while the JSON log is retained.
 * **Change data feed** (``changes(from, to)``): row-level
   insert/delete stream between versions with ``_change_type`` /
@@ -88,8 +98,13 @@ change planner reads a DV commit's row-level events from the commit
 alone.
 
 Column mapping (mode=name: ``rename_column``/``drop_column`` as
-metadata-only commits) and log expiry (``expire_log`` deletes the JSON
-commits older than the newest checkpoint) are implemented too.
+metadata-only commits), log expiry (``expire_log`` deletes the JSON
+commits older than the newest checkpoint) and SHALLOW CLONE are
+implemented too. CLONE restates the source's protocol as replayed —
+a column-mapped legacy source stays reader 2 / writer 5, one with
+live deletion vectors stays reader 3 / writer 7 with the feature
+listed — under a new table id, with every file added by absolute
+path.
 
 Deliberately NOT implemented (documented subset, all honest gaps):
 multi-cluster LogStores (os.link put-if-absent covers single-host

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import unquote
@@ -111,6 +110,11 @@ class Snapshot:
     # legacy-version tables
     reader_features: frozenset = frozenset()
     writer_features: frozenset = frozenset()
+    # the replayed metaData's ``id`` — the table's name for its whole
+    # life, minted once at creation (the v0 write, CLONE) and restated
+    # by every later metaData commit — and its ``createdTime``
+    table_id: str | None = None
+    created_time: int | None = None
 
     def file_paths(self, base: str) -> list[str]:
         return [os.path.join(base, p) for p in sorted(self.files)]
@@ -161,24 +165,76 @@ def _remove_action(
 
 
 def _metadata_action(
+    table_id: str | None,
     schema: T.StructType,
     partition_columns: list[str],
     configuration: dict[str, str],
-    now_ms: int,
+    created_time: int | None,
 ) -> dict[str, Any]:
     """The ``metaData`` action committing ``schema``, the partition
     layout and the table properties (CHECK constraints included) as
-    the table's metadata from this version on."""
+    the metadata of table ``table_id`` from this version on."""
     return {
         "metaData": {
-            "id": str(uuid.uuid4()),
+            "id": table_id,
             "format": {"provider": "parquet", "options": {}},
             "schemaString": schema.json(),
             "partitionColumns": list(partition_columns),
             "configuration": dict(configuration),
-            "createdTime": now_ms,
+            "createdTime": created_time,
         }
     }
+
+
+def _protocol_action(snap: Snapshot) -> dict[str, Any]:
+    """The snapshot's protocol as replayed. Feature lists exist only
+    on the table-feature versions (reader 3, writer 7); a legacy
+    table's gates are its version numbers alone."""
+    protocol: dict[str, Any] = {
+        "minReaderVersion": snap.min_reader,
+        "minWriterVersion": snap.min_writer,
+    }
+    if snap.min_reader >= 3:
+        protocol["readerFeatures"] = sorted(snap.reader_features)
+    if snap.min_writer >= 7:
+        protocol["writerFeatures"] = sorted(snap.writer_features)
+    return {"protocol": protocol}
+
+
+def _state_actions(snap: Snapshot) -> list[dict[str, Any]]:
+    """The snapshot restated as actions — what a checkpoint stores:
+    its protocol, its metaData under the table's id, one ``txn`` per
+    app, one ``domainMetadata`` per live domain and one ``add`` per
+    file. A restatement is not a change, so adds carry
+    ``dataChange=false``."""
+    return [
+        _protocol_action(snap),
+        _metadata_action(
+            snap.table_id,
+            snap.schema,
+            snap.partition_columns,
+            snap.configuration,
+            snap.created_time,
+        ),
+        *(
+            {"txn": {"appId": app, "version": version}}
+            for app, version in sorted(snap.app_versions.items())
+        ),
+        *(
+            {
+                "domainMetadata": {
+                    "domain": domain,
+                    "configuration": config,
+                    "removed": False,
+                }
+            }
+            for domain, config in sorted(snap.domain_metadata.items())
+        ),
+        *(
+            {"add": {**snap.files[rel], "dataChange": False}}
+            for rel in sorted(snap.files)
+        ),
+    ]
 
 
 def _every_file(add: dict[str, Any]) -> bool:

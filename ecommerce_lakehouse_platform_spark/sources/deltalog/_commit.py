@@ -38,6 +38,7 @@ from ._base import (
     _metadata_action,
     _parse_partition_values,
     _remove_action,
+    _state_actions,
 )
 
 
@@ -525,7 +526,14 @@ class _CommitMixin:
             if evolved_added_cols:
                 config[self._EVOLVED_KEY] = "true"
             actions.append(
-                _metadata_action(meta_schema, partition_by, config, now_ms)
+                _metadata_action(
+                    # only the table-creating write names the table
+                    str(uuid.uuid4()) if prior is None else prior.table_id,
+                    meta_schema,
+                    partition_by,
+                    config,
+                    now_ms,
+                )
             )
         if txn is not None:
             actions.append(
@@ -622,29 +630,28 @@ class _CommitMixin:
         timestamps or row tracking restates its ICT and its row-id
         watermark, so the next commit detects either feature from its
         predecessor alone. When that JSON has been expired, the latest
-        snapshot's configuration and domain metadata stand in for
-        it."""
+        snapshot's metaData and domainMetadata state actions stand in
+        for it."""
         if version == 0:
             return []
         try:
             return self._read_actions(version - 1)
         except OSError:
             snap = self.snapshot()
+            tracking = snap.configuration.get(self._RT_KEY) == "true"
             return [
-                _metadata_action(
-                    snap.schema,
-                    snap.partition_columns,
-                    snap.configuration,
-                    int(time.time() * 1000),
-                ),
-                *(
-                    {"domainMetadata": {"domain": d, "configuration": c}}
-                    for d, c in snap.domain_metadata.items()
-                    # a switched-off table keeps its row-id domain, but
-                    # its predecessor would not have restated it
-                    if d != self._RT_DOMAIN
-                    or snap.configuration.get(self._RT_KEY) == "true"
-                ),
+                a
+                for a in _state_actions(snap)
+                if "metaData" in a
+                or (
+                    "domainMetadata" in a
+                    # a switched-off table keeps its row-id domain,
+                    # but its predecessor would not have restated it
+                    and (
+                        tracking
+                        or a["domainMetadata"]["domain"] != self._RT_DOMAIN
+                    )
+                )
             ]
 
     _ICT_KEY = "delta.enableInCommitTimestamps"

@@ -70,6 +70,7 @@ class _CoreMixin:
                 f"version {version} not in table history 0..{latest}"
             )
         schema: T.StructType | None = None
+        meta: dict[str, Any] = {}
         partition_columns: list[str] = []
         files: dict[str, dict[str, Any]] = {}
         app_versions: dict[str, int] = {}
@@ -81,7 +82,7 @@ class _CoreMixin:
         writer_features: frozenset = frozenset()
 
         def apply(action: dict[str, Any]) -> None:
-            nonlocal schema, partition_columns, configuration
+            nonlocal schema, meta, partition_columns, configuration
             nonlocal min_reader, min_writer
             nonlocal reader_features, writer_features
             if "protocol" in action:
@@ -169,20 +170,24 @@ class _CoreMixin:
             version, schema, partition_columns, files, app_versions,
             configuration, min_reader, min_writer, domain_metadata,
             reader_features, writer_features,
+            table_id=meta.get("id"), created_time=meta.get("createdTime"),
+        )
+
+    def _commit_info(self, version: int) -> dict[str, Any]:
+        """The ``commitInfo`` of commit ``version`` ({} when absent)."""
+        return next(
+            (
+                a["commitInfo"]
+                for a in self._read_actions(version)
+                if "commitInfo" in a
+            ),
+            {},
         )
 
     def history(self) -> list[dict[str, Any]]:
         """One commitInfo dict per version, newest first."""
-        out = []
-        for v in self.versions():
-            info = next(
-                (
-                    a["commitInfo"]
-                    for a in self._read_actions(v)
-                    if "commitInfo" in a
-                ),
-                {},
-            )
-            out.append({"version": v, **info})
-        return list(reversed(out))
+        return [
+            {"version": v, **self._commit_info(v)}
+            for v in reversed(self.versions())
+        ]
 

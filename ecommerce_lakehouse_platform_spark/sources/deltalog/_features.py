@@ -5,6 +5,7 @@ whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -469,13 +470,11 @@ class _FeaturesMixin:
             # see it and keep deleting). Legacy-version tables stay
             # legacy: delta.appendOnly is a writer-2 property there,
             # and _features_in_use folds it in on any later upgrade.
-            tmp = Snapshot(
-                snap.version, snap.schema, snap.partition_columns,
-                snap.files, snap.app_versions, config,
-                snap.min_reader, snap.min_writer, snap.domain_metadata,
-                snap.reader_features, snap.writer_features,
+            protocol = self._tf_upgrade(
+                dataclasses.replace(snap, configuration=config),
+                set(),
+                {"appendOnly"},
             )
-            protocol = self._tf_upgrade(tmp, set(), {"appendOnly"})
         return self._commit_configuration(
             snap,
             config,
@@ -748,7 +747,11 @@ class _FeaturesMixin:
             actions.append({"protocol": up})
         actions.append(
             _metadata_action(
-                snap.schema, snap.partition_columns, config, now_ms
+                snap.table_id,
+                snap.schema,
+                snap.partition_columns,
+                config,
+                now_ms,
             )
         )
         hwm = -1
@@ -1145,6 +1148,7 @@ class _FeaturesMixin:
             actions.append({"protocol": protocol})
         actions.append(
             _metadata_action(
+                snap.table_id,
                 schema,
                 snap.partition_columns,
                 configuration,
@@ -1181,14 +1185,10 @@ class _FeaturesMixin:
             # the table is already on table-feature versions: the
             # upgrade must enumerate columnMapping alongside
             # everything already in use
-            tmp = Snapshot(
-                snap.version, snap.schema, snap.partition_columns,
-                snap.files, snap.app_versions, config,
-                snap.min_reader, snap.min_writer, snap.domain_metadata,
-                snap.reader_features, snap.writer_features,
-            )
             protocol = self._tf_upgrade(
-                tmp, {"columnMapping"}, {"columnMapping"}
+                dataclasses.replace(snap, configuration=config),
+                {"columnMapping"},
+                {"columnMapping"},
             )
         else:
             # legacy versions carry column mapping without feature

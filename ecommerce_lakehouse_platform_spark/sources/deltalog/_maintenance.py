@@ -23,7 +23,9 @@ from ._base import (
     _checkpoint_arrow_schema,
     _every_file,
     _metadata_action,
+    _protocol_action,
     _remove_action,
+    _state_actions,
 )
 
 
@@ -85,138 +87,22 @@ class _MaintenanceMixin:
                 pass
 
     def checkpoint(self, version: int | None = None) -> int:
-        """Consolidate the log as of ``version`` (default: latest) into
+        """Write the snapshot as of ``version`` (default: latest) as
         ``{version:020d}.checkpoint.parquet`` and point
-        ``_last_checkpoint`` at it. Metadata-only: the checkpoint holds
-        one row per live action (protocol, metaData, active adds), so
+        ``_last_checkpoint`` at it. A checkpoint is the serialized
+        snapshot: one row per state action (``_state_actions``), so
         its size is O(files), and every later snapshot replays it plus
-        only the commits after it instead of the whole JSON history."""
+        only the commits after it instead of the whole JSON history.
+        ``snapshot()`` itself chains from the newest earlier
+        checkpoint, so writing one never replays the whole log."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        versions = self.versions()
-        if version is None:
-            version = versions[-1]
-        protocol: dict[str, Any] | None = None
-        metadata: dict[str, Any] | None = None
-        files: dict[str, dict[str, Any]] = {}
-        app_versions: dict[str, int] = {}
-        domain_metadata: dict[str, str] = {}
-
-        def absorb(action: dict[str, Any]) -> None:
-            nonlocal protocol, metadata
-            if "protocol" in action:
-                protocol = action["protocol"]
-            elif "metaData" in action:
-                metadata = action["metaData"]
-            elif "add" in action:
-                files[action["add"]["path"]] = action["add"]
-            elif "remove" in action:
-                files.pop(action["remove"]["path"], None)
-            elif "txn" in action:
-                txn = action["txn"]
-                app_versions[txn["appId"]] = max(
-                    app_versions.get(txn["appId"], -1), int(txn["version"])
-                )
-            elif "domainMetadata" in action:
-                dm = action["domainMetadata"]
-                if dm.get("removed"):
-                    domain_metadata.pop(dm["domain"], None)
-                else:
-                    domain_metadata[dm["domain"]] = dm.get(
-                        "configuration", ""
-                    )
-
-        # chain from the newest checkpoint at-or-before the target:
-        # each checkpoint costs O(files + commits since the last one),
-        # never O(history)
-        start = 0
-        prev = self._best_checkpoint_at_or_before(version)
-        if prev is not None:
-            for action in self._read_checkpoint(prev):
-                absorb(action)
-            start = prev + 1
-        elif versions[0] > 0:
-            raise ValueError(
-                f"cannot checkpoint version {version}: commits before "
-                f"{versions[0]} were expired and no checkpoint "
-                "at-or-before it exists"
-            )
-        for v in versions:
-            if start <= v <= version:
-                for action in self._read_actions(v):
-                    absorb(action)
-        if protocol is None or metadata is None:
-            raise ValueError("corrupt log: no protocol/metaData to checkpoint")
-
-        rows: list[dict[str, Any]] = [
-            {"protocol": protocol, "metaData": None, "add": None},
-            {
-                "protocol": None,
-                "metaData": {
-                    "id": metadata["id"],
-                    "format": {"provider": metadata["format"]["provider"]},
-                    "schemaString": metadata["schemaString"],
-                    "partitionColumns": list(metadata["partitionColumns"]),
-                    "configuration": list(
-                        (metadata.get("configuration") or {}).items()
-                    ),
-                    "createdTime": metadata.get("createdTime"),
-                },
-                "add": None,
-            },
-        ]
-        # one txn row per appId: the idempotence ledger must survive
-        # log expiry exactly like the file list does
-        for app_id in sorted(app_versions):
-            rows.append(
-                {
-                    "protocol": None,
-                    "metaData": None,
-                    "add": None,
-                    "txn": {"appId": app_id, "version": app_versions[app_id]},
-                }
-            )
-        # one domainMetadata row per live domain (row tracking's
-        # high watermark must survive log expiry too)
-        for domain in sorted(domain_metadata):
-            rows.append(
-                {
-                    "protocol": None,
-                    "metaData": None,
-                    "add": None,
-                    "domainMetadata": {
-                        "domain": domain,
-                        "configuration": domain_metadata[domain],
-                        "removed": False,
-                    },
-                }
-            )
-        def add_row(add: dict[str, Any]) -> dict[str, Any]:
-            return {
-                "protocol": None,
-                "metaData": None,
-                "add": {
-                    "path": add["path"],
-                    "partitionValues": list(
-                        add.get("partitionValues", {}).items()
-                    ),
-                    "size": add.get("size"),
-                    "modificationTime": add.get("modificationTime"),
-                    # a checkpoint restates state, it is not a change
-                    "dataChange": False,
-                    "stats": add.get("stats"),
-                    "tags": list((add.get("tags") or {}).items()),
-                    "deletionVector": add.get("deletionVector"),
-                    "baseRowId": add.get("baseRowId"),
-                },
-            }
-
+        snap = self.snapshot(version)
+        version = snap.version
+        rows = _state_actions(snap)
         schema = _checkpoint_arrow_schema()
-        v2 = (
-            metadata.get("configuration") or {}
-        ).get(self._CKPT_POLICY_KEY) == "v2"
-        if v2:
+        if snap.configuration.get(self._CKPT_POLICY_KEY) == "v2":
             # V2 checkpoint (PROTOCOL.md "V2 Checkpoint Table
             # Feature"): file actions live in SIDECAR parquet files,
             # bucketed by a stable hash of the file path and NAMED BY
@@ -233,17 +119,20 @@ class _MaintenanceMixin:
             # growth never reshuffles every bucket and cross-checkpoint
             # reuse survives (a ceil() count would re-key the whole
             # layout each time the table crossed a bucket boundary)
-            ratio = max(1, len(files) // self._SIDECAR_FILES)
+            adds = [row for row in rows if "add" in row]
+            rows = [row for row in rows if "add" not in row]
+            ratio = max(1, len(adds) // self._SIDECAR_FILES)
             n_buckets = 1 << (ratio.bit_length() - 1)
-            buckets: dict[int, list[str]] = {}
-            for rel in sorted(files):
+            buckets: dict[int, list[dict[str, Any]]] = {}
+            for row in adds:
+                rel = row["add"]["path"]
                 b = (
                     int(hashlib.md5(rel.encode("utf-8")).hexdigest()[:8], 16)
                     % n_buckets
                 )
-                buckets.setdefault(b, []).append(rel)
+                buckets.setdefault(b, []).append(row)
             for b in range(n_buckets):
-                payload = [add_row(files[r]) for r in buckets.get(b, [])]
+                payload = buckets.get(b, [])
                 content = hashlib.md5(
                     json.dumps(payload, sort_keys=True).encode("utf-8")
                 ).hexdigest()
@@ -259,17 +148,12 @@ class _MaintenanceMixin:
                     os.replace(tmp, dst)
                 rows.append(
                     {
-                        "protocol": None,
-                        "metaData": None,
-                        "add": None,
                         "sidecar": {
                             "path": name,
                             "sizeInBytes": os.stat(dst).st_size,
-                        },
+                        }
                     }
                 )
-        else:
-            rows.extend(add_row(files[rel]) for rel in sorted(files))
         table = pa.Table.from_pylist(rows, schema=schema)
         tmp = os.path.join(self.log_dir, f".ckpt-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, tmp)
@@ -692,6 +576,7 @@ class _MaintenanceMixin:
             # configuration) as of the target version stay enforced —
             # an empty map here would silently disable them
             _metadata_action(
+                current.table_id,
                 target.schema,
                 target.partition_columns,
                 target.configuration,
@@ -726,8 +611,9 @@ class _MaintenanceMixin:
         source of truth) instead of hive path recovery, which cannot
         span mixed roots."""
         snap = self.snapshot()
-        has_dv = any(a.get("deletionVector") for a in snap.files.values())
-        if has_dv and snap.partition_columns:
+        if snap.partition_columns and any(
+            a.get("deletionVector") for a in snap.files.values()
+        ):
             raise NotImplementedError(
                 "shallow clone of a PARTITIONED table with active "
                 "deletion vectors is not supported (partition-column "
@@ -740,39 +626,15 @@ class _MaintenanceMixin:
         if target.exists():
             raise FileExistsError(f"clone target is already a table: {target_path}")
         actions: list[dict[str, Any]] = [
-            # a clone carrying DV references inherits the DV protocol
-            # gate (versions AND the feature lists — readers that
-            # would scan the files raw and resurrect deleted rows
-            # must refuse the table); a DV-free clone of a
-            # feature-bearing source still carries the source's lists
-            {
-                "protocol": (
-                    {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(
-                            set(snap.reader_features) | {"deletionVectors"}
-                        ),
-                        "writerFeatures": sorted(
-                            set(snap.writer_features) | {"deletionVectors"}
-                        ),
-                    }
-                    if has_dv
-                    else (
-                        {
-                            "minReaderVersion": snap.min_reader,
-                            "minWriterVersion": snap.min_writer,
-                            "readerFeatures": sorted(snap.reader_features),
-                            "writerFeatures": sorted(snap.writer_features),
-                        }
-                        if snap.min_reader >= 3
-                        else {"minReaderVersion": 1, "minWriterVersion": 2}
-                    )
-                )
-            },
-            # CLONE copies the source's table properties — CHECK
-            # constraints keep holding on the clone
+            # the source's protocol as replayed: a clone reads the
+            # same files the same way (a source with live DVs already
+            # lists deletionVectors, a column-mapped one keeps its
+            # mapping gate)
+            _protocol_action(snap),
+            # a new table under a new id, with the source's properties
+            # — CHECK constraints keep holding on the clone
             _metadata_action(
+                str(uuid.uuid4()),
                 snap.schema,
                 snap.partition_columns,
                 snap.configuration,
@@ -780,7 +642,9 @@ class _MaintenanceMixin:
             ),
         ]
         for rel in sorted(snap.files):
-            add = dict(snap.files[rel])
+            # every cloned file is a change of the new table: its CDF
+            # from version 0 inserts the source's rows
+            add = {**snap.files[rel], "dataChange": True}
             add["path"] = os.path.abspath(os.path.join(self.path, rel))
             if add.get("deletionVector"):
                 # DV sidecars become absolute references too: the

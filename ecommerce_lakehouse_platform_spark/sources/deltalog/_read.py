@@ -5,6 +5,7 @@ whose docstring has the protocol overview."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 from collections.abc import Iterator
@@ -452,14 +453,7 @@ class _ReadMixin:
         candidate: int | None = None
         eff = 0
         for v in self.versions():  # oldest → newest, parsed lazily
-            info = next(
-                (
-                    a["commitInfo"]
-                    for a in self._read_actions(v)
-                    if "commitInfo" in a
-                ),
-                {},
-            )
+            info = self._commit_info(v)
             # in-commit timestamps (when the feature is on) are
             # authoritative and already monotonic; the writer-clock
             # fallback gets monotonized here
@@ -528,17 +522,7 @@ class _ReadMixin:
                     or self._bloom_may_contain(add, pcol, lo)
                 )
             }
-            snap = Snapshot(
-                snap.version,
-                snap.schema,
-                snap.partition_columns,
-                kept,
-                snap.app_versions,
-                snap.configuration,
-                snap.min_reader,
-                snap.min_writer,
-                snap.domain_metadata,
-            )
+            snap = dataclasses.replace(snap, files=kept)
             residual = F.lit(True)
             if lo is not None:
                 residual = residual & (F.col(col) >= lo)
@@ -1188,11 +1172,7 @@ class _ReadMixin:
         if versions[0] > 0:
             ckpt = self._best_checkpoint_at_or_before(versions[0])
             if ckpt is not None:
-                for action in self._read_checkpoint(ckpt):
-                    if "metaData" in action:
-                        schema = T.StructType.fromJson(
-                            json.loads(action["metaData"]["schemaString"])
-                        )
+                schema = self.snapshot(ckpt).schema
         for c in self._change_commits(versions[0] - 1, ending_version):
             # removed and DV-changed files were written under the
             # schema in force BEFORE this commit; added files under

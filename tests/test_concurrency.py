@@ -367,11 +367,11 @@ def test_one_commit_path():
     put-if-absent ``_commit`` is called only inside
     ``_commit_resolving``, which also builds the only ``commitInfo``;
     ``metaData`` dicts are built only by ``_base._metadata_action``
-    and the checkpoint row (a different shape). Pure AST scan of the
+    (checkpoint rows are state actions too). Pure AST scan of the
     package source."""
     builders = {
         "commitInfo": {"_commit_resolving"},
-        "metaData": {"_metadata_action", "checkpoint"},
+        "metaData": {"_metadata_action"},
     }
     stray: list[str] = []
     resolver_calls = 0
@@ -411,4 +411,54 @@ def test_one_commit_path():
     for path in sorted(root.rglob("*.py")):
         Scan(path.relative_to(root)).visit(ast.parse(path.read_text()))
     assert resolver_calls == 1
+    assert not stray, stray
+
+
+def test_one_replay_of_the_log():
+    """Table state comes from one replay: ``_read_checkpoint`` is
+    called only inside ``_CoreMixin.snapshot`` (a checkpoint is that
+    snapshot serialized), and a ``metaData`` id is minted from
+    ``uuid`` only on the table-creating paths, ``write`` (version 0)
+    and ``clone``; every other ``_metadata_action`` restates a
+    snapshot's ``table_id``. Pure AST scan of the deltalog source."""
+    creating = {"write", "clone"}
+    stray: list[str] = []
+    minted: set[str] = set()
+
+    def mentions_uuid(node):
+        return any(getattr(n, "id", None) == "uuid" for n in ast.walk(node))
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, where):
+            self.where, self.scope = where, []
+
+        def visit_ClassDef(self, node):
+            self.scope.append(node.name)
+            if node.name == "_metadata_action" and mentions_uuid(node):
+                stray.append(f"{self.where}: _metadata_action mints an id")
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_FunctionDef = visit_ClassDef
+
+        def visit_Call(self, node):
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            at = f"{self.where}:{node.lineno} in {self.scope}"
+            if name == "_read_checkpoint" and self.scope != [
+                "_CoreMixin",
+                "snapshot",
+            ]:
+                stray.append(f"{at}: _read_checkpoint(")
+            if name == "_metadata_action":
+                table_id = node.args[0]
+                if mentions_uuid(table_id) and self.scope[-1] in creating:
+                    minted.add(self.scope[-1])
+                elif getattr(table_id, "attr", None) != "table_id":
+                    stray.append(f"{at}: metaData id not restated")
+            self.generic_visit(node)
+
+    root = pathlib.Path(ecommerce_lakehouse_platform_spark.__file__).parent
+    for path in sorted((root / "sources" / "deltalog").glob("*.py")):
+        Scan(path.relative_to(root)).visit(ast.parse(path.read_text()))
+    assert minted == creating
     assert not stray, stray

@@ -716,6 +716,24 @@ def test_shallow_clone_partitioned_source(spark, tmp_table):
     assert clone.read(version=0).count() == 4
 
 
+def test_clone_of_checkpointed_source_is_a_data_change(spark, tmp_table):
+    """A clone's version 0 creates the table, so its adds are data
+    changes even where the source snapshot restates them from a
+    checkpoint (``dataChange=false``) or from OPTIMIZE: the clone's
+    change feed from version 0 inserts every source row."""
+    df = spark.createDataFrame(
+        [(i, f"k{i}") for i in range(6)], "id int, k string"
+    )
+    tmp_table.write(df.repartition(2))
+    tmp_table.optimize()
+    tmp_table.checkpoint()
+    clone = tmp_table.clone(tmp_table.path + "_clone")
+    assert all(a["dataChange"] for a in clone.snapshot().files.values())
+    inserted = clone.changes(0).filter(F.col("_change_type") == "insert")
+    assert _canon(inserted.select("id", "k")) == _canon(df)
+    shutil.rmtree(clone.path, ignore_errors=True)
+
+
 def test_concurrent_append_rebases_onto_winner(spark, tmp_table):
     """A blind append that loses the put-if-absent race auto-retries
     at the next version (the Delta protocol's conflict rule: an

@@ -171,6 +171,85 @@ def test_feature_lists_survive_checkpoint_and_expiry(spark, base_dir):
     assert "deletionVectors" in detail["readerFeatures"]
 
 
+def test_table_id_is_stable_across_metadata_commits(spark, base_dir):
+    """``metaData.id`` names the table for its whole life: property,
+    constraint, schema-overwrite, column-mapping and RESTORE commits
+    restate the v0 id, and so do the checkpoint and the first commit
+    after log expiry; only CLONE, which creates a table, mints one."""
+    import pyarrow.parquet as pq
+
+    t = _table(spark, base_dir)  # v0
+    t.set_table_property("owner", "ops")  # v1
+    t.set_constraint("nonneg", "v >= 0")  # v2
+    t.write(
+        _df(spark, 0, 5).withColumn("w", F.lit(1)).coalesce(1),
+        mode="overwrite",
+        overwrite_schema=True,
+    )  # v3
+    t.enable_column_mapping()  # v4
+    t.restore(0)  # v5
+
+    def ids(version):
+        return [
+            a["metaData"]["id"]
+            for a in t._read_actions(version)
+            if "metaData" in a
+        ]
+
+    (first,) = ids(0)
+    assert [ids(v) for v in t.versions()] == [[first]] * 6
+    v = t.checkpoint()
+    rows = pq.read_table(t._checkpoint_path(v)).to_pylist()
+    assert [r["metaData"]["id"] for r in rows if r["metaData"]] == [first]
+    assert t.expire_log() == [0, 1, 2, 3, 4]
+    v = t.set_table_property("owner", "eng")  # v6
+    assert ids(v) == [first]
+    assert MiniDeltaTable(spark, t.path).snapshot().table_id == first
+
+    clone = t.clone(os.path.join(base_dir, "clone"))
+    assert clone.snapshot().table_id not in (None, first)
+
+
+@pytest.mark.parametrize(
+    "prepare, gates, features",
+    [
+        # legacy column mapping: reader 2 / writer 5, no feature lists
+        (lambda t: t.enable_column_mapping(), (2, 5), None),
+        # live deletion vectors: table-feature versions listing them
+        (
+            lambda t: t.delete(F.col("k") == "3", use_dv=True),
+            (3, 7),
+            "deletionVectors",
+        ),
+        (lambda t: None, (1, 2), None),
+    ],
+    ids=["legacy_column_mapping", "deletion_vectors", "plain"],
+)
+def test_clone_keeps_source_protocol(
+    spark, base_dir, prepare, gates, features
+):
+    """CLONE restates the source's protocol as replayed: a protocol-
+    following reader of the clone must apply the same gates as on the
+    source (a downgraded column-mapped clone would be read by its
+    physical names)."""
+    t = _table(spark, base_dir)
+    prepare(t)
+    clone = t.clone(os.path.join(base_dir, "clone"))
+    snap = clone.snapshot()
+    assert (snap.min_reader, snap.min_writer) == gates
+    proto = _proto(clone, 0)
+    if features is None:
+        assert "readerFeatures" not in proto
+        assert "writerFeatures" not in proto
+    else:
+        assert features in snap.reader_features
+        assert features in snap.writer_features
+        assert features in proto["readerFeatures"]
+        assert features in proto["writerFeatures"]
+    assert snap.configuration == t.snapshot().configuration
+    assert sorted(clone.read().collect()) == sorted(t.read().collect())
+
+
 def test_append_only_property_enforced(spark, base_dir):
     """``delta.appendOnly=true`` (the protocol's append-only property):
     appends and OPTIMIZE keep working; overwrite, DELETE (both
