@@ -45,6 +45,13 @@ deliberately small subset:
   time travel, and it replays the schema AS OF that version, so reads
   across an ``overwrite_schema`` evolution see the schema their data
   was written under.
+* One scan of a snapshot's files: ``_ReadMixin._scan`` is the ONLY
+  code that reads the table's data files. ``read()``, DML discovery
+  and rewrites, OPTIMIZE, the bloom-index build and ``changes()`` all
+  go through it, and it applies a Delta reader's per-file duties once,
+  in one order — deletion vectors, ``EXISTS_DEFAULT`` column
+  defaults, row ids, and a clone's log-recorded partition values — so
+  every path sees the rows ``read()`` returns.
 * ``metaData.id`` names the table for its whole life: only the
   table-creating commits (the version-0 write, CLONE) mint one, and
   every later metaData commit — overwrite, schema evolution,

@@ -141,9 +141,15 @@ class _CoreMixin:
                 "before the first retained JSON version were expired "
                 "and no checkpoint at-or-before it exists"
             )
-        for v in versions:
-            if v < start or v > version:
-                continue
+        missing = sorted(set(range(start, version + 1)) - set(versions))
+        if missing:
+            # a replay that skipped a commit would return a state
+            # that never existed — refuse instead
+            raise ValueError(
+                f"cannot reconstruct version {version}: commit "
+                f"{missing[0]} is missing from the log"
+            )
+        for v in range(start, version + 1):
             for action in self._read_actions(v):
                 apply(action)
         if schema is None:

@@ -52,12 +52,7 @@ class _DmlMixin:
                 "references its source's files is not supported; "
                 "rewrite the clone first (optimize() or read()+write())"
             )
-        scan = self._read_files_dv_aware(snap, snap.files, with_rel=True)
-        # predicates are over LOGICAL names; the raw scan is physical
-        scan = scan.select(
-            "_rel",
-            *self._logical_casts(snap.schema, set(scan.columns)),
-        )
+        scan = self._scan(snap, snap.files, file_cols=True)
         touched_rels = sorted(
             r["_rel"]
             for r in scan.filter(condition).select("_rel").distinct().collect()
@@ -66,18 +61,13 @@ class _DmlMixin:
             return None
         tracking = snap.configuration.get(self._RT_KEY) == "true"
         mat = snap.configuration.get(self._RT_MAT_KEY)
-        if tracking:
-            # row-tracked copy-on-write: surviving rows carry their
-            # stable id through the rewrite (DELETE filters, UPDATE
-            # reassigns values — neither touches identity) into the
-            # replacement files' hidden materialized column
-            sub = self._scan_with_row_ids(snap, touched_rels)
-        else:
-            sub = self._read_files_dv_aware(snap, touched_rels)
-            sub = sub.select(
-                *self._logical_casts(snap.schema, set(sub.columns))
-            )
-        replacement = rewrite(sub)
+        # row-tracked copy-on-write: surviving rows carry their stable
+        # id through the rewrite (DELETE filters, UPDATE reassigns
+        # values — neither touches identity) into the replacement
+        # files' hidden materialized column
+        replacement = rewrite(
+            self._scan(snap, touched_rels, row_ids=tracking)
+        )
         # DML commits hold the same invariant as write(): no committed
         # version contains a row violating a CHECK constraint or a
         # generated column's expression. An UPDATE that breaks either
@@ -144,7 +134,7 @@ class _DmlMixin:
         files, not one funnel task. OPTIMIZE materializes DVs away
         (reading victims through the filter); ``changes()`` emits a DV
         commit as row-level delete events; ``clone()`` carries DV
-        references absolutely (unpartitioned sources)."""
+        references absolutely."""
         cond = F.coalesce(condition, F.lit(False))
         if use_dv:
             return self._delete_with_dv(cond, isolation)
@@ -156,67 +146,10 @@ class _DmlMixin:
             isolation,
         )
 
-    def _dv_positions(self, snap: Snapshot) -> DataFrame | None:
-        """(rel, pos) union of every ACTIVE deletion vector, or None
-        when the snapshot carries none."""
-        sidecars = sorted(
-            {
-                add["deletionVector"]["storagePath"]
-                for add in snap.files.values()
-                if add.get("deletionVector")
-            }
-        )
-        if not sidecars:
-            return None
-        out = None
-        for sidecar in sidecars:
-            dvp = self.spark.read.parquet(os.path.join(self.path, sidecar))
-            out = dvp if out is None else out.unionByName(dvp)
-        return out
-
-    def _dv_scan(self, snap: Snapshot, rels=None) -> DataFrame:
-        """Discovery scan for DV DML: (``_rel``, ``_pos``, logical
-        columns) over the given files (default: all active)."""
-        rels = sorted(snap.files if rels is None else rels)
-        sub = (
-            self._reader(
-                {r: snap.files[r] for r in rels},
-                self._needs_schema_merge(snap),
-                self._tw_schema(
-                    snap.schema, self._needs_schema_merge(snap)
-                ),
-            )
-            .parquet(*(os.path.join(self.path, r) for r in rels))
-            .withColumn("_rel", self._rel_from("_metadata.file_path"))
-            .withColumn("_pos", F.col("_metadata.row_index"))
-        )
-        return sub.select(
-            "_rel",
-            "_pos",
-            *self._logical_casts(snap.schema, set(sub.columns)),
-        )
-
-    def _dv_alive(
-        self, matched: DataFrame, existing: DataFrame | None
-    ) -> DataFrame:
-        """Drop rows already dead under an active deletion vector —
-        a DV DML must never re-delete (double-counted cardinality) or
-        resurrect-then-replace them."""
-        if existing is None:
-            return matched
-        return matched.join(
-            existing.select(
-                F.col("rel").alias("_rel"), F.col("pos").alias("_pos")
-            ),
-            ["_rel", "_pos"],
-            "left_anti",
-        )
-
     def _dv_commit(
         self,
         snap: Snapshot,
         matched: DataFrame,
-        existing: DataFrame | None,
         operation: str,
         parameters: dict[str, Any],
         new_rows: DataFrame | None = None,
@@ -225,7 +158,8 @@ class _DmlMixin:
         """Deletion-vector DML commit core shared by DELETE, UPDATE
         and MERGE: mark ``matched``'s (_rel, _pos) positions dead via
         a fresh hive-partitioned sidecar (each touched file's OLD DV
-        positions folded in, so every add references exactly one
+        positions — the rows :meth:`_scan` reads as ``dead`` — folded
+        in, so every add references exactly one
         sidecar and superseded sidecars become vacuumable) and — for
         UPDATE/MERGE — append ``new_rows`` as plain adds in the SAME
         commit. Zero touched-file rewrites: the write cost is the
@@ -247,7 +181,6 @@ class _DmlMixin:
             return self._dv_commit_inner(
                 snap,
                 matched,
-                existing,
                 operation,
                 parameters,
                 new_rows,
@@ -260,7 +193,6 @@ class _DmlMixin:
         self,
         snap: Snapshot,
         matched: DataFrame,
-        existing: DataFrame | None,
         operation: str,
         parameters: dict[str, Any],
         new_rows: DataFrame | None = None,
@@ -302,11 +234,11 @@ class _DmlMixin:
             )
             if up is not None:
                 actions.append({"protocol": up})
-            pos_all = positions
-            if existing is not None:
-                pos_all = pos_all.unionByName(
-                    existing.filter(F.col("rel").isin(*touched))
+            pos_all = positions.unionByName(
+                self._scan(snap, touched, file_cols=True, dead=True).select(
+                    F.col("_rel").alias("rel"), F.col("_pos").alias("pos")
                 )
+            )
             dv_rel = f"_dv/{uuid.uuid4().hex}"
             # per-file position lists, the real protocol's
             # per-file-bitmap shape: hive-partitioned by the data file
@@ -379,12 +311,9 @@ class _DmlMixin:
                 "deletion vectors on tables with absolute file "
                 "references (shallow clones) are not supported"
             )
-        existing = self._dv_positions(snap)
-        matched = self._dv_alive(
-            self._dv_scan(snap).filter(cond), existing
-        )
+        matched = self._scan(snap, snap.files, file_cols=True).filter(cond)
         return self._dv_commit(
-            snap, matched, existing, "DELETE", {}, isolation=isolation
+            snap, matched, "DELETE", {}, isolation=isolation
         )
 
     def update(
@@ -438,9 +367,8 @@ class _DmlMixin:
                     "deletion vectors on tables with absolute file "
                     "references (shallow clones) are not supported"
                 )
-            existing = self._dv_positions(snap)
-            matched = self._dv_alive(
-                self._dv_scan(snap).filter(cond), existing
+            matched = self._scan(snap, snap.files, file_cols=True).filter(
+                cond
             )
             new_rows = matched.select(
                 *[
@@ -455,7 +383,6 @@ class _DmlMixin:
             return self._dv_commit(
                 snap,
                 matched,
-                existing,
                 "UPDATE",
                 params,
                 new_rows=new_rows,
@@ -559,13 +486,7 @@ class _DmlMixin:
             for rel in snap.files
             if os.path.join(self.path, rel) in touched
         )
-        if touched_rels:
-            sub = self._read_files_dv_aware(snap, touched_rels)
-            sub = sub.select(
-                *self._logical_casts(snap.schema, set(sub.columns))
-            )
-        else:
-            sub = self.spark.createDataFrame([], snap.schema)
+        sub = self._scan(snap, touched_rels)
         merged_sub = merge_upsert(sub, source.select(*sub.columns), keys)
         # the pruned path bypasses write(), so it enforces the same
         # commit invariant itself: CHECK constraints and generated
@@ -629,24 +550,14 @@ class _DmlMixin:
                     for rel in snap.files
                     if os.path.join(self.path, rel) in in_range
                 )
-        existing = self._dv_positions(snap)
-        if scan_rels:
-            matched = self._dv_alive(
-                # AQE picks broadcast for a small key set; an explicit
-                # hint would be wrong for a table-scale source
-                self._dv_scan(snap, scan_rels).join(
-                    src.select(*keys).distinct(), on=keys, how="left_semi"
-                ),
-                existing,
-            )
-        else:
-            matched = self.spark.createDataFrame(
-                [], "`_rel` string, `_pos` bigint"
-            )
+        # AQE picks broadcast for a small key set; an explicit hint
+        # would be wrong for a table-scale source
+        matched = self._scan(snap, scan_rels, file_cols=True).join(
+            src.select(*keys).distinct(), on=keys, how="left_semi"
+        )
         return self._dv_commit(
             snap,
             matched,
-            existing,
             "MERGE",
             {
                 "keys": json.dumps(keys),

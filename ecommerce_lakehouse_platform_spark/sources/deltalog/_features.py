@@ -251,16 +251,15 @@ class _FeaturesMixin:
         PHYSICALLY LACK the column surface the default instead of
         NULL, while a post-add file's explicitly stored NULL stays
         NULL: per-file presence decides, exactly Spark's ADD COLUMN
-        DEFAULT contract). Rewrite paths (DML, OPTIMIZE) read through
-        the fill, so compaction MATERIALIZES the default into the
-        rewritten files instead of burying a stored NULL. ALTER
-        COLUMN SET DEFAULT on an EXISTING column intentionally does
-        NOT gain EXISTS_DEFAULT (Spark freezes the read half at ADD
-        time only — ``set_column_default`` keeps its write-only
-        contract). Known non-composition, documented: ``changes()``
-        surfaces pre-add rows under their era schema (no default),
-        and column-mapped tables refuse (the mini table's append
-        evolution refuses there too)."""
+        DEFAULT contract). Every path that scans the table's files
+        reads through the fill (:meth:`_scan`), so DML, the bloom
+        build and ``changes()`` see the default, and compaction
+        MATERIALIZES it into the rewritten files instead of burying a
+        stored NULL. ALTER COLUMN SET DEFAULT on an EXISTING column
+        intentionally does NOT gain EXISTS_DEFAULT (Spark freezes the
+        read half at ADD time only — ``set_column_default`` keeps its
+        write-only contract). Column-mapped tables refuse (the mini
+        table's append evolution refuses there too)."""
         snap = self.snapshot()
         if isinstance(dtype, str):
             dtype = T.DataType.fromDDL(dtype)
@@ -913,24 +912,15 @@ class _FeaturesMixin:
                 "references is not supported; rewrite the clone first"
             )
         pcol = self._phys_column(snap.schema, column)
-        scan = (
-            self._reader(
-                snap.files,
-                read_schema=self._tw_schema(
-                    snap.schema, self._needs_schema_merge(snap)
-                ),
-            )
-            .parquet(*snap.file_paths(self.path))
-            .withColumn("_rel", self._rel_from("_metadata.file_path"))
-        )
-        val = F.col(pcol).cast("string")
+        scan = self._scan(snap, snap.files, file_cols=True)
+        val = F.col(column).cast("string")
         if bits is None or hashes is None:
             import math
 
             densest = (
-                scan.filter(F.col(pcol).isNotNull())
+                scan.filter(F.col(column).isNotNull())
                 .groupBy("_rel")
-                .agg(F.approx_count_distinct(pcol).alias("_n"))
+                .agg(F.approx_count_distinct(column).alias("_n"))
                 .agg(F.max("_n"))
                 .collect()[0][0]
             ) or 1
@@ -953,7 +943,7 @@ class _FeaturesMixin:
             ]
         )
         per_file = (
-            scan.filter(F.col(pcol).isNotNull())
+            scan.filter(F.col(column).isNotNull())
             .select("_rel", F.explode(positions).alias("_p"))
             .groupBy("_rel")
             .agg(F.collect_set("_p").alias("_ps"))
@@ -1037,31 +1027,6 @@ class _FeaturesMixin:
         return (f.metadata or {}).get(
             "delta.columnMapping.physicalName", f.name
         )
-
-    @staticmethod
-    def _logical_casts(
-        schema: T.StructType, available: set[str] | None = None
-    ) -> list[Column]:
-        """Projection from a raw (physical-name) parquet scan to the
-        logical schema: one cast+alias per field. The identity when
-        column mapping is off (physical == logical).
-
-        ``available`` = the scanned relation's actual columns: a
-        schema field whose physical column is absent (every scanned
-        file predates the merge-schema append that added it) projects
-        as a typed NULL instead of an unresolvable reference — the
-        cast-level half of schema-merge reading, needed whenever a
-        scan touches an old-era-only file subset (footer merging can
-        only surface columns that exist in at least one scanned
-        file)."""
-        cols = []
-        for f in schema:
-            p = _FeaturesMixin._phys(f)
-            if available is not None and p not in available:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.col(p).cast(f.dataType).alias(f.name))
-        return cols
 
     def _phys_column(self, schema: T.StructType, column: str) -> str:
         """Logical -> physical column-name translation for stats

@@ -89,7 +89,8 @@ class _MaintenanceMixin:
     def checkpoint(self, version: int | None = None) -> int:
         """Write the snapshot as of ``version`` (default: latest) as
         ``{version:020d}.checkpoint.parquet`` and point
-        ``_last_checkpoint`` at it. A checkpoint is the serialized
+        ``_last_checkpoint`` at it unless the hint already names a
+        newer checkpoint. A checkpoint is the serialized
         snapshot: one row per state action (``_state_actions``), so
         its size is O(files), and every later snapshot replays it plus
         only the commits after it instead of the whole JSON history.
@@ -158,6 +159,12 @@ class _MaintenanceMixin:
         tmp = os.path.join(self.log_dir, f".ckpt-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, tmp)
         os.replace(tmp, self._checkpoint_path(version))
+        hint = self._latest_checkpoint_version()
+        if hint is not None and hint >= version:
+            # the hint names the NEWEST checkpoint: re-checkpointing an
+            # older version must not move it back, or snapshots would
+            # chain from the older one across expired commits
+            return version
         hint_tmp = os.path.join(self.log_dir, f".lc-{uuid.uuid4().hex}.json")
         with open(hint_tmp, "w", encoding="utf-8") as fh:
             json.dump({"version": version, "size": len(rows)}, fh)
@@ -335,26 +342,13 @@ class _MaintenanceMixin:
         mat = snap.configuration.get(self._RT_MAT_KEY)
         # read victims THROUGH any active deletion vectors: OPTIMIZE
         # materializes DVs — the rewritten files carry no descriptor
-        # and the deleted rows are physically gone. _rel is attached
-        # from file metadata (pre-join: input_file_name cannot span
-        # the DV anti-join's sources) and doubles as _fname below.
+        # and the deleted rows are physically gone. A row-tracked
+        # rewrite carries each surviving row's stable id into the new
+        # layout as the hidden materialized column; _rel (the source
+        # file) doubles as _fname below.
+        df = self._scan(snap, victim_rels, row_ids=tracking, file_cols=True)
         if tracking:
-            # row-tracked rewrite: surviving rows carry their stable
-            # id into the new layout as the hidden materialized column
-            df = self._scan_with_row_ids(
-                snap, victim_rels, with_rel=True
-            ).withColumnRenamed("_row_id", mat)
-        else:
-            df = self._read_files_dv_aware(
-                snap, victim_rels, with_rel=True
-            )
-            # project physical -> logical up front (column mapping),
-            # _rel kept for the bin join below; downstream stays
-            # logical
-            df = df.select(
-                "_rel",
-                *self._logical_casts(snap.schema, set(df.columns)),
-            )
+            df = df.withColumnRenamed("_row_id", mat)
         cast_cols = [f.name for f in snap.schema] + ([mat] if tracking else [])
         if zorder_by:
             df, nrows = self._zorder_layout(
@@ -384,10 +378,8 @@ class _MaintenanceMixin:
             bins_df = self.spark.createDataFrame(
                 bins_rows, "_fname string, _bins long"
             )
-            # the row's source path is the _rel column the DV-aware
-            # reader attached from the file METADATA — same
-            # percent-decode guards as before (see _rel_from), but
-            # join-safe
+            # the row's source path is the _rel column the scan
+            # attached from the file METADATA (see _rel_from)
             df = df.withColumnRenamed("_rel", "_fname").join(
                 F.broadcast(bins_df), "_fname", "left"
             )
@@ -606,20 +598,12 @@ class _MaintenanceMixin:
         to the source files, and vacuuming the SOURCE invalidates
         clones that still reference those files — the real command's
         caveat too. Partitioned sources clone fine: every ``add``
-        action carries its ``partitionValues``, and the clone's read
-        path restores partition columns FROM THE LOG (the protocol's
+        action carries its ``partitionValues``, and the clone's scan
+        restores partition columns FROM THE LOG (the protocol's
         source of truth) instead of hive path recovery, which cannot
-        span mixed roots."""
+        span mixed roots; deletion vectors and column defaults apply
+        to the referenced files exactly as on the source."""
         snap = self.snapshot()
-        if snap.partition_columns and any(
-            a.get("deletionVector") for a in snap.files.values()
-        ):
-            raise NotImplementedError(
-                "shallow clone of a PARTITIONED table with active "
-                "deletion vectors is not supported (partition-column "
-                "recovery and the DV anti-join cannot compose across "
-                "roots on the clone's read path); OPTIMIZE first"
-            )
         target = type(self)(
             self.spark, target_path, self.checkpoint_interval
         )

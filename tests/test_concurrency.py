@@ -462,3 +462,56 @@ def test_one_replay_of_the_log():
         Scan(path.relative_to(root)).visit(ast.parse(path.read_text()))
     assert minted == creating
     assert not stray, stray
+
+
+def test_one_scan_of_a_snapshots_files():
+    """Data files are read by one scan: every ``spark.read``, every
+    ``_reader(`` call and every ``"left_anti"`` join under the deltalog
+    package sits inside ``_ReadMixin._scan``, which applies deletion
+    vectors, column defaults and row ids once for every caller. Two
+    reads are not table scans and are listed: the identity-watermark
+    aggregate over one staged file in ``write``, and the DV commit's
+    cardinality readback of the sidecar it just wrote. Pure AST scan
+    of the deltalog source."""
+    allowed = {"write", "_dv_commit_inner"}
+    stray: list[str] = []
+    seen: list[str] = []
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, where):
+            self.where, self.scope = where, []
+
+        def visit_ClassDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_FunctionDef = visit_ClassDef
+
+        def hit(self, node, what):
+            if self.scope[:2] == ["_ReadMixin", "_scan"]:
+                return
+            if what == "spark.read" and self.scope[-1] in allowed:
+                seen.append(self.scope[-1])
+                return
+            stray.append(f"{self.where}:{node.lineno} {what} in {self.scope}")
+
+        def visit_Attribute(self, node):
+            if node.attr == "read" and (
+                getattr(node.value, "attr", None) == "spark"
+                or getattr(node.value, "id", None) == "spark"
+            ):
+                self.hit(node, "spark.read")
+            if node.attr == "_reader":
+                self.hit(node, "_reader(")
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if node.value == "left_anti":
+                self.hit(node, "left_anti")
+
+    root = pathlib.Path(ecommerce_lakehouse_platform_spark.__file__).parent
+    for path in sorted((root / "sources" / "deltalog").glob("*.py")):
+        Scan(path.relative_to(root)).visit(ast.parse(path.read_text()))
+    assert sorted(seen) == sorted(allowed)
+    assert not stray, stray

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import tempfile
 
@@ -3522,3 +3523,187 @@ def test_registry_fixture_memo_rebuilds_without_data_files(spark):
     rows2 = sorted(map(tuple, query(spark, SF_SMOKE).collect()))
     assert rd._FIXTURE_MEMO[key] != path1  # rebuilt at a fresh path
     assert rows2 == rows1
+
+
+def _defaulted(spark, path, tracked=False):
+    """ids 0..5 in two files, then ADD COLUMN c INT DEFAULT 5: every
+    row reads c = 5 from files that physically lack c."""
+    t = MiniDeltaTable(spark, path, checkpoint_interval=0)
+    t.write(spark.range(0, 6).repartition(2))
+    if tracked:
+        t.enable_row_tracking()
+    t.add_column("c", "int", default_sql="5")
+    return t
+
+
+def _fold(df, cols):
+    """Net row multiset of a change feed: +1 per insert, -1 per delete."""
+    from collections import Counter
+
+    net = Counter()
+    for r in df.collect():
+        net[tuple(r[c] for c in cols)] += (
+            1 if r["_change_type"] == "insert" else -1
+        )
+    return {k: n for k, n in net.items() if n}
+
+
+def _case_dv_delete(spark, t, path):
+    twin = _defaulted(spark, path + "_cow")
+    t.delete(F.col("c") == 5, use_dv=True)
+    twin.delete(F.col("c") == 5)
+    return _canon(t.read()), _canon(twin.read())
+
+
+def _case_tracked_optimize(spark, t, path):
+    t.write(
+        spark.createDataFrame([(6, 7), (7, 7)], "id long, c int"),
+        mode="append",
+    )  # stored values stay
+    before = _canon(t.read())
+    t.optimize()
+    return _canon(t.read()), before
+
+
+def _case_tracked_update(spark, t, path):
+    want = _canon(
+        t.read().withColumn(
+            "id", F.when(F.col("id") == 0, 100).otherwise(F.col("id"))
+        )
+    )
+    t.update(F.col("id") == 0, {"id": F.lit(100)})
+    return _canon(t.read()), want
+
+
+def _case_bloom_point_read(spark, t, path):
+    want = _canon(t.read().filter(F.col("c") == 5))
+    t.build_bloom_index("c")
+    return _canon(t.read(where=("c", 5, 5))), want
+
+
+def _case_changes_fold(spark, t, path):
+    v_add = t.snapshot().version
+    v_del = t.delete(F.col("id") == 0)
+    # the snapshot diff as a fold: the old rows out, the new rows in
+    before = t.read(version=v_add).withColumn("_change_type", F.lit("delete"))
+    after = t.read(version=v_del).withColumn("_change_type", F.lit("insert"))
+    cols = ["id", "c"]
+    return (
+        _fold(t.changes(v_add + 1, v_del), cols),
+        _fold(before.unionByName(after), cols),
+    )
+
+
+def _case_row_ids(spark, t, path):
+    got = t.read(with_row_ids=True)
+    assert sorted(r._row_id for r in got.collect()) == list(range(6))
+    return _canon(got.drop("_row_id")), _canon(t.read())
+
+
+@pytest.mark.parametrize(
+    "case, tracked",
+    [
+        (_case_dv_delete, False),
+        (_case_tracked_optimize, True),
+        (_case_tracked_update, True),
+        (_case_bloom_point_read, False),
+        (_case_changes_fold, False),
+        (_case_row_ids, True),
+    ],
+    ids=[
+        "dv_delete",
+        "tracked_optimize",
+        "tracked_update",
+        "bloom_point_read",
+        "changes_fold",
+        "row_ids",
+    ],
+)
+def test_exists_default_survives_every_scan(spark, tmp_table, case, tracked):
+    """An ADD COLUMN default is part of the row on every path that
+    scans the table's files: a DV delete matches it, a row-tracked
+    OPTIMIZE or UPDATE rewrites it, the bloom build indexes it, the
+    change feed's delete events show it (so the fold over a window
+    after the ADD equals the snapshot diff), and row-id reads carry
+    it. Each case compares against the copy-on-write twin or the
+    pre-op read()."""
+    t = _defaulted(spark, tmp_table.path, tracked)
+    assert {r.c for r in t.read().collect()} == {5}
+    got, want = case(spark, t, tmp_table.path)
+    assert got == want
+
+
+def test_checkpoint_hint_never_moves_back(spark, tmp_table):
+    """``_last_checkpoint`` names the newest checkpoint: re-writing an
+    older checkpoint after log expiry must not move it back (the
+    snapshot would chain from the older checkpoint across expired
+    commits), and a replay that finds a commit missing between its
+    checkpoint and its target raises instead of skipping it."""
+    tmp_table.checkpoint_interval = 0
+    for i in range(5):
+        tmp_table.write(
+            spark.range(i * 5, i * 5 + 5), mode="append" if i else "overwrite"
+        )
+    tmp_table.checkpoint(2)
+    tmp_table.checkpoint(4)
+    tmp_table.expire_log()
+    assert tmp_table.read().count() == 25
+    tmp_table.checkpoint(2)
+    assert tmp_table._latest_checkpoint_version() == 4
+    assert tmp_table.read().count() == 25
+    assert tmp_table.read(version=2).count() == 15
+
+    tmp_table.write(spark.range(25, 30), mode="append")  # v5
+    tmp_table.write(spark.range(30, 35), mode="append")  # v6
+    os.unlink(tmp_table._version_file(5))
+    with pytest.raises(ValueError, match="commit 5 is missing"):
+        tmp_table.snapshot(6)
+
+
+def test_plain_partitioned_read_keeps_one_pruned_scan(spark, tmp_table):
+    """The plan dashboards and snapshot reads depend on: a DV-less read
+    of a partitioned table is ONE parquet scan whose partition filter
+    prunes directories — no join and no ``_metadata`` column."""
+    import datetime
+
+    df = spark.range(0, 40).select(
+        "id", F.expr("date_add(DATE'2024-01-01', CAST(id % 4 AS INT))").alias("d")
+    )
+    tmp_table.write(df, partition_by=["d"])
+    q = tmp_table.read().filter(
+        F.col("d").between(datetime.date(2024, 1, 2), datetime.date(2024, 1, 3))
+    )
+    assert q.count() == 20
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "simple"
+    )
+    plan = q._jdf.queryExecution().explainString(jmode)
+    assert plan.count("FileScan parquet") == 1, plan
+    filters = re.search(r"PartitionFilters: \[(.*)\]", plan)
+    assert filters and "d#" in filters.group(1), plan
+    assert "Join" not in plan, plan
+    assert "_metadata" not in plan, plan
+
+
+def test_partitioned_clone_composes_dvs_and_defaults(spark, tmp_table):
+    """A partitioned shallow clone reads its source's deletion vectors
+    and column defaults through the same scan as the source: partition
+    values come from the log, each sidecar's rels resolve against the
+    source root, and a file lacking a defaulted column fills it."""
+    tmp_table.checkpoint_interval = 0
+    tmp_table.write(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "a"), (4, None)], "id int, p string"
+        ),
+        partition_by=["p"],
+    )
+    tmp_table.add_column("c", "int", default_sql="5")
+    tmp_table.delete(F.col("id") == 3, use_dv=True)
+    clone = tmp_table.clone(tmp_table.path + "_clone")
+    assert _canon(clone.read()) == _canon(tmp_table.read())
+    assert {(r.id, r.p, r.c) for r in clone.read().collect()} == {
+        (1, "a", 5), (2, "b", 5), (4, None, 5)
+    }
+    assert _fold(clone.changes(0), ["id", "p", "c"]) == {
+        (1, "a", 5): 1, (2, "b", 5): 1, (4, None, 5): 1
+    }

@@ -188,10 +188,11 @@ def test_changed_queries_sit_inside_driver_window():
     from ecommerce_lakehouse_platform_spark import registry
 
     changed = {
-        # the Delta log has one replay: checkpoint() serializes
-        # snapshot(), every metaData commit keeps the table id, and
-        # CLONE restates the source protocol — every query that
-        # commits to, checkpoints or replays a MiniDeltaTable
+        # a MiniDeltaTable's data files are read by one scan
+        # (_ReadMixin._scan): snapshot reads, DML, OPTIMIZE and the
+        # change feed all apply deletion vectors, column defaults and
+        # row ids there — every query that reads, rewrites or streams
+        # a MiniDeltaTable
         "ext_delta_time_travel",
         "ext_delta_cdf_fold",
         "ext_delta_merge_cdf",
