@@ -6,7 +6,8 @@ Parameterization follows the reference's ``:start_date``/``:end_date``
 named params (Spark ≥3.4 ``spark.sql(q, args=...)`` is the SQL-string
 twin; here the params are function arguments). Date-range predicates
 are plain column filters so they push into the parquet scan (and prune
-partitions on a date-partitioned layout).
+partitions on a date-partitioned layout, row groups by their min/max on
+a date-sorted one).
 
 Top-k queries use orderBy+limit → Spark plans TakeOrderedAndProject
 (true distributed top-k, no global sort). A deterministic tiebreak key

@@ -2,22 +2,43 @@
 
 The reference's macro-lifecycle (README.md:26-33 there): idempotent
 full-overwrite materialization between layers, fail-fast DQ gate
-before any BI query runs, re-runnable in order. Gold/silver fact
-tables are written PARTITIONED BY their date column so the dashboard
-BETWEEN predicates become partition-pruned scans — the load-bearing
-layout decision at 100 TB (SURVEY.md §4).
+before any BI query runs, re-runnable in order.
+
+Each silver/gold fact table declares its date column, and
+:func:`~..sources.writers.date_layout` sizes the layout from it: the
+table is PARTITIONED BY the date only when one date's rows fill a
+target file (``spark.sql.files.maxPartitionBytes``), which at 100 TB
+makes the dashboard BETWEEN predicates partition-pruned scans
+(SURVEY.md §4). Below that the table is written with no partition
+directories, rows sorted by the date within each file, and the same
+predicates prune on min/max statistics.
+
+The refresh pays once per table: each write reports its own row count
+(an ``Observation`` on the written frame; for ``minidelta`` the
+commit's ``numRecords``), and each table is read back with the schema
+its write just produced, so no count scan and no schema-inference job
+runs after the writes.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dq import CheckResult, expect
 from ..sources.catalog import load_table
-from ..sources.writers import read_table, table_counts, write_table
+from ..sources.deltalog import MiniDeltaTable
+
+# table_counts stays importable from here, next to the writer and
+# reader this module resolves by name
+from ..sources.writers import (  # noqa: F401
+    date_layout,
+    read_table,
+    table_counts,
+    write_table,
+)
 from . import gold, silver
 
 
@@ -38,7 +59,8 @@ def run_pipeline(
     """Materialize every layer under ``warehouse`` and gate on DQ.
 
     Bronze is the fixture parquet itself (already columnar); silver
-    and gold are written out, facts partitioned by date.
+    and gold are written out, each fact table in the layout
+    :func:`date_layout` sizes from its date column.
 
     ``table_format="minidelta"`` materializes every layer as a
     Delta-protocol-logged table (sources/deltalog/) instead of raw
@@ -48,11 +70,30 @@ def run_pipeline(
     """
     result = PipelineResult()
 
-    def write(df, path, partition_by=None):
-        write_table(df, path, partition_by=partition_by, fmt=table_format)
-
-    def read(path):
-        return read_table(spark, path, fmt=table_format)
+    def materialize(
+        layer: str, tables: dict[str, tuple[DataFrame, str | None]]
+    ) -> tuple[dict[str, DataFrame], dict[str, int]]:
+        """Write each ``name -> (frame, date column)`` under
+        ``warehouse/layer``; return the tables read back with the
+        schema just written, and the rows each write wrote."""
+        frames, counts = {}, {}
+        for name, (df, date_col) in tables.items():
+            path = f"{warehouse}/{layer}/{name}"
+            partition_by = None
+            if date_col is not None:
+                df, partition_by = date_layout(df, date_col)
+            if table_format == "minidelta":
+                write_table(df, path, partition_by=partition_by, fmt=table_format)
+                counts[name] = MiniDeltaTable(spark, path).rows_added()
+            else:
+                rows = Observation()
+                df = df.observe(rows, F.count(F.lit(1)).alias("rows"))
+                write_table(df, path, partition_by=partition_by, fmt=table_format)
+                counts[name] = rows.get["rows"]
+            frames[name] = read_table(
+                spark, path, fmt=table_format, schema=df.schema
+            )
+        return frames, counts
 
     # --- silver ---------------------------------------------------
     customers = silver.silver_customers(load_table(spark, sf_dir, "customer"))
@@ -61,17 +102,16 @@ def run_pipeline(
     events = silver.silver_events(load_table(spark, sf_dir, "events"))
     products = silver.silver_products(load_table(spark, sf_dir, "part"))
 
-    write(customers, f"{warehouse}/silver/customers")
-    write(orders, f"{warehouse}/silver/orders", partition_by="order_date")
-    write(items, f"{warehouse}/silver/order_items", partition_by="order_date")
-    write(events, f"{warehouse}/silver/events", partition_by="event_date")
-    write(products, f"{warehouse}/silver/products")
-
-    silver_tables = {
-        name: read(f"{warehouse}/silver/{name}")
-        for name in ["customers", "orders", "order_items", "events", "products"]
-    }
-    result.silver_counts = table_counts(silver_tables)
+    silver_tables, result.silver_counts = materialize(
+        "silver",
+        {
+            "customers": (customers, None),
+            "orders": (orders, "order_date"),
+            "order_items": (items, "order_date"),
+            "events": (events, "event_date"),
+            "products": (products, None),
+        },
+    )
 
     # --- gold (reads the materialized silver, like the reference) --
     g_daily = gold.gold_daily_metrics(silver_tables["events"], silver_tables["orders"])
@@ -86,23 +126,16 @@ def run_pipeline(
         silver_tables["customers"], silver_tables["orders"]
     )
 
-    write(g_daily, f"{warehouse}/gold/daily_metrics", partition_by="event_date")
-    write(g_products, f"{warehouse}/gold/product_metrics")
-    write(g_funnel, f"{warehouse}/gold/product_funnel", partition_by="event_date")
-    write(g_sessions, f"{warehouse}/gold/session_metrics")
-    write(g_c360, f"{warehouse}/gold/customer_360")
-
-    gold_tables = {
-        name: read(f"{warehouse}/gold/{name}")
-        for name in [
-            "daily_metrics",
-            "product_metrics",
-            "product_funnel",
-            "session_metrics",
-            "customer_360",
-        ]
-    }
-    result.gold_counts = table_counts(gold_tables)
+    gold_tables, result.gold_counts = materialize(
+        "gold",
+        {
+            "daily_metrics": (g_daily, "event_date"),
+            "product_metrics": (g_products, None),
+            "product_funnel": (g_funnel, "event_date"),
+            "session_metrics": (g_sessions, None),
+            "customer_360": (g_c360, None),
+        },
+    )
 
     # --- DQ gate (the reference's four invariants over OUR gold) ---
     pm, c360 = gold_tables["product_metrics"], gold_tables["customer_360"]

@@ -95,12 +95,11 @@ class _CommitMixin:
         schema (appended after the existing fields, nullable), while
         every existing column must still arrive with its logged type —
         widening only, never dropping. Older files simply lack the new
-        columns; reads fill them with NULL via parquet footer merging,
-        turned on per-table by the ``minidelta.appendSchemaEvolved``
-        marker this write sets (only evolved tables pay the
-        footer-merge cost; the marker persists — a conservative
-        constant). Refused on column-mapped tables (new fields would
-        need physical-name assignment) and on partition-layout
+        columns; reads fill them with NULL, as every scan reads with
+        the log's schema. The write also sets the
+        ``minidelta.appendSchemaEvolved`` table property, which no
+        reader consults. Refused on column-mapped tables (new fields
+        would need physical-name assignment) and on partition-layout
         changes, like the real option.
 
         ``replace_where={col: value, ...}`` scopes an overwrite to the
@@ -131,11 +130,9 @@ class _CommitMixin:
             if mode == "overwrite":
                 self._assert_not_append_only(prior, "overwrite")
         evolved_append: T.StructType | None = None
-        # True only when the evolution ADDED columns (footer-merge /
-        # null-fill territory) — a pure type widening sets
-        # evolved_append for the metaData commit but must not set the
-        # appendSchemaEvolved marker (reads handle widening via the
-        # explicit scan schema, not footer merging)
+        # True only when the evolution ADDED columns — a pure type
+        # widening sets evolved_append for the metaData commit but
+        # not the appendSchemaEvolved marker
         evolved_added_cols = False
         if (
             prior is not None
@@ -339,10 +336,8 @@ class _CommitMixin:
                     if not new_fields and not widened:
                         # merely REORDERED (or safely upcast) columns,
                         # nothing new: align to the table schema and
-                        # write as a plain append — committing a no-op
-                        # metaData action here would permanently set
-                        # the appendSchemaEvolved marker and tax every
-                        # future read with parquet footer merging
+                        # write as a plain append, with no no-op
+                        # metaData action
                         df = df.select(*[f.name for f in prior.schema])
                     else:
                         base_fields = []

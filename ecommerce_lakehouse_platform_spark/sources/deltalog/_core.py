@@ -190,6 +190,18 @@ class _CoreMixin:
             {},
         )
 
+    def rows_added(self, version: int | None = None) -> int:
+        """Rows commit ``version`` (default: the latest) added, summed
+        from its ``dataChange`` adds' ``numRecords`` stats: a writer's
+        row count read from the log, never from a scan."""
+        if version is None:
+            version = self.versions()[-1]
+        return sum(
+            json.loads(a["add"]["stats"])["numRecords"]
+            for a in self._read_actions(version)
+            if "add" in a and a["add"].get("dataChange", True)
+        )
+
     def history(self) -> list[dict[str, Any]]:
         """One commitInfo dict per version, newest first."""
         return [

@@ -244,11 +244,12 @@ class _FeaturesMixin:
         """ALTER TABLE ... ADD COLUMN [DEFAULT ...]: metadata-only —
         zero files rewritten. Without a default, rows in files
         predating the column read back NULL (merge-schema null-fill).
-        WITH a default, the expression is frozen as BOTH halves of the
-        public column-defaults feature (r13 stretch): the write half
-        (``CURRENT_DEFAULT`` — later writes OMITTING the column fill
-        it) and the read half (``EXISTS_DEFAULT`` — rows in files that
-        PHYSICALLY LACK the column surface the default instead of
+        WITH a default, it sets BOTH halves of the public
+        column-defaults feature (r13 stretch): the write half
+        (``CURRENT_DEFAULT``, the expression — later writes OMITTING
+        the column fill it) and the read half (``EXISTS_DEFAULT``, the
+        expression's value at ADD time as a SQL literal — rows in
+        files that PHYSICALLY LACK the column surface it instead of
         NULL, while a post-add file's explicitly stored NULL stays
         NULL: per-file presence decides, exactly Spark's ADD COLUMN
         DEFAULT contract). Every path that scans the table's files
@@ -278,22 +279,38 @@ class _FeaturesMixin:
             # constant-foldable check, same restriction as
             # set_column_default: no column references
             try:
-                self.spark.range(1).select(F.expr(default_sql)).collect()
+                folded = self.spark.range(1).select(
+                    F.expr(default_sql).cast(dtype)
+                )
+                folded.collect()
             except Exception as exc:
                 raise ValueError(
                     f"default for {name!r} must be a constant-foldable "
                     f"expression with no column references: "
                     f"{default_sql!r} ({exc})"
                 ) from None
+            # the read half is the VALUE at ADD time, logged as the
+            # folded literal's SQL (Spark's EXISTS_DEFAULT): an
+            # expression like current_timestamp() must not re-evaluate
+            # on every read of the old rows
+            value = (
+                folded._jdf.queryExecution()
+                .optimizedPlan()
+                .expressions()
+                .head()
+                .child()
+            )
+            if not value.foldable():
+                raise ValueError(
+                    f"default for {name!r} must be a constant-foldable "
+                    f"expression: {default_sql!r}"
+                )
             meta["CURRENT_DEFAULT"] = default_sql
-            meta["EXISTS_DEFAULT"] = default_sql
+            meta["EXISTS_DEFAULT"] = value.sql()
         fields = list(snap.schema) + [
             T.StructField(name, dtype, True, meta)
         ]
         config = dict(snap.configuration)
-        # the evolved marker routes reads to the explicit wide scan
-        # schema, which null-fills the new column for old files —
-        # the EXISTS_DEFAULT fill then replaces exactly those nulls
         config[self._EVOLVED_KEY] = "true"
         return self._commit_schema(
             snap,
@@ -564,10 +581,6 @@ class _FeaturesMixin:
         return self._commit_schema(
             snap,
             new_schema,
-            # the add is a schema evolution over any already-staged
-            # (zero-row) files: route reads through the explicit scan
-            # schema so the new column null-fills deterministically
-            # instead of depending on which footer inference samples
             {**snap.configuration, self._EVOLVED_KEY: "true"},
             "ADD COLUMNS",
             {

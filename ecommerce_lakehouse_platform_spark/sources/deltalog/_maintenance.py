@@ -723,20 +723,24 @@ class _MaintenanceMixin:
         retention_ms`` are reclaimed, so time travel and CDF over the
         window stay intact while older versions' storage is released
         — the default 0 reclaims everything unreferenced, the real
-        command's RETAIN 0 HOURS. Files on disk with NO remove action
-        at all (orphaned staging debris) are always reclaimable: no
-        retained version can reference them."""
+        command's RETAIN 0 HOURS. A file or ``_dv/`` sidecar that no
+        retained commit removes is either debris or a concurrent
+        writer's staged output that its commit is about to reference,
+        so, as the Delta protocol has it, it is reclaimed only once its
+        modification time is older than ``now − retention_ms``: the
+        window protects in-flight writers as well as time travel."""
         snap = self.snapshot()
         active = set(snap.files)
         cutoff = int(time.time() * 1000) - max(0, retention_ms)
         removed_at = self._remove_timestamps() if retention_ms > 0 else {}
 
         def retained(rel: str) -> bool:
-            return (
-                retention_ms > 0
-                and rel in removed_at
-                and removed_at[rel] > cutoff
-            )
+            if retention_ms <= 0:
+                return False
+            if rel in removed_at:
+                return removed_at[rel] > cutoff
+            mtime = os.path.getmtime(os.path.join(self.path, rel))
+            return mtime * 1000 > cutoff
 
         live_sidecars = {
             a["deletionVector"]["storagePath"]
@@ -763,7 +767,7 @@ class _MaintenanceMixin:
         if os.path.isdir(dv_root):
             for name in sorted(os.listdir(dv_root)):
                 rel = f"_dv/{name}"
-                if rel not in live_sidecars:
+                if rel not in live_sidecars and not retained(rel):
                     shutil.rmtree(os.path.join(self.path, rel),
                                   ignore_errors=True)
                     removed.append(rel)

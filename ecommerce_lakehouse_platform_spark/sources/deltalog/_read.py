@@ -189,41 +189,19 @@ class _ReadMixin:
         return False
 
     @classmethod
-    def _tw_schema(
-        cls, schema: T.StructType, evolved: bool = False
-    ) -> T.StructType | None:
-        """Explicit PHYSICAL read schema when the scan cannot trust
-        per-file footer inference: any column carries a
-        ``delta.typeChanges`` record (files written before the change
-        store the narrow type; the vectorized reader upcasts in-scan
-        when handed the wide schema), or ``evolved`` (a merge-schema
-        append added columns; the explicit schema null-fills files
-        that predate them). Either way it is ONE scan with no per-era
-        branches and — unlike the ``mergeSchema`` option — no up-front
-        footer-merge job, which reads every file's footer before the
-        query starts and grows linearly with file count (sf1, 33
-        files: 0.59s footer-merged vs 0.40s explicit for the same
-        aggregate). None when the log's files are homogeneous (schema
-        inference reads one footer and stays the cheap default)."""
-        if not evolved and not any(
-            (f.metadata or {}).get(cls._TYPE_CHANGES_META)
-            for f in schema
-        ):
-            return None
+    def _tw_schema(cls, schema: T.StructType) -> T.StructType:
+        """The explicit PHYSICAL read schema of a snapshot's files,
+        from the log: every column under its physical name and logged
+        type, nullable. Every scan passes it, so none pays the
+        schema-inference job that reads a file footer before the query
+        starts, and files of every era read as one relation: a column
+        a file lacks (added later, by a merge-schema append or ADD
+        COLUMN) reads as NULL, and a column whose type widened since
+        the file was written (``delta.typeChanges``) is upcast in-scan
+        by the vectorized reader."""
         return T.StructType(
             [T.StructField(cls._phys(f), f.dataType, True) for f in schema]
         )
-
-    @classmethod
-    def _needs_schema_merge(cls, snap: Snapshot) -> bool:
-        """True when this snapshot's files may span a merge-schema
-        append (the marker is set by ``write(merge_schema=True)`` and
-        persists; a later OPTIMIZE homogenizes the data but the flag
-        is a cheap conservative constant). Since r11 the flag routes
-        reads to an explicit scan schema (:meth:`_tw_schema`) rather
-        than the ``mergeSchema`` footer-merge option — same null-fill
-        semantics without the per-scan footer job."""
-        return snap.configuration.get(cls._EVOLVED_KEY) == "true"
 
     @staticmethod
     def _exists_default_fields(schema: T.StructType) -> dict[str, str]:
@@ -252,8 +230,8 @@ class _ReadMixin:
         per-file obligations once each, always in this order:
 
         * reader setup — ``basePath`` (hive partition recovery) when
-          every path is table-rooted, and the explicit physical schema
-          of :meth:`_tw_schema`;
+          every path is table-rooted, and the log's physical schema
+          (:meth:`_tw_schema`);
         * partition values of files outside the root (a shallow
           clone's absolute references) come from the log's
           ``partitionValues``;
@@ -316,7 +294,7 @@ class _ReadMixin:
                     ]
                 ),
             )
-        read_schema = self._tw_schema(schema, self._needs_schema_merge(snap))
+        read_schema = self._tw_schema(schema)
         by_name = {f.name: f for f in schema}
         dvs: dict[str, list[str]] = {}
         for r in rels:
@@ -370,16 +348,14 @@ class _ReadMixin:
             spans.setdefault(key, []).append(r)
         parts = []
         for (root, pvs, lacking, matd), srels in spans.items():
-            reader = self.spark.read
             span_schema = read_schema
-            if matd and span_schema is not None:
-                # the materialized row-id column is PHYSICAL-only: an
-                # explicit scan schema must request it
+            if matd:
+                # the materialized row-id column is PHYSICAL-only: the
+                # scan schema must request it
                 span_schema = T.StructType(
                     list(span_schema) + [T.StructField(mat, T.LongType())]
                 )
-            if span_schema is not None:
-                reader = reader.schema(span_schema)
+            reader = self.spark.read.schema(span_schema)
             if not root:
                 reader = reader.option("basePath", self.path)
             df = reader.parquet(*(os.path.join(self.path, r) for r in srels))
@@ -389,15 +365,14 @@ class _ReadMixin:
                 for c, v in zip(snap.partition_columns, pvs)
             }
             values.update((p, fills[p]) for p in lacking)
-            scanned = set(df.columns)
             # one projection to the logical schema (column mapping's
-            # physical -> logical rename; a column no scanned file has
-            # reads as a typed NULL)
+            # physical -> logical rename)
             cols = []
             for f in schema:
                 p = self._phys(f)
-                v = values.get(p, F.col(p) if p in scanned else F.lit(None))
-                cols.append(v.cast(f.dataType).alias(f.name))
+                cols.append(
+                    values.get(p, F.col(p)).cast(f.dataType).alias(f.name)
+                )
             rel = self._rel_from("_metadata.file_path", root or None)
             if root:
                 rel = F.concat(F.lit(root + "/"), rel)
@@ -452,7 +427,8 @@ class _ReadMixin:
                 if os.path.isabs(sidecar):
                     key = F.concat(F.lit(self._dv_root(sidecar) + "/"), key)
                 m = (
-                    self.spark.read.parquet(os.path.join(self.path, sidecar))
+                    self.spark.read.schema("rel string, pos long")
+                    .parquet(os.path.join(self.path, sidecar))
                     .select(key.alias("_rel"), F.col("pos").alias("_pos"))
                     .filter(F.col("_rel").isin(refs))
                 )

@@ -4,9 +4,18 @@ The reference materializes every layer as a full-overwrite managed
 Delta table, optionally partitioned by a date column
 (/root/reference/02_silver/02_silver_transform.py:29-37,
 /root/reference/03_gold/03_gold_aggregate.py:24-31). Here: Delta when
-the runtime has it, Parquet otherwise (identical layout semantics);
-partitioning by the date column is what makes every dashboard's
-BETWEEN predicate a partition-pruned scan at scale.
+the runtime has it, Parquet otherwise (identical layout semantics).
+
+The layout of a table with a date column is sized, not fixed
+(:func:`date_layout`): it is partitioned by the date only when one
+date's rows fill a target file (the session's
+``spark.sql.files.maxPartitionBytes``), so every dashboard's BETWEEN
+predicate is a partition-pruned scan at scale. Below that, a date
+directory would hold a sliver of a file: the table is written without
+partition directories, its rows sorted by the date inside each file,
+and the same predicates prune on the row groups' and files' min/max
+statistics instead (Delta Lake, VLDB'20, makes the same trade of
+fine-grained partitions for statistics plus clustering).
 
 The table-format behaviors themselves — atomic versioned commits,
 schema enforcement/evolution, time travel, log-level partition
@@ -21,6 +30,8 @@ pipeline output would see stale rows if it were the default sink.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _delta_available(spark: SparkSession) -> bool:
@@ -105,13 +116,50 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+def date_layout(df: DataFrame, date_col: str) -> tuple[DataFrame, str | None]:
+    """The layout of a table whose rows carry date column ``date_col``:
+    ``(df, date_col)`` — partition by the date — when the estimated
+    bytes per date value reach one target file, the session's
+    ``spark.sql.files.maxPartitionBytes``; otherwise ``(df sorted by
+    the date within each output file, None)``, which writes no
+    partition directories and gives each file and row group tight
+    min/max bounds on the date.
+
+    The estimate is the planner's ``sizeInBytes`` summed over the
+    plan's leaf scans, which runs no job. Only when that reaches the
+    target does one aggregate count the distinct dates to divide it
+    by, so a table smaller than one file never pays a job to decide."""
+    spark = df.sparkSession
+    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    size = sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
+    if size >= target:
+        dates = df.select(F.countDistinct(date_col)).first()[0]
+        if size >= target * max(dates, 1):
+            return df, date_col
+    return df.sortWithinPartitions(date_col), None
+
+
+def read_table(
+    spark: SparkSession,
+    path: str,
+    fmt: str | None = None,
+    schema: T.StructType | None = None,
+) -> DataFrame:
+    """Read a table written by :func:`write_table`. ``schema`` is the
+    schema the writer wrote, when the caller knows it: a parquet read
+    then skips schema inference, the job that reads a file footer
+    before the query starts. Delta reads (either log) ignore it: the
+    log holds the schema, and delta-spark refuses a read schema."""
     if fmt == "minidelta":
         from .deltalog import MiniDeltaTable
 
         return MiniDeltaTable(spark, path).read()
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
-    return spark.read.format(fmt).load(path)
+    reader = spark.read.format(fmt)
+    if schema is not None and fmt == "parquet":
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 def list_tables(spark: SparkSession, schema: str | None = None) -> list[str]:

@@ -362,6 +362,29 @@ def test_metadata_winner_conflicts_every_writer(
     assert got.filter(F.col("v") < 0).count() == 0
 
 
+@pytest.mark.parametrize("writer", ["append", "dv_delete"])
+def test_vacuum_with_retention_spares_a_staged_commit(spark, base, writer):
+    """A VACUUM with a retention window that runs between a writer's
+    staging and its commit leaves the staged data files and deletion
+    vector sidecars alone (they are younger than the window), so the
+    commit that then references them reads back."""
+    t = _two_file_table(spark, base)
+    orig = t._commit_resolving
+
+    def vacuum_first(*args, **kwargs):
+        MiniDeltaTable(spark, t.path).vacuum(retention_ms=7 * 86_400_000)
+        return orig(*args, **kwargs)
+
+    t._commit_resolving = vacuum_first
+    if writer == "append":
+        t.write(_df(spark, 100, 105).coalesce(2), mode="append")
+        expected = 45
+    else:
+        t.delete(F.col("k") == "3", use_dv=True)
+        expected = 39
+    assert t.read().count() == expected
+
+
 def test_one_commit_path():
     """Every commit goes through the conflict resolver: the raw
     put-if-absent ``_commit`` is called only inside

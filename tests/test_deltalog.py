@@ -17,6 +17,7 @@ import os
 import re
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -1801,15 +1802,22 @@ def test_vacuum_retention_window(spark, tmp_table):
     """vacuum(retention_ms): files removed INSIDE the window survive
     (time travel to those versions stays intact); a second vacuum
     with no retention reclaims them; orphaned never-logged debris is
-    always reclaimable."""
+    reclaimable once it is older than the window (younger, it may be a
+    writer's staged file), and always under RETAIN 0."""
     orders = _orders(spark).limit(20).localCheckpoint(eager=True)
     tmp_table.write(orders)  # v0
     tmp_table.write(orders.limit(5))  # v1: v0's files become inactive NOW
 
-    # plant never-logged debris (a crashed writer's leftover)
-    debris = os.path.join(tmp_table.path, "orphan-debris.parquet")
-    with open(debris, "wb") as fh:
-        fh.write(b"PAR1junkPAR1")
+    # plant never-logged debris (a crashed writer's leftover), one
+    # file two hours old and one fresh
+    for name in ("orphan-debris.parquet", "fresh-debris.parquet"):
+        with open(os.path.join(tmp_table.path, name), "wb") as fh:
+            fh.write(b"PAR1junkPAR1")
+    two_hours_ago = time.time() - 7200
+    os.utime(
+        os.path.join(tmp_table.path, "orphan-debris.parquet"),
+        (two_hours_ago, two_hours_ago),
+    )
 
     reclaimed = tmp_table.vacuum(retention_ms=3_600_000)  # 1h window
     assert "orphan-debris.parquet" in reclaimed
@@ -1819,6 +1827,7 @@ def test_vacuum_retention_window(spark, tmp_table):
 
     reclaimed2 = tmp_table.vacuum()  # RETAIN 0: reclaims v0's files
     assert reclaimed2, "expected the inactive v0 files to be reclaimed"
+    assert "fresh-debris.parquet" in reclaimed2
     with pytest.raises(Exception):
         tmp_table.read(version=0).count()
     assert tmp_table.read().count() == 5
@@ -3523,6 +3532,65 @@ def test_registry_fixture_memo_rebuilds_without_data_files(spark):
     rows2 = sorted(map(tuple, query(spark, SF_SMOKE).collect()))
     assert rd._FIXTURE_MEMO[key] != path1  # rebuilt at a fresh path
     assert rows2 == rows1
+
+
+def test_add_column_default_is_frozen_at_add_time(spark, tmp_table):
+    """ADD COLUMN ... DEFAULT current_timestamp(): the read half
+    (EXISTS_DEFAULT) is the value at ADD time, logged as a SQL literal,
+    so two reads of the same old rows agree; the write half
+    (CURRENT_DEFAULT) stays the expression."""
+    tmp_table.write(spark.createDataFrame([("a", 1)], "k string, v int"))
+    tmp_table.add_column("ts", "timestamp", default_sql="current_timestamp()")
+    first = tmp_table.read().first()["ts"]
+    time.sleep(0.05)
+    assert tmp_table.read().first()["ts"] == first
+    deleted_at = tmp_table.delete(F.col("k") == "a")
+    assert tmp_table.changes(deleted_at).first()["ts"] == first
+    field = tmp_table.snapshot().schema["ts"]
+    assert field.metadata["CURRENT_DEFAULT"] == "current_timestamp()"
+    assert field.metadata["EXISTS_DEFAULT"].startswith("TIMESTAMP '")
+
+
+def _jobs_while(spark, build):
+    """Spark jobs started while ``build()`` runs (its own job group)."""
+    sc = spark.sparkContext
+    group = f"build-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "build a DataFrame")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_and_changes_build_without_jobs(spark, tmp_table):
+    """read() and changes() build their DataFrames from the log alone:
+    the scan schema is the log's, so no schema-inference job reads a
+    footer first, whatever the table's history (partitions, a
+    merge-schema append, a deletion vector)."""
+    tmp_table.write(
+        spark.range(0, 8).select(
+            "id", (F.col("id") % 2).cast("int").alias("p")
+        ),
+        partition_by=["p"],
+    )
+    assert _jobs_while(spark, tmp_table.read) == []
+    tmp_table.write(
+        spark.range(8, 12).select(
+            "id",
+            (F.col("id") % 2).cast("int").alias("p"),
+            F.lit("x").alias("note"),
+        ),
+        mode="append",
+        merge_schema=True,
+    )
+    tmp_table.delete(F.col("id") == 3, use_dv=True)
+    assert _jobs_while(spark, tmp_table.read) == []
+    assert _jobs_while(spark, lambda: tmp_table.changes(0)) == []
+    assert tmp_table.read().count() == 11
+    assert tmp_table.read().filter("note = 'x'").count() == 4
 
 
 def _defaulted(spark, path, tracked=False):

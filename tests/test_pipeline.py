@@ -1,5 +1,5 @@
-"""End-to-end medallion pipeline: materialization, partitioned layout,
-partition pruning, DQ gate, CSV bronze ingest."""
+"""End-to-end medallion pipeline: materialization, the size-aware
+layout, partition pruning, DQ gate, CSV bronze ingest."""
 
 from __future__ import annotations
 
@@ -7,17 +7,86 @@ import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from ecommerce_lakehouse_platform_spark.plans import silver
 from ecommerce_lakehouse_platform_spark.plans.pipeline import run_pipeline
+from ecommerce_lakehouse_platform_spark.sources.catalog import load_table
 from ecommerce_lakehouse_platform_spark.sources.csv import ingest_bronze
-from ecommerce_lakehouse_platform_spark.sources.writers import write_table
+from ecommerce_lakehouse_platform_spark.sources.writers import (
+    date_layout,
+    read_table,
+    write_table,
+)
 
 from .conftest import SF_SMOKE
 
+# every table run_pipeline writes -> its declared date column
+TABLES = {
+    "silver/customers": None,
+    "silver/orders": "order_date",
+    "silver/order_items": "order_date",
+    "silver/events": "event_date",
+    "silver/products": None,
+    "gold/daily_metrics": "event_date",
+    "gold/product_metrics": None,
+    "gold/product_funnel": "event_date",
+    "gold/session_metrics": None,
+    "gold/customer_360": None,
+}
 
-@pytest.mark.slow  # ~3 min: two full materialized pipeline runs
+
+def _data_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(root, n)
+        for root, _, names in os.walk(path)
+        if "_delta_log" not in root
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
+def _assert_smoke_layout(spark, warehouse, result, table_format=None):
+    """At smoke scale no date fills a file: every table is written
+    without partition directories, each file sorted by the table's
+    date, and each reported count equals a count of the table."""
+    counts = {
+        **{f"silver/{k}": v for k, v in result.silver_counts.items()},
+        **{f"gold/{k}": v for k, v in result.gold_counts.items()},
+    }
+    assert set(counts) == set(TABLES)
+    for table, date_col in TABLES.items():
+        path = f"{warehouse}/{table}"
+        assert not [
+            d for d in os.listdir(path) if "=" in d
+        ], f"{table} has partition directories"
+        files = _data_files(path)
+        assert files, table
+        if date_col is not None:
+            for f in files:
+                dates = pq.read_table(f, columns=[date_col]).column(0).to_pylist()
+                assert dates == sorted(dates), f"{f} is not sorted by {date_col}"
+        assert counts[table] == read_table(spark, path, fmt=table_format).count(), table
+
+
+def _files_read(df) -> int:
+    """Collect ``df`` and return its file scans' "number of files read"."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    scans = [
+        leaves.apply(i)
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName().startswith("Scan")
+    ]
+    assert scans, plan.toString()
+    return sum(s.metrics().apply("numFiles").value() for s in scans)
+
+
 def test_pipeline_end_to_end(spark):
     warehouse = tempfile.mkdtemp(prefix="warehouse_")
     try:
@@ -26,13 +95,43 @@ def test_pipeline_end_to_end(spark):
         assert result.silver_counts["order_items"] == 6000
         assert result.gold_counts["customer_360"] == 150
         assert all(r.passed for r in result.dq_results), result.dq_results
-        # partitioned layout exists (event_date=... dirs)
-        ev_dirs = os.listdir(f"{warehouse}/silver/events")
-        assert any(d.startswith("event_date=") for d in ev_dirs)
+        _assert_smoke_layout(spark, warehouse, result)
         # rerun is idempotent (full overwrite)
         again = run_pipeline(spark, SF_SMOKE, warehouse)
         assert again.silver_counts == result.silver_counts
         assert again.gold_counts == result.gold_counts
+    finally:
+        shutil.rmtree(warehouse, ignore_errors=True)
+
+
+@pytest.mark.parametrize("table_format", [None, "minidelta"])
+def test_date_layout_partitions_once_a_date_fills_a_file(spark, table_format):
+    """The layout policy partitions by the declared date column once
+    the estimated bytes per date reach the target file size
+    (``spark.sql.files.maxPartitionBytes``, forced small here), and a
+    one-day window over the written table then reads fewer files than
+    the table lists, on both sinks."""
+    events = silver.silver_events(load_table(spark, SF_SMOKE, "events"))
+    assert date_layout(events, "event_date")[1] is None
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        laid_out, partition_by = date_layout(events, "event_date")
+    finally:
+        spark.conf.set(key, before)
+    assert partition_by == "event_date"
+    warehouse = tempfile.mkdtemp(prefix="layout_")
+    try:
+        path = f"{warehouse}/events"
+        write_table(laid_out, path, partition_by=partition_by, fmt=table_format)
+        assert [d for d in os.listdir(path) if d.startswith("event_date=")]
+        table = read_table(spark, path, fmt=table_format)
+        day = table.select(F.min("event_date")).first()[0]
+        window = table.filter(F.col("event_date") == day)
+        listed = len(_data_files(path))
+        assert 0 < _files_read(window) < listed
+        assert window.count() == events.filter(F.col("event_date") == day).count()
     finally:
         shutil.rmtree(warehouse, ignore_errors=True)
 
@@ -133,7 +232,6 @@ def test_sql_workspace_three_layers(spark):
     assert tiers >= 2
 
 
-@pytest.mark.slow  # ~3 min: full pipeline through the minidelta sink
 def test_pipeline_minidelta_mode(spark):
     """table_format='minidelta' materializes every layer through the
     Delta-protocol log: same counts and DQ result as the parquet run,
@@ -153,9 +251,10 @@ def test_pipeline_minidelta_mode(spark):
         assert result.silver_counts["orders"] == 1500
         assert result.gold_counts["customer_360"] == 150
         assert all(r.passed for r in result.dq_results), result.dq_results
+        _assert_smoke_layout(spark, warehouse, result, "minidelta")
         orders_tbl = MiniDeltaTable(spark, f"{warehouse}/silver/orders")
         assert orders_tbl.snapshot().version == 0
-        assert orders_tbl.snapshot().partition_columns == ["order_date"]
+        assert orders_tbl.snapshot().partition_columns == []
         # rerun commits NEW versions (the overwrite is logged, not a
         # directory clobber) and stays idempotent
         again = run_pipeline(
@@ -165,10 +264,6 @@ def test_pipeline_minidelta_mode(spark):
         assert orders_tbl.snapshot().version == 1
         # time travel to the pre-rerun materialization still works
         assert orders_tbl.read(version=0).count() == 1500
-        # log-level pruning sees the hive partition values
-        one_date = orders_tbl.read().select("order_date").first()[0]
-        pruned = orders_tbl.files_for({"order_date": one_date})
-        assert pruned and len(pruned) < len(orders_tbl.snapshot().files)
     finally:
         shutil.rmtree(warehouse, ignore_errors=True)
 
