@@ -93,6 +93,8 @@ def _change_events(actions: list[dict[str, Any]]) -> list[ChangeEvent]:
 class _ReadMixin:
     # -- read -----------------------------------------------------------
 
+    # set by commits that add columns; no reader consults it (every
+    # scan reads with the log's schema)
     _EVOLVED_KEY = "minidelta.appendSchemaEvolved"
     # v2 checkpoint policy (the real writer's delta.checkpointPolicy):
     # "v2" routes checkpoint() to the manifest + content-hash-named
