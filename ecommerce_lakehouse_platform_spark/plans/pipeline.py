@@ -4,14 +4,11 @@ The reference's macro-lifecycle (README.md:26-33 there): idempotent
 full-overwrite materialization between layers, fail-fast DQ gate
 before any BI query runs, re-runnable in order.
 
-Each silver/gold fact table declares its date column, and
-:func:`~..sources.writers.date_layout` sizes the layout from it: the
-table is PARTITIONED BY the date only when one date's rows fill a
-target file (``spark.sql.files.maxPartitionBytes``), which at 100 TB
-makes the dashboard BETWEEN predicates partition-pruned scans
-(SURVEY.md §4). Below that the table is written with no partition
-directories, rows sorted by the date within each file, and the same
-predicates prune on min/max statistics.
+Each silver/gold fact table declares its date column. The table is
+written with no partition directories and its rows sorted by that date
+within each file, so the dashboard BETWEEN predicates prune on file
+and row-group min/max statistics instead of paying one file per date
+(the trade :mod:`..sources.writers` explains).
 
 The refresh pays once per table: each write reports its own row count
 (an ``Observation`` on the written frame; for ``minidelta`` the
@@ -34,7 +31,6 @@ from ..sources.deltalog import MiniDeltaTable
 # table_counts stays importable from here, next to the writer and
 # reader this module resolves by name
 from ..sources.writers import (  # noqa: F401
-    date_layout,
     read_table,
     table_counts,
     write_table,
@@ -59,8 +55,8 @@ def run_pipeline(
     """Materialize every layer under ``warehouse`` and gate on DQ.
 
     Bronze is the fixture parquet itself (already columnar); silver
-    and gold are written out, each fact table in the layout
-    :func:`date_layout` sizes from its date column.
+    and gold are written out, each fact table sorted by its date
+    column within each file.
 
     ``table_format="minidelta"`` materializes every layer as a
     Delta-protocol-logged table (sources/deltalog/) instead of raw
@@ -79,16 +75,15 @@ def run_pipeline(
         frames, counts = {}, {}
         for name, (df, date_col) in tables.items():
             path = f"{warehouse}/{layer}/{name}"
-            partition_by = None
             if date_col is not None:
-                df, partition_by = date_layout(df, date_col)
+                df = df.sortWithinPartitions(date_col)
             if table_format == "minidelta":
-                write_table(df, path, partition_by=partition_by, fmt=table_format)
-                counts[name] = MiniDeltaTable(spark, path).rows_added()
+                version = write_table(df, path, fmt=table_format)
+                counts[name] = MiniDeltaTable(spark, path).rows_added(version)
             else:
                 rows = Observation()
                 df = df.observe(rows, F.count(F.lit(1)).alias("rows"))
-                write_table(df, path, partition_by=partition_by, fmt=table_format)
+                write_table(df, path, fmt=table_format)
                 counts[name] = rows.get["rows"]
             frames[name] = read_table(
                 spark, path, fmt=table_format, schema=df.schema

@@ -190,12 +190,10 @@ class _CoreMixin:
             {},
         )
 
-    def rows_added(self, version: int | None = None) -> int:
-        """Rows commit ``version`` (default: the latest) added, summed
-        from its ``dataChange`` adds' ``numRecords`` stats: a writer's
-        row count read from the log, never from a scan."""
-        if version is None:
-            version = self.versions()[-1]
+    def rows_added(self, version: int) -> int:
+        """Rows commit ``version`` added, summed from its ``dataChange``
+        adds' ``numRecords`` stats: a writer's row count read from the
+        log, never from a scan."""
         return sum(
             json.loads(a["add"]["stats"])["numRecords"]
             for a in self._read_actions(version)

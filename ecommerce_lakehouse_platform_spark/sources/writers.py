@@ -6,16 +6,17 @@ Delta table, optionally partitioned by a date column
 /root/reference/03_gold/03_gold_aggregate.py:24-31). Here: Delta when
 the runtime has it, Parquet otherwise (identical layout semantics).
 
-The layout of a table with a date column is sized, not fixed
-(:func:`date_layout`): it is partitioned by the date only when one
-date's rows fill a target file (the session's
-``spark.sql.files.maxPartitionBytes``), so every dashboard's BETWEEN
-predicate is a partition-pruned scan at scale. Below that, a date
-directory would hold a sliver of a file: the table is written without
-partition directories, its rows sorted by the date inside each file,
-and the same predicates prune on the row groups' and files' min/max
-statistics instead (Delta Lake, VLDB'20, makes the same trade of
-fine-grained partitions for statistics plus clustering).
+The medallion refresh (:func:`..plans.pipeline.run_pipeline`) writes
+no partition directories: each table with a date column has its rows
+sorted by the date inside each file, so every dashboard's BETWEEN
+predicate prunes on the row groups' and files' min/max statistics
+(Delta Lake, VLDB'20, trades fine-grained partitions for statistics
+plus clustering the same way). A date directory pays off only once one
+date's rows fill a file (``spark.sql.files.maxPartitionBytes``,
+128 MB); at the largest generated scale (sf1) the densest table holds
+under 1 MB a date, so no workload here reaches that point.
+``write_table``'s explicit ``partition_by`` stays for callers that
+know their sizes.
 
 The table-format behaviors themselves — atomic versioned commits,
 schema enforcement/evolution, time travel, log-level partition
@@ -30,7 +31,6 @@ pipeline output would see stale rows if it were the default sink.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -48,7 +48,7 @@ def write_table(
     partition_by: str | list[str] | None = None,
     mode: str = "overwrite",
     fmt: str | None = None,
-) -> None:
+) -> int | None:
     """Full-overwrite materialization, optionally partitioned.
 
     Idempotent overwrite is the pipeline's fault-tolerance story
@@ -62,13 +62,14 @@ def write_table(
     (01_bronze_ingest.py:34, 02_silver_transform.py:29-37) when the
     delta-spark runtime is absent. Readers must then go through
     :func:`read_table` with the same fmt (the log, not a directory
-    listing, defines the active file set).
+    listing, defines the active file set); the call returns the
+    table version it committed. The other sinks return None.
     """
     cols = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     if fmt == "minidelta":
         from .deltalog import MiniDeltaTable
 
-        MiniDeltaTable(df.sparkSession, path).write(
+        return MiniDeltaTable(df.sparkSession, path).write(
             df,
             mode=mode,
             partition_by=cols or None,
@@ -76,7 +77,6 @@ def write_table(
             # overwrite; mirror that blanket opt-in
             overwrite_schema=(mode == "overwrite"),
         )
-        return
     fmt = fmt or ("delta" if _delta_available(df.sparkSession) else "parquet")
     writer = df.write.format(fmt).mode(mode)
     if fmt == "delta":
@@ -114,30 +114,6 @@ def write_bucketed(
         scols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
         writer = writer.sortBy(*scols)
     writer.saveAsTable(table)
-
-
-def date_layout(df: DataFrame, date_col: str) -> tuple[DataFrame, str | None]:
-    """The layout of a table whose rows carry date column ``date_col``:
-    ``(df, date_col)`` — partition by the date — when the estimated
-    bytes per date value reach one target file, the session's
-    ``spark.sql.files.maxPartitionBytes``; otherwise ``(df sorted by
-    the date within each output file, None)``, which writes no
-    partition directories and gives each file and row group tight
-    min/max bounds on the date.
-
-    The estimate is the planner's ``sizeInBytes`` summed over the
-    plan's leaf scans, which runs no job. Only when that reaches the
-    target does one aggregate count the distinct dates to divide it
-    by, so a table smaller than one file never pays a job to decide."""
-    spark = df.sparkSession
-    target = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    size = sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
-    if size >= target:
-        dates = df.select(F.countDistinct(date_col)).first()[0]
-        if size >= target * max(dates, 1):
-            return df, date_col
-    return df.sortWithinPartitions(date_col), None
 
 
 def read_table(

@@ -1,4 +1,4 @@
-"""End-to-end medallion pipeline: materialization, the size-aware
+"""End-to-end medallion pipeline: materialization, the date-sorted
 layout, partition pruning, DQ gate, CSV bronze ingest."""
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from ecommerce_lakehouse_platform_spark.plans.pipeline import run_pipeline
 from ecommerce_lakehouse_platform_spark.sources.catalog import load_table
 from ecommerce_lakehouse_platform_spark.sources.csv import ingest_bronze
 from ecommerce_lakehouse_platform_spark.sources.writers import (
-    date_layout,
     read_table,
     write_table,
 )
@@ -49,9 +48,9 @@ def _data_files(path: str) -> list[str]:
 
 
 def _assert_smoke_layout(spark, warehouse, result, table_format=None):
-    """At smoke scale no date fills a file: every table is written
-    without partition directories, each file sorted by the table's
-    date, and each reported count equals a count of the table."""
+    """Every table is written without partition directories, each file
+    sorted by the table's date, and each reported count equals a count
+    of the table."""
     counts = {
         **{f"silver/{k}": v for k, v in result.silver_counts.items()},
         **{f"gold/{k}": v for k, v in result.gold_counts.items()},
@@ -105,26 +104,19 @@ def test_pipeline_end_to_end(spark):
 
 
 @pytest.mark.parametrize("table_format", [None, "minidelta"])
-def test_date_layout_partitions_once_a_date_fills_a_file(spark, table_format):
-    """The layout policy partitions by the declared date column once
-    the estimated bytes per date reach the target file size
-    (``spark.sql.files.maxPartitionBytes``, forced small here), and a
-    one-day window over the written table then reads fewer files than
-    the table lists, on both sinks."""
+def test_explicit_partition_by_prunes_a_day(spark, table_format):
+    """``write_table``'s explicit ``partition_by`` still writes one
+    directory per date on both sinks, and a one-day window over the
+    table then reads fewer files than the table lists. The minidelta
+    sink returns the version it committed, the parquet sink None."""
     events = silver.silver_events(load_table(spark, SF_SMOKE, "events"))
-    assert date_layout(events, "event_date")[1] is None
-    key = "spark.sql.files.maxPartitionBytes"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "64")
-    try:
-        laid_out, partition_by = date_layout(events, "event_date")
-    finally:
-        spark.conf.set(key, before)
-    assert partition_by == "event_date"
     warehouse = tempfile.mkdtemp(prefix="layout_")
     try:
         path = f"{warehouse}/events"
-        write_table(laid_out, path, partition_by=partition_by, fmt=table_format)
+        version = write_table(
+            events, path, partition_by="event_date", fmt=table_format
+        )
+        assert version == (0 if table_format == "minidelta" else None)
         assert [d for d in os.listdir(path) if d.startswith("event_date=")]
         table = read_table(spark, path, fmt=table_format)
         day = table.select(F.min("event_date")).first()[0]
