@@ -52,6 +52,9 @@ deliberately small subset:
   in one order — deletion vectors, ``EXISTS_DEFAULT`` column
   defaults, row ids, and a clone's log-recorded partition values — so
   every path sees the rows ``read()`` returns.
+* One write stage: ``_stage`` is the ONLY way a writer's rows reach
+  storage, and its write job itself refuses a row that breaks a CHECK
+  constraint, a generated column or a ``replace_where`` filter.
 * ``metaData.id`` names the table for its whole life: only the
   table-creating commits (the version-0 write, CLONE) mint one, and
   every later metaData commit — overwrite, schema evolution,

@@ -14,7 +14,8 @@ import uuid
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,11 +31,9 @@ from ._base import (
     ProtocolChangedError,
     SchemaMismatchError,
     Snapshot,
-    _all_match,
     _atomic_publish,
     _column_nonnull_count,
     _commit_timestamp,
-    _every_file,
     _metadata_action,
     _parse_partition_values,
     _remove_action,
@@ -53,20 +52,6 @@ class _CommitMixin:
         if not self.exists():
             return None
         return self.snapshot().app_versions.get(app_id)
-
-    @staticmethod
-    def _in_partitions(replace_where: dict[str, Any]):
-        """Read predicate of a ``replace_where`` overwrite: files whose
-        partitionValues match the filter, in the hive string domain
-        (same rule as files_for)."""
-        wanted = {
-            k: (None if v is None else str(v))
-            for k, v in replace_where.items()
-        }
-        return lambda add: all(
-            (add.get("partitionValues") or {}).get(k) == v
-            for k, v in wanted.items()
-        )
 
     def write(
         self,
@@ -105,8 +90,8 @@ class _CommitMixin:
         ``replace_where={col: value, ...}`` scopes an overwrite to the
         matching PARTITIONS (the ``replaceWhere`` contract): only
         active files whose ``partitionValues`` match are removed,
-        every incoming row must match the filter (validated before
-        staging — the real option rejects strays too), and a lost
+        every incoming row must match the filter (checked inside the
+        write job — the real option rejects strays too), and a lost
         put-if-absent race REBASES when the winner left the scoped
         partitions untouched — two concurrent daily-partition
         backfills over disjoint dates both land; overlapping ones
@@ -123,6 +108,7 @@ class _CommitMixin:
             raise ValueError(f"unsupported mode: {mode}")
         if merge_schema and mode != "append":
             raise ValueError("merge_schema applies to mode='append' only")
+        replaces_schema = overwrite_schema and mode == "overwrite"
         tbl_exists = self.exists()
         prior = self.snapshot() if tbl_exists else None
         if prior is not None:
@@ -162,48 +148,12 @@ class _CommitMixin:
                     f"replace_where keys {missing} are not partition "
                     f"columns {prior.partition_columns}"
                 )
-            stray = df.filter(
-                ~_all_match(
-                    [
-                        F.col(k).cast("string").eqNullSafe(
-                            F.lit(None if v is None else str(v))
-                        )
-                        for k, v in replace_where.items()
-                    ]
-                )
-            ).count()
-            if stray:
-                raise ConstraintViolationError(
-                    f"replace_where {replace_where}: {stray} incoming "
-                    "row(s) fall outside the replaced partitions"
-                )
-        # an explicit schema evolution REPLACES the metaData, so the
-        # prior schema's generated columns must not be injected into
-        # (or reordered onto) the evolved frame — a dropped or
-        # redefined generated column would otherwise silently
-        # resurrect, or fail on a stale expression whose inputs the
-        # evolution removed
-        if prior is not None and not (overwrite_schema and mode == "overwrite"):
-            gen = self._generation_exprs(prior.schema)
-            dft = self._default_exprs(prior.schema)
-            if gen or dft:
-                types = {f.name: f.dataType for f in prior.schema}
-                for gname, gsql in gen.items():
-                    if gname not in df.columns:
-                        # the writer omitted the generated column:
-                        # compute it (the protocol's convenience half)
-                        df = df.withColumn(
-                            gname, F.expr(gsql).cast(types[gname])
-                        )
-                for dname, dsql in dft.items():
-                    if dname not in df.columns:
-                        # omitted defaulted column: fill it (column
-                        # defaults fill; provided values pass as-is)
-                        df = df.withColumn(
-                            dname, F.expr(dsql).cast(types[dname])
-                        )
-                if set(df.columns) == {f.name for f in prior.schema}:
-                    df = df.select(*[f.name for f in prior.schema])
+            # the hive string domain partitionValues are logged in
+            # (same rule as files_for)
+            replace_where = {
+                k: None if v is None else str(v)
+                for k, v in replace_where.items()
+            }
         # identity columns: an identity-omitting batch gets values
         # assigned (watermark + k*step via the two-pass distributed
         # row number) and this commit restates the advanced watermark;
@@ -222,8 +172,26 @@ class _CommitMixin:
         # removes the extra aggregate job.
         identity_pending: dict[str, dict] = {}
         identity_explicit: dict[str, dict] = {}
-        if prior is not None and not (overwrite_schema and mode == "overwrite"):
-            for iname, fmeta in self._identity_fields(prior.schema).items():
+        # an explicit schema evolution REPLACES the metaData, so the
+        # prior schema's generated, defaulted and identity columns must
+        # not be injected into (or reordered onto) the evolved frame —
+        # a dropped or redefined generated column would otherwise
+        # silently resurrect, or fail on a stale expression whose
+        # inputs the evolution removed
+        if prior is not None and not replaces_schema:
+            types = {f.name: f.dataType for f in prior.schema}
+            fills = {
+                **self._generation_exprs(prior.schema),
+                **self._default_exprs(prior.schema),
+            }
+            for name, sql in fills.items():
+                if name not in df.columns:
+                    # the writer omitted a generated column (computed:
+                    # the protocol's convenience half) or a defaulted
+                    # one (filled; provided values pass as-is)
+                    df = df.withColumn(name, F.expr(sql).cast(types[name]))
+            identities = self._identity_fields(prior.schema)
+            for iname, fmeta in identities.items():
                 if iname not in df.columns:
                     df, _ = self._assign_identity(df, iname, fmeta)
                     identity_pending[iname] = fmeta
@@ -236,24 +204,17 @@ class _CommitMixin:
                     )
                 else:
                     identity_explicit[iname] = fmeta
-            # realign column ORDER for any identity-bearing batch —
-            # including BY DEFAULT batches that PROVIDE values
-            # (identity_explicit): those add no new columns, so a
-            # writer listing the same columns in a different order
-            # must get the positional realign here, not fall through
-            # to the schema comparison and a spurious
-            # SchemaMismatchError (identity_hwms is always empty at
-            # this point — explicit columns classify into
-            # identity_explicit now)
-            if (identity_pending or identity_explicit) and set(
-                df.columns
-            ) == {f.name for f in prior.schema}:
-                df = df.select(*[f.name for f in prior.schema])
+            # realign column ORDER for a batch carrying such columns —
+            # provided or injected — so a writer listing the table's
+            # columns in another order does not fall through to the
+            # schema comparison and a spurious SchemaMismatchError
+            if (fills or identities) and set(df.columns) == set(types):
+                df = df.select(*types)
         if prior is not None:
             if (
                 partition_by is not None
                 and list(partition_by) != prior.partition_columns
-                and not (overwrite_schema and mode == "overwrite")
+                and not replaces_schema
             ):
                 # real Delta rejects partition-layout changes outside
                 # overwrite+overwriteSchema: mixing hive layouts under
@@ -377,7 +338,7 @@ class _CommitMixin:
                         )
                         evolved_added_cols = bool(new_fields)
                         df = df.select(*[f.name for f in evolved_append])
-                elif not (overwrite_schema and mode == "overwrite"):
+                elif not replaces_schema:
                     raise SchemaMismatchError(
                         "write schema differs from table schema "
                         f"(table {prior.schema.simpleString()}, "
@@ -387,24 +348,26 @@ class _CommitMixin:
                         "mode='append' to add columns)"
                     )
         partition_by = partition_by or []
-        if prior is not None:
-            # CHECK constraints live in the configuration, which
-            # SURVIVES a schema evolution (the new metaData restates
-            # it below) — always enforced. Generation expressions live
-            # in the prior schema's column metadata, which an explicit
-            # evolution REPLACES — skipped exactly when the injection
-            # block above is.
-            self._enforce_constraints(df, prior.configuration)
-            if not (overwrite_schema and mode == "overwrite"):
-                self._enforce_generated(df, prior.schema)
-
-        adds = self._stage_for_schema(
-            df,
-            evolved_append
-            if evolved_append is not None
-            else (prior.schema if prior is not None else df.schema),
-            partition_by,
+        # the schema this commit leaves: evolved, kept (with its field
+        # metadata) or replaced by the frame's
+        if evolved_append is not None:
+            schema = evolved_append
+        elif prior is not None and not replaces_schema:
+            schema = prior.schema
+        else:
+            schema = df.schema
+        # CHECK constraints live in the configuration, which SURVIVES a
+        # schema evolution (the new metaData restates it below).
+        # Generation expressions live in the prior schema's field
+        # metadata, which an explicit evolution REPLACES — skipped
+        # exactly when the injection block above is.
+        invariants = [] if prior is None else self._invariants(
+            prior.configuration,
+            T.StructType() if replaces_schema else schema,
+            df.columns,
+            replace_where,
         )
+        adds = self._stage(df, schema, partition_by, invariants)
         for iname, fmeta in {**identity_pending, **identity_explicit}.items():
             # the staged files' own footer stats carry the extreme
             # assigned/provided value — the watermark advance costs
@@ -477,18 +440,11 @@ class _CommitMixin:
             or evolved_append is not None
             or partition_by != prior.partition_columns
         )
-        meta_schema = (
-            evolved_append if evolved_append is not None else df.schema
-        )
+        meta_schema = schema
         if identity_hwms:
             # the advanced watermark rides THIS commit's metaData —
             # atomically with the rows it covers, so a crash between
             # the two can never replay ids
-            src = (
-                evolved_append
-                if evolved_append is not None
-                else prior.schema
-            )
             meta_schema = T.StructType(
                 [
                     (
@@ -504,7 +460,7 @@ class _CommitMixin:
                         if f.name in identity_hwms
                         else f
                     )
-                    for f in src
+                    for f in schema
                 ]
             )
             new_meta = True
@@ -540,21 +496,18 @@ class _CommitMixin:
         }
         if replace_where is not None:
             parameters["replaceWhere"] = json.dumps(
-                {
-                    k: None if v is None else str(v)
-                    for k, v in replace_where.items()
-                },
-                sort_keys=True,
+                replace_where, sort_keys=True
             )
         reads = None  # a blind append reads (and removes) nothing
         if mode == "overwrite" and prior is not None:
             # an overwrite reads the replace_where partitions, else
             # every file, and removes exactly what it read
-            reads = (
-                _every_file
-                if replace_where is None
-                else self._in_partitions(replace_where)
-            )
+            scope = replace_where or {}
+
+            def reads(add: dict[str, Any]) -> bool:
+                values = add.get("partitionValues") or {}
+                return all(values.get(k) == v for k, v in scope.items())
+
             actions.extend(
                 _remove_action(add, now_ms)
                 for _, add in sorted(prior.files.items())
@@ -567,7 +520,61 @@ class _CommitMixin:
             "WRITE",
             parameters,
             reads=reads,
+            staged=[add["path"] for add in adds],
         )
+
+    _INVARIANT_MARK = "[minidelta.invariant {}] {}"
+
+    def _stage(
+        self,
+        df: DataFrame,
+        schema: T.StructType,
+        partition_by: list[str],
+        invariants: list[tuple[str, str, Column]] = (),
+        extra_cols: tuple[str, ...] = (),
+        max_records_per_file: int | None = None,
+    ) -> list[dict[str, Any]]:
+        """Stage ``df`` (logical names) as data files under ``schema``'s
+        PHYSICAL names, so renamed columns keep their on-disk identity;
+        every writer reaches storage here. Each of ``invariants``
+        (``_invariants``) rides the same projection as a ``raise_error``
+        on a written column — never a Filter, which the optimizer may
+        push below a join onto rows that are never written — so the
+        write job itself refuses a violating row, surfaced as
+        ConstraintViolationError. ``extra_cols`` pass through verbatim
+        (row tracking's materialized row ids). With nothing to rename,
+        check or add, ``df`` is written as it is."""
+        mapping = {f.name: self._phys(f) for f in schema}
+        if invariants or extra_cols or any(
+            k != v for k, v in mapping.items()
+        ):
+            # partition columns are guarded physical == logical
+            # (rename_column refuses them), so hive paths stay put
+            cols = [F.col(f.name) for f in schema]
+            at = next(
+                (i for i, f in enumerate(schema)
+                 if f.name not in partition_by),
+                0,
+            )
+            for name, description, ok in reversed(invariants):
+                marker = self._INVARIANT_MARK.format(name, description)
+                refuse = F.raise_error(F.lit(marker))
+                cols[at] = F.when(~ok, refuse).otherwise(cols[at])
+            df = df.select(
+                *[c.alias(mapping[f.name]) for c, f in zip(cols, schema)],
+                *extra_cols,
+            )
+        try:
+            return self._stage_data_files(
+                df, partition_by, max_records_per_file=max_records_per_file
+            )
+        except PySparkException as exc:
+            for name, description, _ in invariants:
+                if self._INVARIANT_MARK.format(name, description) in str(exc):
+                    raise ConstraintViolationError(
+                        f"write violates {description}"
+                    ) from exc
+            raise
 
     def _stage_data_files(
         self,
@@ -579,7 +586,8 @@ class _CommitMixin:
         temp dir, then move the part files into the table root
         (preserving hive partition subdirs) and return their ``add``
         payloads. Distributed write first, driver-side metadata move
-        second — the move touches one inode per FILE, never data."""
+        second — the move touches one inode per FILE, never data. The
+        temp dir goes whether the write succeeds or fails."""
         os.makedirs(self.path, exist_ok=True)
         tmp = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite").format("parquet")
@@ -587,9 +595,9 @@ class _CommitMixin:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(tmp)
         adds: list[dict[str, Any]] = []
         try:
+            writer.save(tmp)
             for root, _dirs, names in os.walk(tmp):
                 for name in names:
                     if name.startswith((".", "_")) or not name.endswith(
@@ -618,6 +626,16 @@ class _CommitMixin:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
         return adds
+
+    def _discard(self, staged: list[str]) -> None:
+        """Delete staged data files and ``_dv/`` sidecar dirs that no
+        commit references."""
+        for rel in staged:
+            path = os.path.join(self.path, rel)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            elif os.path.exists(path):
+                os.remove(path)
 
     def _predecessor(self, version: int) -> list[dict[str, Any]]:
         """The actions of commit ``version - 1``, which the commit-time
@@ -775,6 +793,7 @@ class _CommitMixin:
         parameters: dict[str, Any],
         isolation: str = "write_serializable",
         reads: Callable[[dict[str, Any]], bool] | None = None,
+        staged: list[str] = (),
     ) -> int:
         """Commit ``actions`` at ``snap.version + 1`` (version 0 when
         ``snap`` is None: a table-creating commit) behind a
@@ -814,7 +833,9 @@ class _CommitMixin:
         ``actions`` so the commit-time injectors (row-id assignment
         against the WINNER's high watermark, in-commit timestamps
         against the winner's clock chain) always compute against the
-        true predecessor."""
+        true predecessor. A rebase reuses the files and sidecars named
+        in ``staged``; a typed conflict deletes them, and nothing else
+        does (a commit may fail after its version is published)."""
         if isolation not in ("write_serializable", "serializable"):
             raise ValueError(
                 "isolation must be 'write_serializable' or "
@@ -842,89 +863,93 @@ class _CommitMixin:
         my_apps = {a["txn"]["appId"] for a in actions if "txn" in a}
         version = 0 if snap is None else snap.version + 1
         attempts = 0
-        while True:
-            try:
-                self._commit(version, copy.deepcopy(pristine))
-                return version
-            except ConcurrentWriteError:
-                attempts += 1
-                latest = max(self.versions(), default=-1)
-                if snap is None or latest < version:
-                    raise
-                read_any = isolation == "serializable" and any(
-                    map(reads, snap.files.values())
-                )
-                winners = (
-                    (w, a)
-                    for w in range(version, latest + 1)
-                    for a in self._read_actions(w)
-                )
-                for w, a in winners:
-                    won = a.get("protocol")
-                    # a protocol action that merely RESTATES the gates
-                    # this transaction already read is not a protocol
-                    # change — only an actual upgrade invalidates the
-                    # loser's snapshot (belt to _dv_commit_inner's
-                    # emit-only-on-upgrade braces: a foreign writer's
-                    # restate must not break the conflict matrix
-                    # either)
-                    if won and (
-                        int(won.get("minReaderVersion", 1)),
-                        int(won.get("minWriterVersion", 1)),
-                        frozenset(won.get("readerFeatures") or ()),
-                        frozenset(won.get("writerFeatures") or ()),
-                    ) != (
-                        snap.min_reader,
-                        snap.min_writer,
-                        snap.reader_features,
-                        snap.writer_features,
-                    ):
-                        raise ProtocolChangedError(
-                            f"{operation} lost to a protocol upgrade at "
-                            f"version {w}",
-                            winning_version=w,
-                        )
-                    if "metaData" in a:
-                        raise MetadataChangedError(
-                            f"{operation} lost to a metadata change at "
-                            f"version {w}",
-                            winning_version=w,
-                        )
-                    txn = a.get("txn")
-                    if txn and txn.get("appId") in my_apps:
-                        raise ConcurrentTransactionError(
-                            f"{operation} lost to a concurrent "
-                            f"transaction for app {txn['appId']!r} at "
-                            f"version {w}",
-                            winning_version=w,
-                        )
-                    rm = (a.get("remove") or {}).get("path")
-                    if rm in removed:
-                        raise ConcurrentDeleteDeleteError(
-                            f"{operation} and the version-{w} winner "
-                            f"both remove {rm!r}",
-                            winning_version=w,
-                        )
-                    if rm in snap.files and reads(snap.files[rm]):
-                        raise ConcurrentDeleteReadError(
-                            f"version-{w} winner removed {rm!r}, which "
-                            f"{operation} read",
-                            winning_version=w,
-                        )
-                    add = a.get("add")
-                    if (
-                        add
-                        and add.get("dataChange", True)
-                        and (read_any or reads(add))
-                    ):
-                        raise ConcurrentAppendError(
-                            f"version-{w} winner appended "
-                            f"{add['path']!r} into what {operation} read",
-                            winning_version=w,
-                        )
-                if attempts >= 50:
-                    raise
-                version = latest + 1
+        try:
+            while True:
+                try:
+                    self._commit(version, copy.deepcopy(pristine))
+                    return version
+                except ConcurrentWriteError:
+                    attempts += 1
+                    latest = max(self.versions(), default=-1)
+                    if snap is None or latest < version:
+                        raise
+                    read_any = isolation == "serializable" and any(
+                        map(reads, snap.files.values())
+                    )
+                    winners = (
+                        (w, a)
+                        for w in range(version, latest + 1)
+                        for a in self._read_actions(w)
+                    )
+                    for w, a in winners:
+                        won = a.get("protocol")
+                        # a protocol action that merely RESTATES the gates
+                        # this transaction already read is not a protocol
+                        # change — only an actual upgrade invalidates the
+                        # loser's snapshot (belt to _dv_commit_inner's
+                        # emit-only-on-upgrade braces: a foreign writer's
+                        # restate must not break the conflict matrix
+                        # either)
+                        if won and (
+                            int(won.get("minReaderVersion", 1)),
+                            int(won.get("minWriterVersion", 1)),
+                            frozenset(won.get("readerFeatures") or ()),
+                            frozenset(won.get("writerFeatures") or ()),
+                        ) != (
+                            snap.min_reader,
+                            snap.min_writer,
+                            snap.reader_features,
+                            snap.writer_features,
+                        ):
+                            raise ProtocolChangedError(
+                                f"{operation} lost to a protocol upgrade at "
+                                f"version {w}",
+                                winning_version=w,
+                            )
+                        if "metaData" in a:
+                            raise MetadataChangedError(
+                                f"{operation} lost to a metadata change at "
+                                f"version {w}",
+                                winning_version=w,
+                            )
+                        txn = a.get("txn")
+                        if txn and txn.get("appId") in my_apps:
+                            raise ConcurrentTransactionError(
+                                f"{operation} lost to a concurrent "
+                                f"transaction for app {txn['appId']!r} at "
+                                f"version {w}",
+                                winning_version=w,
+                            )
+                        rm = (a.get("remove") or {}).get("path")
+                        if rm in removed:
+                            raise ConcurrentDeleteDeleteError(
+                                f"{operation} and the version-{w} winner "
+                                f"both remove {rm!r}",
+                                winning_version=w,
+                            )
+                        if rm in snap.files and reads(snap.files[rm]):
+                            raise ConcurrentDeleteReadError(
+                                f"version-{w} winner removed {rm!r}, which "
+                                f"{operation} read",
+                                winning_version=w,
+                            )
+                        add = a.get("add")
+                        if (
+                            add
+                            and add.get("dataChange", True)
+                            and (read_any or reads(add))
+                        ):
+                            raise ConcurrentAppendError(
+                                f"version-{w} winner appended "
+                                f"{add['path']!r} into what {operation} read",
+                                winning_version=w,
+                            )
+                    if attempts >= 50:
+                        raise
+                    version = latest + 1
+        except ConcurrentWriteError:
+            self._discard(staged)
+            raise
 
     def _commit(self, version: int, actions: list[dict[str, Any]]) -> None:
         prev = self._predecessor(version)

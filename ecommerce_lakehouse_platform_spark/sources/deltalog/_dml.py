@@ -68,21 +68,18 @@ class _DmlMixin:
         replacement = rewrite(
             self._scan(snap, touched_rels, row_ids=tracking)
         )
-        # DML commits hold the same invariant as write(): no committed
-        # version contains a row violating a CHECK constraint or a
-        # generated column's expression. An UPDATE that breaks either
-        # fails HERE, before any file is staged. (Real Delta
-        # recomputes generated columns on UPDATE; this subset enforces
-        # instead — the caller assigns consistent values or the commit
-        # refuses loudly.)
-        self._enforce_constraints(replacement, snap.configuration)
-        self._enforce_generated(replacement, snap.schema)
         if tracking:
             replacement = replacement.withColumnRenamed("_row_id", mat)
-        adds = self._stage_for_schema(
+        # the same invariants as write(): an UPDATE breaking a CHECK
+        # or a generated column fails its write job. (Real Delta
+        # recomputes generated columns on UPDATE; this subset refuses.)
+        adds = self._stage(
             replacement,
             snap.schema,
             snap.partition_columns,
+            self._invariants(
+                snap.configuration, snap.schema, replacement.columns
+            ),
             extra_cols=(mat,) if tracking else (),
         )
         if tracking:
@@ -106,6 +103,7 @@ class _DmlMixin:
                 "prunedFiles": len(snap.files) - len(touched_rels),
             },
             isolation=isolation,
+            staged=[add["path"] for add in adds],
         )
 
     def delete(
@@ -209,6 +207,29 @@ class _DmlMixin:
         }
         if not touched and new_rows is None:
             return None
+        adds: list[dict[str, Any]] = []
+        if new_rows is not None:
+            # staged BEFORE the sidecar, so a write job refused by a
+            # CHECK constraint or generated column leaves nothing behind
+            adds = self._stage(
+                new_rows,
+                snap.schema,
+                snap.partition_columns,
+                self._invariants(
+                    snap.configuration, snap.schema, new_rows.columns
+                ),
+            )
+            # an empty replacement relation can still stage one
+            # zero-row file — delete it rather than commit a pointless
+            # add (and let a no-match UPDATE resolve to a no-op)
+            empty = [
+                a for a in adds
+                if json.loads(a.get("stats") or "{}").get("numRecords") == 0
+            ]
+            self._discard([a["path"] for a in empty])
+            adds = [a for a in adds if a not in empty]
+            if not adds and not touched:
+                return None
         now_ms = int(time.time() * 1000)
         parameters = {
             **parameters,
@@ -216,6 +237,9 @@ class _DmlMixin:
             "dvFiles": len(touched),
             "rewrittenFiles": 0,
         }
+        if new_rows is not None:
+            parameters["newFiles"] = len(adds)
+        staged = [add["path"] for add in adds]
         actions: list[dict[str, Any]] = []
         if touched:
             # DVs gate on reader 3 / writer 7 with the
@@ -240,6 +264,7 @@ class _DmlMixin:
                 )
             )
             dv_rel = f"_dv/{uuid.uuid4().hex}"
+            staged.append(dv_rel)
             # per-file position lists, the real protocol's
             # per-file-bitmap shape: hive-partitioned by the data file
             # each DV belongs to, so a DML touching F files writes F
@@ -271,32 +296,14 @@ class _DmlMixin:
                     "cardinality": int(cardinality[rel]),
                 }
                 actions.append({"add": add})
-        if new_rows is not None:
-            # same commit invariant as write()/_touched_rewrite: no
-            # committed version may violate a CHECK constraint or a
-            # generated column's expression
-            self._enforce_constraints(new_rows, snap.configuration)
-            self._enforce_generated(new_rows, snap.schema)
-            adds = self._stage_for_schema(
-                new_rows, snap.schema, snap.partition_columns
-            )
-            # an empty replacement relation can still stage one
-            # zero-row file — drop it rather than commit a pointless
-            # add (and let a no-match UPDATE resolve to a no-op)
-            adds = [
-                a
-                for a in adds
-                if not (
-                    a.get("stats")
-                    and json.loads(a["stats"]).get("numRecords") == 0
-                )
-            ]
-            if not adds and not touched:
-                return None
-            parameters["newFiles"] = len(adds)
-            actions.extend({"add": add} for add in adds)
+        actions.extend({"add": add} for add in adds)
         return self._commit_resolving(
-            snap, actions, operation, parameters, isolation=isolation
+            snap,
+            actions,
+            operation,
+            parameters,
+            isolation=isolation,
+            staged=staged,
         )
 
     def _delete_with_dv(
@@ -488,13 +495,16 @@ class _DmlMixin:
         )
         sub = self._scan(snap, touched_rels)
         merged_sub = merge_upsert(sub, source.select(*sub.columns), keys)
-        # the pruned path bypasses write(), so it enforces the same
-        # commit invariant itself: CHECK constraints and generated
+        # the pruned path bypasses write(), so it passes the same
+        # commit invariants itself: CHECK constraints and generated
         # columns hold on the replacement relation or nothing commits
-        self._enforce_constraints(merged_sub, snap.configuration)
-        self._enforce_generated(merged_sub, snap.schema)
-        adds = self._stage_for_schema(
-            merged_sub, snap.schema, snap.partition_columns
+        adds = self._stage(
+            merged_sub,
+            snap.schema,
+            snap.partition_columns,
+            self._invariants(
+                snap.configuration, snap.schema, merged_sub.columns
+            ),
         )
         now_ms = int(time.time() * 1000)
         actions: list[dict[str, Any]] = [
@@ -511,6 +521,7 @@ class _DmlMixin:
                 "rewrittenFiles": len(touched_rels),
             },
             isolation=isolation,
+            staged=[add["path"] for add in adds],
         )
 
     def _merge_with_dv(

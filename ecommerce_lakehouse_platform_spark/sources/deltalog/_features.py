@@ -20,6 +20,7 @@ from ._base import (
     ConstraintViolationError,
     SchemaMismatchError,
     Snapshot,
+    _all_match,
     _every_file,
     _metadata_action,
     _remove_action,
@@ -31,37 +32,40 @@ class _FeaturesMixin:
     # -- table operations on top of the log ------------------------------
 
     @staticmethod
-    def _enforce_constraints(
-        df: DataFrame, configuration: dict[str, str]
-    ) -> None:
-        """CHECK-constraint enforcement (write path): for each
-        ``delta.constraints.<name>`` table property, count rows whose
-        expression evaluates FALSE (NULL passes — SQL CHECK
-        semantics) and fail the write before any file is staged. One
-        aggregate per constrained write; the real engine fuses the
-        check into the write scan, but the contract — no committed
-        version ever contains a violating row — is the same."""
-        checks = {
-            k.removeprefix("delta.constraints."): v
-            for k, v in configuration.items()
-            if k.startswith("delta.constraints.")
-        }
-        if not checks:
-            return
-        counters = [
-            F.count_if(~F.coalesce(F.expr(sql), F.lit(True))).alias(name)
-            for name, sql in checks.items()
-        ]
-        bad = df.agg(*counters).collect()[0]
-        violated = {n: bad[n] for n in checks if bad[n]}
-        if violated:
-            detail = "; ".join(
-                f"{n} (CHECK {checks[n]}): {c} row(s)"
-                for n, c in sorted(violated.items())
+    def _invariants(
+        configuration: dict[str, str],
+        schema: T.StructType,
+        columns: list[str],
+        replace_where: dict[str, Any] | None = None,
+    ) -> list[tuple[str, str, Column]]:
+        """``(name, description, ok)`` for each invariant a frame with
+        ``columns`` must hold: every ``delta.constraints.<name>`` CHECK
+        (NULL passes — SQL semantics), every generated column of
+        ``schema`` in ``columns`` (null-safe equal to its expression)
+        and a ``replace_where`` filter of hive partition strings
+        (null-safe)."""
+        out = []
+        for key, sql in configuration.items():
+            if key.startswith("delta.constraints."):
+                name = key.removeprefix("delta.constraints.")
+                ok = F.coalesce(F.expr(sql), F.lit(True))
+                out.append((name, f"CHECK constraint {name} ({sql})", ok))
+        types = {f.name: f.dataType for f in schema}
+        for name, sql in _FeaturesMixin._generation_exprs(schema).items():
+            if name in columns:
+                ok = F.col(name).eqNullSafe(F.expr(sql).cast(types[name]))
+                what = f"generated column {name} (GENERATED AS {sql})"
+                out.append((name, what, ok))
+        if replace_where is not None:
+            ok = _all_match(
+                [
+                    F.col(k).cast("string").eqNullSafe(F.lit(v))
+                    for k, v in replace_where.items()
+                ]
             )
-            raise ConstraintViolationError(
-                f"write violates CHECK constraint(s): {detail}"
-            )
+            what = f"replace_where {replace_where} (a row outside it)"
+            out.append(("replace_where", what, ok))
+        return out
 
     @staticmethod
     def _generation_exprs(schema: T.StructType) -> dict[str, str]:
@@ -74,34 +78,6 @@ class _FeaturesMixin:
             if expr:
                 out[f.name] = expr
         return out
-
-    @staticmethod
-    def _enforce_generated(df: DataFrame, schema: T.StructType) -> None:
-        """Generated-column enforcement (write path): provided values
-        must equal the generation expression (null-safe compare) —
-        one aggregate for all generated columns; violations fail the
-        write before anything is staged."""
-        gen = _FeaturesMixin._generation_exprs(schema)
-        gen = {n: e for n, e in gen.items() if n in df.columns}
-        if not gen:
-            return
-        types = {f.name: f.dataType for f in schema}
-        counters = [
-            F.count_if(
-                ~F.col(n).eqNullSafe(F.expr(e).cast(types[n]))
-            ).alias(n)
-            for n, e in gen.items()
-        ]
-        bad = df.agg(*counters).collect()[0]
-        violated = {n: bad[n] for n in gen if bad[n]}
-        if violated:
-            detail = "; ".join(
-                f"{n} (GENERATED AS {gen[n]}): {c} row(s)"
-                for n, c in sorted(violated.items())
-            )
-            raise ConstraintViolationError(
-                f"write violates generated column(s): {detail}"
-            )
 
     def set_generated_column(self, name: str, sql: str) -> int:
         """Declare ``name`` a GENERATED column: its value is always
@@ -117,20 +93,6 @@ class _FeaturesMixin:
             raise SchemaMismatchError(
                 f"generated column {name!r} is not in the table schema"
             )
-        mismatches = (
-            self.read()
-            .filter(
-                ~F.col(name).eqNullSafe(F.expr(sql).cast(
-                    {f.name: f.dataType for f in snap.schema}[name]
-                ))
-            )
-            .count()
-        )
-        if mismatches:
-            raise ConstraintViolationError(
-                f"cannot declare {name!r} generated as {sql!r}: "
-                f"{mismatches} existing row(s) disagree"
-            )
         fields = []
         for f in snap.schema:
             if f.name == name:
@@ -141,6 +103,8 @@ class _FeaturesMixin:
                 )
             else:
                 fields.append(f)
+        [check] = self._invariants({}, T.StructType(fields), [name])
+        self._refuse_existing(check, f"declare {name!r} generated as {sql!r}")
         return self._commit_schema(
             snap,
             T.StructType(fields),
@@ -148,6 +112,16 @@ class _FeaturesMixin:
             "SET GENERATED COLUMN",
             {"name": name, "expr": sql},
         )
+
+    def _refuse_existing(self, invariant, what: str) -> None:
+        """Refuse ``what`` when current rows break ``invariant`` — one
+        counting job, as a metadata command stages no rows."""
+        bad = self.read().filter(~invariant[2]).count()
+        if bad:
+            raise ConstraintViolationError(
+                f"cannot {what}: {bad} existing row(s) violate "
+                f"{invariant[1]}"
+            )
 
     @staticmethod
     def _default_exprs(schema: T.StructType) -> dict[str, str]:
@@ -809,11 +783,11 @@ class _FeaturesMixin:
         action with ``delta.constraints.<name>`` set. Every later
         write enforces it."""
         snap = self.snapshot()
-        self._enforce_constraints(
-            self.read(), {f"delta.constraints.{name}": sql}
-        )
+        key = f"delta.constraints.{name}"
+        [check] = self._invariants({key: sql}, snap.schema, [])
+        self._refuse_existing(check, f"add CHECK constraint {name!r}")
         config = dict(snap.configuration)
-        config[f"delta.constraints.{name}"] = sql
+        config[key] = sql
         return self._commit_configuration(
             snap, config, "ADD CONSTRAINT", {"name": name, "expr": sql}
         )
@@ -1049,29 +1023,6 @@ class _FeaturesMixin:
             if f.name == column:
                 return self._phys(f)
         return column
-
-    def _stage_for_schema(
-        self, df: DataFrame, schema: T.StructType, partition_by: list[str],
-        extra_cols: tuple[str, ...] = (),
-        **kw,
-    ) -> list[dict[str, Any]]:
-        """Stage ``df`` (logical column names) as data files under the
-        schema's PHYSICAL names — every write path goes through this
-        so renamed columns keep their stable on-disk identity.
-        Partition columns are guarded physical == logical
-        (rename_column refuses them), so hive paths stay consistent.
-        ``extra_cols`` are passed through verbatim (hidden physical
-        columns, e.g. row tracking's materialized row ids)."""
-        mapping = {f.name: self._phys(f) for f in schema}
-        if any(k != v for k, v in mapping.items()) or extra_cols:
-            df = df.select(
-                *[
-                    F.col(f.name).alias(mapping[f.name])
-                    for f in schema
-                ],
-                *extra_cols,
-            )
-        return self._stage_data_files(df, partition_by, **kw)
 
     def _mapping_enabled(self, snap: Snapshot) -> bool:
         return snap.configuration.get("delta.columnMapping.mode") == "name"

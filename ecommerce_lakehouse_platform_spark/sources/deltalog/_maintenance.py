@@ -422,7 +422,7 @@ class _MaintenanceMixin:
         # writer-level record cap enforces the size target regardless
         # of task boundaries
         avg_row = max(1, total // max(1, nrows))
-        adds = self._stage_for_schema(
+        adds = self._stage(
             df,
             snap.schema,
             snap.partition_columns,
@@ -445,7 +445,13 @@ class _MaintenanceMixin:
         ]
         for add in adds:
             actions.append({"add": {**add, "dataChange": False}})
-        return self._commit_resolving(snap, actions, operation, parameters)
+        return self._commit_resolving(
+            snap,
+            actions,
+            operation,
+            parameters,
+            staged=[add["path"] for add in adds],
+        )
 
     def _zorder_layout(
         self,

@@ -27,6 +27,7 @@ from ecommerce_lakehouse_platform_spark.sources.deltalog import (
     ConcurrentDeleteDeleteError,
     ConcurrentDeleteReadError,
     ConcurrentTransactionError,
+    ConstraintViolationError,
     MetadataChangedError,
     MiniDeltaTable,
 )
@@ -385,6 +386,101 @@ def test_vacuum_with_retention_spares_a_staged_commit(spark, base, writer):
     assert t.read().count() == expected
 
 
+def _unlogged(t):
+    """Data files and ``_dv/`` sidecars under the table root that no
+    logged version adds, plus any leftover staging dir."""
+    logged = set()
+    for v in t.versions():
+        for a in t._read_actions(v):
+            add = a.get("add") or {}
+            logged.add(add.get("path"))
+            logged.add((add.get("deletionVector") or {}).get("storagePath"))
+    found = set()
+    for root, dirs, names in os.walk(t.path):
+        dirs[:] = [d for d in dirs if d != "_delta_log"]
+        rel = os.path.relpath(root, t.path)
+        if ".staging-" in rel:
+            found.add(rel)
+        for name in names:
+            if name.endswith(".parquet"):
+                path = os.path.normpath(os.path.join(rel, name))
+                if path.startswith("_dv/"):
+                    path = "/".join(path.split("/")[:2])  # the sidecar
+                found.add(path)
+    return found - logged
+
+
+@pytest.mark.parametrize("failure", ["task_error", "check"])
+def test_failed_write_leaves_no_staging_dir(spark, base, failure):
+    """A write whose job fails inside a task leaves no staging dir and
+    no file in the table root: a refused CHECK surfaces as
+    ConstraintViolationError, any other task error unchanged."""
+    t = _two_file_table(spark, base)
+    if failure == "check":
+        t.set_constraint("vpos", "v >= 0")
+        bad_v = F.lit(-1).cast("long")
+    else:
+        bad_v = F.when(
+            F.col("k") == "51", F.raise_error(F.lit("boom"))
+        ).otherwise(F.col("v"))
+    with pytest.raises(Exception) as exc:
+        t.write(
+            _df(spark, 50, 52).withColumn("v", bad_v).coalesce(1),
+            mode="append",
+        )
+    if failure == "check":
+        assert isinstance(exc.value, ConstraintViolationError)
+        assert "vpos" in str(exc.value)
+    else:
+        assert not isinstance(exc.value, ConstraintViolationError)
+        assert "boom" in str(exc.value)
+    assert t.snapshot().version == (2 if failure == "check" else 1)
+    assert _unlogged(t) == set()
+
+
+@pytest.mark.parametrize("writer", ["append", "dv_update"])
+def test_conflict_loser_deletes_what_it_staged(spark, base, writer):
+    """A writer that loses with a typed conflict deletes the data
+    files (and the deletion-vector sidecar) it staged for the commit
+    it could not make; the winner's commit is untouched."""
+    t = _two_file_table(spark, base)
+    rival = MiniDeltaTable(spark, t.path)
+    if writer == "append":
+        _race(t, lambda: rival.write(
+            _df(spark, 0, 5).withColumn("flag", F.lit(True)),
+            overwrite_schema=True,
+        ))
+        with pytest.raises(MetadataChangedError):
+            t.write(_df(spark, 100, 105).coalesce(2), mode="append")
+        expected = 5
+    else:
+        _race(t, lambda: rival.delete(F.col("k") == "3"))
+        with pytest.raises(ConcurrentDeleteDeleteError):
+            t.update(F.col("k") == "4", {"v": F.lit(9)}, use_dv=True)
+        expected = 39
+    assert t.snapshot().version == 2  # only the rival's commit landed
+    assert _unlogged(t) == set()
+    assert t.read().count() == expected
+
+
+@pytest.mark.parametrize("case", ["refused", "no_match"])
+def test_dv_update_that_commits_nothing_leaves_nothing(spark, base, case):
+    """A DV UPDATE that commits nothing leaves nothing under the root:
+    one refused by a CHECK constraint stages its new rows before it
+    writes the deletion-vector sidecar, and one that matches no row
+    deletes the zero-row file its empty replacement staged."""
+    t = _two_file_table(spark, base)
+    t.set_constraint("vpos", "v >= 0")
+    if case == "refused":
+        with pytest.raises(ConstraintViolationError):
+            t.update(F.col("k") == "4", {"v": F.lit(-9)}, use_dv=True)
+    else:
+        assert t.update(F.col("k") == "x", {"v": F.lit(9)}, use_dv=True) is None
+    assert t.snapshot().version == 2
+    assert not os.path.exists(os.path.join(t.path, "_dv"))
+    assert _unlogged(t) == set()
+
+
 def test_one_commit_path():
     """Every commit goes through the conflict resolver: the raw
     put-if-absent ``_commit`` is called only inside
@@ -434,6 +530,58 @@ def test_one_commit_path():
     for path in sorted(root.rglob("*.py")):
         Scan(path.relative_to(root)).visit(ast.parse(path.read_text()))
     assert resolver_calls == 1
+    assert not stray, stray
+
+
+def test_one_write_stage():
+    """Every writer stages through ``_stage``, which checks the table's
+    invariants inside the write job: ``_stage_data_files`` is called
+    and ``raise_error`` is named only inside ``_stage``, and no
+    separate ``_enforce_*`` check job remains. Pure AST scan of the
+    package source."""
+    stray: list[str] = []
+    stage_calls = 0
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, where, deltalog):
+            self.where, self.deltalog, self.funcs = where, deltalog, []
+
+        def visit_FunctionDef(self, node):
+            if node.name.startswith("_enforce_"):
+                stray.append(f"{self.where}:{node.lineno} {node.name}")
+            self.funcs.append(node.name)
+            self.generic_visit(node)
+            self.funcs.pop()
+
+        def visit_Attribute(self, node):
+            self.named(node, node.attr)
+
+        def visit_Name(self, node):
+            self.named(node, node.id)
+
+        def named(self, node, name):
+            nonlocal stage_calls
+            inside = "_stage" in self.funcs
+            if name == "_stage_data_files" and isinstance(
+                node.ctx, ast.Load
+            ):
+                if inside:
+                    stage_calls += 1
+                else:
+                    stray.append(f"{self.where}:{node.lineno} {name}")
+            if (
+                name.startswith("_enforce_")
+                or (name == "raise_error" and self.deltalog and not inside)
+            ):
+                stray.append(f"{self.where}:{node.lineno} {name}")
+            self.generic_visit(node)
+
+    root = pathlib.Path(ecommerce_lakehouse_platform_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        deltalog = rel.parts[:2] == ("sources", "deltalog")
+        Scan(rel, deltalog).visit(ast.parse(path.read_text()))
+    assert stage_calls == 1
     assert not stray, stray
 
 

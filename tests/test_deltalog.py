@@ -1118,6 +1118,22 @@ def test_check_constraints_enforced_on_write(spark, tmp_table):
         orders.schema["total_usd"].dataType))
     tmp_table.write(nulls, mode="append")
     assert tmp_table.read().count() == 21
+    # the check sits on the written projection, not a Filter the
+    # optimizer could push below a join: violating rows of the join's
+    # left side that find no match are never written, so never refused
+    ids = sorted(r["order_id"] for r in orders.collect())
+    left = orders.withColumn(
+        "total_usd",
+        F.when(
+            F.col("order_id") == ids[0], F.lit(-5.0).cast(
+                orders.schema["total_usd"].dataType)
+        ).otherwise(F.col("total_usd")),
+    )
+    right = orders.select("order_id").filter(F.col("order_id") != ids[0])
+    tmp_table.write(
+        left.join(right, "order_id").select(*orders.columns), mode="append"
+    )
+    assert tmp_table.read().count() == 40
     # the property survives a schema evolution...
     evolved = tmp_table.read().withColumn("flag", F.lit(True))
     tmp_table.write(evolved, overwrite_schema=True)
@@ -1470,12 +1486,24 @@ def test_replace_where_partition_scoped_overwrite(spark, tmp_table):
         (F.col("_change_type") == "delete") & (F.col("order_month") != m0)
     ).count() == 0
 
-    # stray rows (outside the replaced partition) are rejected
+    # stray rows (outside the replaced partition) are rejected inside
+    # the write job: no new version, no new file under the root
+    on_disk = sorted(
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(tmp_table.path)
+        for n in names
+    )
     with pytest.raises(ConstraintViolationError):
         tmp_table.write(
             orders.filter(F.col("order_month") == m1),
             replace_where={"order_month": m0},
         )
+    assert tmp_table.versions() == [0, 1]
+    assert on_disk == sorted(
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(tmp_table.path)
+        for n in names
+    )
     # non-partition keys are rejected
     with pytest.raises(SchemaMismatchError):
         tmp_table.write(patch, replace_where={"status": "BACKFILLED"})
@@ -1573,6 +1601,14 @@ def test_dml_enforces_constraints_and_generated(spark, tmp_table):
     with pytest.raises(ConstraintViolationError):
         tmp_table.merge(bad_source, ["order_id"], prune_files=True)
     assert _canon(tmp_table.read()) == before
+    # a NULL passes the CHECK (SQL semantics) on the DML path as well
+    tmp_table.update(
+        F.col("order_id") == ids[1],
+        {"total_usd": F.lit(None)},
+        use_dv=True,
+    )
+    nulled = tmp_table.read().filter(F.col("order_id") == ids[1]).first()
+    assert nulled["total_usd"] is None
 
     # generated column: an UPDATE breaking the expression refuses
     tmp_table.drop_constraint("nonneg")
@@ -3563,6 +3599,56 @@ def _jobs_while(spark, build):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_invariants_run_inside_the_write_job(spark, tmp_table):
+    """A table with one CHECK constraint and one generated column runs
+    as many Spark jobs per append, pruned MERGE, copy-on-write UPDATE
+    and DV UPDATE as the same table without them, and ends with the
+    same rows; a replace_where overwrite runs no more jobs than a
+    plain overwrite. Every check rides the write job."""
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            "id", (F.col("id") * 2).alias("v"), (F.col("id") * 3).alias("g")
+        )
+
+    jobs, rows = {}, {}
+    for constrained in (False, True):
+        t = MiniDeltaTable(
+            spark, f"{tmp_table.path}_{int(constrained)}", checkpoint_interval=0
+        )
+        t.write(frame(0, 40).repartition(4))
+        if constrained:
+            t.set_constraint("vpos", "v >= 0")
+            t.set_generated_column("g", "id * 3")
+        src = frame(5, 8).withColumn("v", F.col("v") + 1)
+        jobs[constrained] = [
+            len(_jobs_while(spark, build))
+            for build in (
+                lambda: t.write(frame(40, 50), mode="append"),
+                lambda: t.merge(src, ["id"], prune_files=True),
+                lambda: t.update(F.col("id") == 3, {"v": F.lit(7)}),
+                lambda: t.update(
+                    F.col("id") == 4, {"v": F.lit(9)}, use_dv=True
+                ),
+            )
+        ]
+        rows[constrained] = _canon(t.read())
+        shutil.rmtree(t.path, ignore_errors=True)
+    assert jobs[True] == jobs[False]
+    assert rows[True] == rows[False]
+
+    part = frame(0, 40).withColumn("p", (F.col("id") % 2).cast("int"))
+    tmp_table.write(part, partition_by=["p"])
+    plain = _jobs_while(spark, lambda: tmp_table.write(part))
+    scoped = _jobs_while(
+        spark,
+        lambda: tmp_table.write(
+            part.filter("p = 0"), replace_where={"p": 0}
+        ),
+    )
+    assert len(scoped) <= len(plain)
 
 
 def test_read_and_changes_build_without_jobs(spark, tmp_table):
