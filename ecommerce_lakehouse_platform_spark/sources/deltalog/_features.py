@@ -113,7 +113,9 @@ class _FeaturesMixin:
             {"name": name, "expr": sql},
         )
 
-    def _refuse_existing(self, invariant, what: str) -> None:
+    def _refuse_existing(
+        self, invariant: tuple[str, str, Column], what: str
+    ) -> None:
         """Refuse ``what`` when current rows break ``invariant`` — one
         counting job, as a metadata command stages no rows."""
         bad = self.read().filter(~invariant[2]).count()
